@@ -5,7 +5,11 @@
 
 A user of the reference drives the same six pipelines here, with
 Parquet snapshots standing in for the Oracle schema (S6/S7) and plain
-parquet files for the auxiliary tables the reference reads over JDBC:
+parquet files for the auxiliary tables the reference reads over JDBC.
+Each mode collects its (counter, value) rows once, from the jobs that
+materialize its data (the load scans the release XML once), then writes
+and prints those rows; --nightly merges the rows the phases return
+instead of re-reading their counter files:
 
     python -m clinvar_pipeline_spark --load \
         --xml release.xml --genes genes.parquet \
@@ -103,7 +107,7 @@ import argparse
 import sys
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -111,7 +115,23 @@ def _aux(spark: SparkSession, aux_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{aux_dir}/{name}.parquet")
 
 
-def cmd_load(spark: SparkSession, args) -> None:
+def _land_counters(
+    spark: SparkSession, counters: DataFrame, path: str | None
+) -> list[Row]:
+    """Collect a (counter, value) frame ONCE, write the collected rows
+    to ``path`` (when given) and print them; returns the rows. Writing
+    and printing the frame itself would compute it twice."""
+    from clinvar_pipeline_spark.session import rows_frame
+
+    rows = counters.collect()
+    if path:
+        rows_frame(spark, rows, counters.schema).write.mode("overwrite").parquet(path)
+    for r in rows:
+        print(f"{r['counter']}: {r['value']}")
+    return rows
+
+
+def cmd_load(spark: SparkSession, args) -> list[Row]:
     from clinvar_pipeline_spark.plans.load import (
         empty_snapshot,
         load_run,
@@ -127,13 +147,11 @@ def cmd_load(spark: SparkSession, args) -> None:
     genes = spark.read.parquet(args.genes)
     res = load_run(archive, prev, genes)
     write_snapshot(res.snapshot, args.out)
-    res.counters.write.mode("overwrite").parquet(f"{args.out}/counters")
     res.variant_diff.write.mode("overwrite").parquet(f"{args.out}/variant_diff")
-    for r in res.counters.collect():
-        print(f"{r['counter']}: {r['value']}")
+    return _land_counters(spark, res.counters, f"{args.out}/counters")
 
 
-def cmd_annotate(spark: SparkSession, args) -> None:
+def cmd_annotate(spark: SparkSession, args) -> list[Row]:
     from clinvar_pipeline_spark.plans.annotate import annotate_run
     from clinvar_pipeline_spark.plans.load import read_snapshot
 
@@ -152,9 +170,7 @@ def cmd_annotate(spark: SparkSession, args) -> None:
     res.annotations.write.mode("overwrite").parquet(f"{args.out}/annotations")
     res.annot_diff.write.mode("overwrite").parquet(f"{args.out}/annot_diff")
     res.unmatchable.write.mode("overwrite").parquet(f"{args.out}/unmatchable")
-    res.counters.write.mode("overwrite").parquet(f"{args.out}/counters")
-    for r in res.counters.collect():
-        print(f"{r['counter']}: {r['value']}")
+    return _land_counters(spark, res.counters, f"{args.out}/counters")
 
 
 def cmd_nightly(spark: SparkSession, args) -> None:
@@ -193,54 +209,43 @@ def cmd_nightly(spark: SparkSession, args) -> None:
     # per-phase wall to stdout: the cron log line each stage of the
     # composed run gets (parsed by tools/chain_probe.py)
     t0 = time.time()
-    cmd_load(spark, args)
+    phase_counters = {"load": cmd_load(spark, args)}
     print(f"nightly-phase load: [{time.time() - t0:.1f}s]")
     annot_args = _ap.Namespace(**vars(args))
     annot_args.snapshot = args.out
     annot_args.out = f"{args.out}/annotate"
     t0 = time.time()
-    cmd_annotate(spark, annot_args)
+    phase_counters["annotate"] = cmd_annotate(spark, annot_args)
     print(f"nightly-phase annotate: [{time.time() - t0:.1f}s]")
-    load_c = spark.read.parquet(f"{args.out}/counters")
-    annot_c = spark.read.parquet(f"{args.out}/annotate/counters")
-    merged = load_c.select(
-        F.lit("load").alias("phase"), "counter", "value"
-    ).unionByName(
-        annot_c.select(F.lit("annotate").alias("phase"), "counter", "value")
-    )
     vcf_snapshot = args.out
     if args.with_rs_ids:
         rs_args = _ap.Namespace(**vars(args))
         rs_args.snapshot = args.out
         rs_args.out = f"{args.out}/with_rs"
         t0 = time.time()
-        cmd_add_rs_ids(spark, rs_args)
+        n_rs = cmd_add_rs_ids(spark, rs_args)
         print(f"nightly-phase rs: [{time.time() - t0:.1f}s]")
         vcf_snapshot = rs_args.out
-        rs_c = (
-            spark.read.parquet(f"{rs_args.out}/variants")
-            .filter(F.col("rs_id").isNotNull())
-            .agg(F.count(F.lit(1)).cast("long").alias("value"))
-            .select(
-                F.lit("rs").alias("phase"),
-                F.lit("VARIANTS_WITH_RS_ID").alias("counter"),
-                "value",
-            )
-        )
-        merged = merged.unionByName(rs_c)
+        phase_counters["rs"] = [("VARIANTS_WITH_RS_ID", n_rs)]
     if args.with_vcf:
         vcf_args = _ap.Namespace(**vars(args))
         vcf_args.snapshot = vcf_snapshot
         vcf_args.out = f"{args.out}/export.vcf"
         vcf_args.counters_out = f"{args.out}/vcf_counters"
         t0 = time.time()
-        cmd_clinvar2vcf(spark, vcf_args)
+        phase_counters["vcf"] = cmd_clinvar2vcf(spark, vcf_args)
         print(f"nightly-phase vcf: [{time.time() - t0:.1f}s]")
-        vcf_c = spark.read.parquet(f"{args.out}/vcf_counters").select(
-            F.lit("vcf").alias("phase"), "counter", "value"
-        )
-        merged = merged.unionByName(vcf_c)
-    merged.write.mode("overwrite").parquet(f"{args.out}/run_counters")
+    from clinvar_pipeline_spark.session import rows_frame
+
+    rows_frame(
+        spark,
+        [
+            (phase, counter, value)
+            for phase, rows in phase_counters.items()
+            for counter, value in rows
+        ],
+        "phase string, counter string, value long",
+    ).write.mode("overwrite").parquet(f"{args.out}/run_counters")
 
 
 def cmd_dry_run(spark: SparkSession, args) -> None:
@@ -265,6 +270,7 @@ def cmd_dry_run(spark: SparkSession, args) -> None:
       exist because, as in DryRun, nothing is loaded.
     Both also print, mirroring the emailed-report shape."""
     from clinvar_pipeline_spark.plans.load import (
+        archive_counter_columns,
         build_incoming_map_positions,
         build_incoming_variants,
         build_incoming_xdb_ids,
@@ -334,13 +340,12 @@ def cmd_dry_run(spark: SparkSession, args) -> None:
     )
 
     # parse-time counters: the record_kind split (F1/F2 skips), the
-    # species/status canaries, and the unknown-xref-db canaries —
-    # DryRun's GlobalCounters + "unknown ..." stdout-marker sections
-    # (the reference tallies Parser's 'unknown xdb' prints; here the
-    # dispatch switch counts them as rows)
-    kind_c = archive.groupBy(
-        F.concat(F.lit("RECORDS_"), F.upper("record_kind")).alias("counter")
-    ).agg(F.count(F.lit(1)).alias("value"))
+    # species/status canaries (the load's counters, absent when zero),
+    # and the unknown-xref-db canaries — DryRun's GlobalCounters +
+    # "unknown ..." stdout-marker sections (the reference tallies
+    # Parser's 'unknown xdb' prints; here the dispatch switch counts
+    # them as rows)
+    archive_c = archive.agg(*archive_counter_columns()).first().asDict()
     unknown_c = _unknown.select(
         F.concat(
             F.lit("UNKNOWN_XREF_DB_"),
@@ -348,24 +353,13 @@ def cmd_dry_run(spark: SparkSession, args) -> None:
         ).alias("counter"),
         F.col("n").cast("long").alias("value"),
     )
-    kind_c = kind_c.unionByName(unknown_c)
-    canary_c = archive.select(
-        F.explode(
-            F.array_compact(
-                F.array(
-                    F.when(
-                        F.coalesce("record_status", F.lit("")) != "current",
-                        "NON_CURRENT_RECORD",
-                    ),
-                    F.when(
-                        F.coalesce("species", F.lit("")) != "Homo sapiens",
-                        "NON_HUMAN_SPECIES",
-                    ),
-                )
-            )
-        ).alias("counter")
-    ).groupBy("counter").agg(F.count(F.lit(1)).alias("value"))
-    counters = kind_c.unionByName(canary_c)
+    from clinvar_pipeline_spark.session import rows_frame
+
+    counters = rows_frame(
+        spark,
+        [(name, value) for name, value in archive_c.items() if value],
+        "counter string, value long",
+    ).unionByName(unknown_c)
 
     coverage.write.mode("overwrite").parquet(f"{args.out}/coverage")
     counters.write.mode("overwrite").parquet(f"{args.out}/counters")
@@ -381,7 +375,7 @@ def cmd_dry_run(spark: SparkSession, args) -> None:
         print(f"{r['counter']}: {r['value']}")
 
 
-def cmd_add_rs_ids(spark: SparkSession, args) -> None:
+def cmd_add_rs_ids(spark: SparkSession, args) -> int:
     """--addRsIds (Manager.java -> VariantRsId.run): by default rs ids
     come from the snapshot's own xdb_ids (xdb_key 48, link_text
     starting 'rs'), the reference pipeline's source. Passing --dbsnp
@@ -413,9 +407,10 @@ def cmd_add_rs_ids(spark: SparkSession, args) -> None:
     )
     n = updated.filter(F.col("rs_id").isNotNull()).count()
     print(f"variants_with_rs_id: {n}")
+    return n
 
 
-def cmd_clinvar2vcf(spark: SparkSession, args) -> None:
+def cmd_clinvar2vcf(spark: SparkSession, args) -> list[Row]:
     from clinvar_pipeline_spark.caching import release_cached
     from clinvar_pipeline_spark.plans.load import read_snapshot
     from clinvar_pipeline_spark.plans.vcf import clinvar2vcf_export
@@ -441,13 +436,11 @@ def cmd_clinvar2vcf(spark: SparkSession, args) -> None:
     shutil.move(part, args.out)
     shutil.rmtree(out_dir)
     print(f"wrote {args.out} ({os.path.getsize(args.out)} bytes)")
-    if getattr(args, "counters_out", None):
-        # chained caller (--nightly --with-vcf) merges these into the
-        # cross-phase run_counters frame
-        counters.write.mode("overwrite").parquet(args.counters_out)
-    for r in counters.collect():
-        print(f"{r['counter']}: {r['value']}")
+    # a chained caller (--nightly --with-vcf) also lands the rows at
+    # counters_out and merges them into the cross-phase run_counters
+    rows = _land_counters(spark, counters, getattr(args, "counters_out", None))
     release_cached()
+    return rows
 
 
 def cmd_qc_duplicate_terms(

@@ -8,9 +8,10 @@ annotations) — a mass-delete circuit breaker. Snapshot-functionally:
     decide  = count(stale) / count(existing) > threshold   (driver scalar)
     result  = existing if aborted else existing MINUS stale
 
-The two counts are tiny driver scalars (Spark aggregations, not
-collects of data); the branch is driver logic, exactly like the
-reference's — that part is inherently control-flow.
+Both counts come from one aggregation over ``existing`` UNION ALL
+``stale`` (one action, a single driver row, not a collect of data);
+the branch is driver logic, exactly like the reference's — that part
+is inherently control-flow.
 """
 
 from __future__ import annotations
@@ -50,9 +51,20 @@ def guarded_stale_delete(
         eq = F.col(c).eqNullSafe(F.col(f"_t_{c}"))
         cond = eq if cond is None else cond & eq
     stale = existing.join(t, on=cond, how="left_anti")
-    counts = existing.agg(F.count(F.lit(1)).alias("total")).collect()[0]
-    total = counts["total"]
-    stale_count = stale.count()
+    # one aggregation, one action: each existing row counts toward the
+    # total and each stale row toward the stale count. (A left join
+    # flagging touched keys counts the same, but invites Catalyst's
+    # runtime bloom filter on the touched side: an extra job per guard.)
+    counts = (
+        existing.select(F.lit(False).alias("_stale"))
+        .unionByName(stale.select(F.lit(True).alias("_stale")))
+        .agg(
+            F.count_if(~F.col("_stale")).alias("total"),
+            F.count_if(F.col("_stale")).alias("stale"),
+        )
+        .first()
+    )
+    total, stale_count = counts["total"], counts["stale"]
     aborted = total > 0 and stale_count > threshold * total
     if aborted:
         kept = existing

@@ -8,11 +8,13 @@ reference's per-record QC->Loader mutation loop becomes set-oriented
 classification — every Oracle round-trip is a join, every satellite
 sync is one generic diff_sync, the three global collection passes are
 groupBys, and the guarded stale-delete is an anti-join with a
-driver-side threshold branch.
+driver-side threshold branch. Counters fall out of the jobs that
+materialize the data (Observation metrics on the one XML scan, one
+groupBy over the checkpointed diffs), not out of extra passes.
 
 Stage map (reference -> here):
 - Parser.parse           -> sources/vcv_xml.read_vcv_xml (S5)
-- record skips F1/F2     -> record_kind filter + counters
+- record skips F1/F2     -> record_kind filter + observed counters
 - QC.getVariantByRCVandName (J1, Dao.java:80-127)
                          -> cascade_lookup (RCV -> symbol -> name)
 - QC field merges M3-M5  -> merge_pipe_sets_ci / ranked_clinsig_merge /
@@ -37,8 +39,9 @@ rgd_id.
 from __future__ import annotations
 
 from dataclasses import dataclass, fields
+from functools import reduce
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from clinvar_pipeline_spark.config import (
@@ -76,6 +79,8 @@ from clinvar_pipeline_spark.operators.diff_sync import (
     diff_sync,
 )
 from clinvar_pipeline_spark.operators.guarded_delete import guarded_stale_delete
+from clinvar_pipeline_spark.session import rows_frame
+from clinvar_pipeline_spark.sources.vcv_xml import RECORD_KINDS
 
 VARIANTS_SCHEMA = (
     "rgd_id long, symbol string, name string, object_type string,"
@@ -182,10 +187,16 @@ def read_snapshot_bucketed(spark: SparkSession, prefix: str) -> Snapshot:
 @dataclass
 class LoadResult:
     snapshot: Snapshot
-    variant_diff: DataFrame
+    # counter prefix -> materialized diff_sync result: VARIANTS, XDB_IDS,
+    # GENE_ASSOCIATIONS, MAP_POSITIONS, HGVS_NAMES, ALIASES
+    diffs: dict[str, DataFrame]
     counters: DataFrame  # (counter, value)
     unknown_xref_dbs: DataFrame  # (db, n) — the reference's canary counters
     stale_xdb: object  # GuardedDeleteResult
+
+    @property
+    def variant_diff(self) -> DataFrame:
+        return self.diffs["VARIANTS"]
 
 
 # ---------------------------------------------------------------------------
@@ -782,6 +793,52 @@ def collection_value(
 # The run
 # ---------------------------------------------------------------------------
 
+ENTRY_CLASSES = (
+    "CLINVAR_ENTRY_CLINICAL_SIGNIFICANCE_NOT_PROVIDED",
+    "CLINVAR_ENTRY_CONDITION_NOT_PROVIDED",
+    "CLINVAR_ENTRY_OTHER",
+)
+
+
+def entry_class() -> Column:
+    """F4 entry classification of an incoming variant row: one of
+    ``ENTRY_CLASSES``."""
+    cs_np, cond_np, other = ENTRY_CLASSES
+    return (
+        F.when(
+            F.coalesce("clinical_significance", F.lit("")).contains("not provided"),
+            cs_np,
+        )
+        .when(
+            F.col("trait_name").isNull()
+            | F.col("trait_name").contains("not provided")
+            | F.col("trait_name").contains("not specified"),
+            cond_np,
+        )
+        .otherwise(other)
+    )
+
+
+def archive_counter_columns() -> list[Column]:
+    """Aggregate columns over a ``variant_archive``, each named after its
+    counter: ``RECORDS_<KIND>`` per F1/F2 record class, and the F3
+    canaries (Parser.java:449-458: records that are not record-status
+    'current' or not Homo sapiens are processed anyway, but the
+    reference warns with dedicated counters)."""
+    return [
+        *[
+            F.count_if(F.col("record_kind") == k).alias(f"RECORDS_{k.upper()}")
+            for k in RECORD_KINDS
+        ],
+        F.count_if(F.coalesce("record_status", F.lit("")) != "current").alias(
+            "NON_CURRENT_RECORD"
+        ),
+        F.count_if(F.coalesce("species", F.lit("")) != "Homo sapiens").alias(
+            "NON_HUMAN_SPECIES"
+        ),
+    ]
+
+
 def load_run(
     archive: DataFrame,
     prev: Snapshot,
@@ -790,57 +847,43 @@ def load_run(
     stale_cutoff_days: int = 1,
 ) -> LoadResult:
     """Full --load semantics, snapshot-in/snapshot-out. ``genes_dim``
-    must have (gene_rgd_id, gene_id, symbol)."""
+    must have (gene_rgd_id, gene_id, symbol).
+
+    Every result is computed once. The XML is scanned by one job, the
+    eager checkpoint that stages the incoming records; the record-kind,
+    canary and entry-class counters are Observation metrics of that
+    same job, as the reference's GlobalCounters are bumped inside its
+    one parse pass. Each of the six diffs is checkpointed right after
+    it is built, and its table write, the variants' last-modified
+    flags, the stale-xdb guard and the diff-class counters all read
+    that checkpoint. ``counters`` is therefore one small job away: the
+    observed counts are driver-side rows and the diff classes one
+    groupBy over the checkpoints."""
     spark = archive.sparkSession
     ts = F.lit(run_ts).cast("timestamp")
 
     # Stage the parsed incoming records (the reference's chunk-cache S3
     # analogue): everything downstream branches off `inc` many times —
-    # without truncation each of the ~6 diffs + collections + counters
-    # would re-parse the XML and re-run the match joins per action.
-    inc = build_incoming_variants(archive).localCheckpoint(eager=True)
-
-    # F4 entry classification + F1/F2 skip counters
-    kind_counters = archive.groupBy("record_kind").agg(
-        F.count(F.lit(1)).alias("value")
-    ).select(
-        F.concat(F.lit("RECORDS_"), F.upper("record_kind")).alias("counter"), "value"
+    # without truncation each of the ~6 diffs + collections would
+    # re-parse the XML and re-run the match joins per action.
+    #
+    # The archive counters are observed BELOW the simple-record filter;
+    # Catalyst does not push filters through an observation, so every
+    # record kind is counted.
+    record_obs, entry_obs = Observation("load_records"), Observation("load_entries")
+    observed = archive.observe(record_obs, *archive_counter_columns())
+    inc = (
+        build_incoming_variants(observed)
+        .observe(entry_obs, *[F.count_if(entry_class() == c).alias(c) for c in ENTRY_CLASSES])
+        .localCheckpoint(eager=True)
     )
-    # F3 canary counters (Parser.java:449-458): records that are not
-    # record-status 'current' or not Homo sapiens are processed anyway,
-    # but the reference warns with dedicated counters — surface the
-    # same two canaries (zero rows when clean; unionByName keeps them
-    # absent-as-zero like the reference's unsent warnings)
-    canary_counters = archive.select(
-        F.explode(
-            F.array_compact(
-                F.array(
-                    F.when(
-                        F.coalesce("record_status", F.lit("")) != "current",
-                        "NON_CURRENT_RECORD",
-                    ),
-                    F.when(
-                        F.coalesce("species", F.lit("")) != "Homo sapiens",
-                        "NON_HUMAN_SPECIES",
-                    ),
-                )
-            )
-        ).alias("counter")
-    ).groupBy("counter").agg(F.count(F.lit(1)).alias("value"))
-    entry_cls = inc.select(
-        F.when(
-            F.coalesce("clinical_significance", F.lit("")).contains("not provided"),
-            "CLINVAR_ENTRY_CLINICAL_SIGNIFICANCE_NOT_PROVIDED",
-        )
-        .when(
-            F.col("trait_name").isNull()
-            | F.col("trait_name").contains("not provided")
-            | F.col("trait_name").contains("not specified"),
-            "CLINVAR_ENTRY_CONDITION_NOT_PROVIDED",
-        )
-        .otherwise("CLINVAR_ENTRY_OTHER")
-        .alias("counter")
-    ).groupBy("counter").agg(F.count(F.lit(1)).alias("value"))
+    # absent counters read as zero, like the reference's unsent warnings
+    observed_counts = [
+        (name, value)
+        for obs in (record_obs, entry_obs)
+        for name, value in obs.get.items()
+        if value
+    ]
 
     _scratch: list = []
     matched = match_variants(inc, prev, _scratch=_scratch)
@@ -866,6 +909,12 @@ def load_run(
         "rgd_id", "variant_rgd_id"
     )
 
+    def materialized_diff(*args, **kwargs) -> DataFrame:
+        # one job per diff: each has up to four consumers (its table
+        # write, changed_sat, the guard, the counters), and an
+        # unmaterialized diff re-runs its full outer join for each
+        return diff_sync(*args, **kwargs).localCheckpoint(eager=True)
+
     # variant diff (J10/W1/W2): compare over the QC'd columns
     compare_cols = [
         "symbol",
@@ -883,7 +932,7 @@ def load_run(
         "prevalence",
         "date_last_evaluated",
     ]
-    v_diff = diff_sync(
+    v_diff = materialized_diff(
         merged.select("rgd_id", *compare_cols),
         prev.variants.select("rgd_id", *compare_cols),
         key_cols=["rgd_id"],
@@ -908,27 +957,27 @@ def load_run(
             F.broadcast(run_ids.withColumnRenamed("rgd_id", key)), key
         )
 
-    xdb_diff = diff_sync(
+    xdb_diff = materialized_diff(
         xdb_in,
         run_slice(prev.xdb_ids.drop("modification_date")),
         key_cols=["rgd_id", "xdb_key", "acc_id"],
     )
-    assoc_diff = diff_sync(
+    assoc_diff = materialized_diff(
         assoc_in,
         run_slice(prev.gene_associations, "variant_rgd_id"),
         key_cols=["variant_rgd_id", "gene_rgd_id"],
     )
-    map_diff = diff_sync(
+    map_diff = materialized_diff(
         map_in,
         run_slice(prev.map_positions),
         key_cols=["rgd_id", "map_key", "chromosome", "start_pos", "stop_pos"],
     )
-    hgvs_diff = diff_sync(
+    hgvs_diff = materialized_diff(
         hgvs_in,
         run_slice(prev.hgvs_names),
         key_cols=["rgd_id", "type", "name"],
     )
-    alias_diff = diff_sync(
+    alias_diff = materialized_diff(
         alias_in,
         run_slice(prev.aliases),
         key_cols=["rgd_id", "value"],
@@ -983,14 +1032,19 @@ def load_run(
     # is absent from this run's incoming AND its preserved
     # modification_date is older than run_ts - stale_cutoff_days (the
     # grace window keeps rows recently touched by other runs).
+    #
+    # This run's incoming keys are read off the materialized diff: the
+    # full outer join carries every xdb_in key, and exactly those rows
+    # are not DELETEs.
     _xdb_key_cols = ["rgd_id", "xdb_key", "acc_id"]
+    xdb_touched = xdb_diff.filter(F.col(CHANGE_COL) != DELETE)
     recently_modified = prev.xdb_ids.filter(
         F.col("modification_date")
         >= ts - F.expr(f"INTERVAL {int(stale_cutoff_days)} DAYS")
     ).select(*_xdb_key_cols)
     stale = guarded_stale_delete(
         prev.xdb_ids,
-        touched=xdb_in.select(*_xdb_key_cols).unionByName(recently_modified),
+        touched=xdb_touched.select(*_xdb_key_cols).unionByName(recently_modified),
         key_cols=_xdb_key_cols,
         threshold=STALE_XDB_DELETE_THRESHOLD,
     )
@@ -1007,7 +1061,7 @@ def load_run(
     #     rows keep their prior modification_date (the signal the next
     #     run's cutoff needs).
     _xdb_cols = ["rgd_id", "xdb_key", "acc_id", "link_text", "notes"]
-    inc_keys = xdb_in.select(
+    inc_keys = xdb_touched.select(
         *[F.col(c).alias(f"_i_{c}") for c in _xdb_key_cols]
     ).dropDuplicates()
     _inc_cond = None
@@ -1015,8 +1069,7 @@ def load_run(
         eq = F.col(c).eqNullSafe(F.col(f"_i_{c}"))
         _inc_cond = eq if _inc_cond is None else _inc_cond & eq
     next_xdb = (
-        xdb_diff.filter(F.col(CHANGE_COL) != DELETE)
-        .select(*_xdb_cols)
+        xdb_touched.select(*_xdb_cols)
         .withColumn("modification_date", ts)
         .unionByName(
             stale.kept.join(inc_keys, on=_inc_cond, how="left_anti").select(
@@ -1080,22 +1133,31 @@ def load_run(
         untouched_vars
     )
 
-    # counters: per-entity diff classes + record kinds + entry classes
-    def diff_count(diff: DataFrame, entity: str) -> DataFrame:
-        return diff.groupBy(CHANGE_COL).agg(F.count(F.lit(1)).alias("value")).select(
-            F.concat(F.lit(entity + "_"), F.col(CHANGE_COL)).alias("counter"), "value"
+    # counters: the observed record kinds, canaries and entry classes,
+    # plus the per-entity diff classes as ONE groupBy over the six
+    # checkpointed diffs
+    diffs = {
+        "VARIANTS": v_diff,
+        "XDB_IDS": xdb_diff,
+        "GENE_ASSOCIATIONS": assoc_diff,
+        "MAP_POSITIONS": map_diff,
+        "HGVS_NAMES": hgvs_diff,
+        "ALIASES": alias_diff,
+    }
+    diff_counts = (
+        reduce(
+            DataFrame.unionByName,
+            [
+                d.select(F.concat(F.lit(entity + "_"), F.col(CHANGE_COL)).alias("counter"))
+                for entity, d in diffs.items()
+            ],
         )
-
-    counters = (
-        kind_counters.unionByName(canary_counters)
-        .unionByName(entry_cls)
-        .unionByName(diff_count(v_diff, "VARIANTS"))
-        .unionByName(diff_count(xdb_diff, "XDB_IDS"))
-        .unionByName(diff_count(assoc_diff, "GENE_ASSOCIATIONS"))
-        .unionByName(diff_count(map_diff, "MAP_POSITIONS"))
-        .unionByName(diff_count(hgvs_diff, "HGVS_NAMES"))
-        .unionByName(diff_count(alias_diff, "ALIASES"))
+        .groupBy("counter")
+        .agg(F.count(F.lit(1)).alias("value"))
     )
+    counters = rows_frame(
+        spark, observed_counts, "counter string, value long"
+    ).unionByName(diff_counts)
 
     return LoadResult(
         snapshot=Snapshot(
@@ -1106,7 +1168,7 @@ def load_run(
             hgvs_names=next_hgvs,
             aliases=next_alias,
         ),
-        variant_diff=v_diff,
+        diffs=diffs,
         counters=counters,
         unknown_xref_dbs=unknown_dbs,
         stale_xdb=stale,

@@ -12,8 +12,10 @@ Defaults are chosen for correctness-at-scale first:
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 DEFAULT_SHUFFLE_PARTITIONS = "32"
 
@@ -68,3 +70,17 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def rows_frame(
+    spark: SparkSession, rows: Iterable[tuple], schema: StructType | str
+) -> DataFrame:
+    """A DataFrame of a few driver-side rows (counters), shipped to the
+    JVM through Arrow. ``createDataFrame`` on a Python list instead
+    plans a Python map over a parallelized RDD: a Python-worker job
+    each time the frame is computed."""
+    import pandas as pd
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    return spark.createDataFrame(pd.DataFrame(list(rows), columns=schema.names), schema)

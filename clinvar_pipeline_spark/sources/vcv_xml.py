@@ -27,6 +27,11 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+# F1/F2 record classes, in the order extract_records tests for them; the
+# last one is the fallback. The load's RECORDS_<KIND> counters enumerate
+# this tuple, so no other module lists the kinds.
+RECORD_KINDS = ("multi_allele", "simple", "genotype", "haplotype", "empty")
+
 # ---------------------------------------------------------------------------
 # Parse schema: the slice of the VariationArchive tree the pipeline reads.
 # Attributes use the "_" prefix; mixed-content text lands in _VALUE.
@@ -383,12 +388,13 @@ def extract_records(parsed: DataFrame, rec_col: str = "rec") -> DataFrame:
     sa_arr = cr["SimpleAllele"]
     sa = F.try_element_at(sa_arr, F.lit(1))
 
+    multi_allele, simple, genotype, haplotype, empty = RECORD_KINDS
     kind = (
-        F.when(F.size(sa_arr) > 1, "multi_allele")
-        .when(F.size(sa_arr) == 1, "simple")
-        .when(cr["Genotype"].isNotNull(), "genotype")
-        .when(cr["Haplotype"].isNotNull(), "haplotype")
-        .otherwise("empty")
+        F.when(F.size(sa_arr) > 1, multi_allele)
+        .when(F.size(sa_arr) == 1, simple)
+        .when(cr["Genotype"].isNotNull(), genotype)
+        .when(cr["Haplotype"].isNotNull(), haplotype)
+        .otherwise(empty)
     )
 
     rcv = F.coalesce(

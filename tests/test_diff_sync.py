@@ -87,6 +87,15 @@ class TestGuardedDelete:
         assert res.kept.count() == 100
         assert res.deleted.count() == 0
 
+    def test_empty_existing_not_aborted(self, spark):
+        existing = spark.createDataFrame([], "k long")
+        touched = spark.createDataFrame([(1,)], "k long")
+        res = guarded_stale_delete(existing, touched, ["k"], threshold=0.08)
+        assert not res.aborted
+        assert (res.stale_count, res.total_count) == (0, 0)
+        assert res.kept.count() == 0
+        assert res.deleted.count() == 0
+
 
 def test_salted_groupby_matches_plain(spark, sf_dir):
     from pyspark.sql import functions as F

@@ -78,6 +78,52 @@ def test_first_run_inserts(first_run):
     assert counters["NON_HUMAN_SPECIES"] == 1
 
 
+def test_counters_equal_plain_recount(spark, archive, genes_dim, first_run):
+    """load_run's counters come from Observation metrics on the one XML
+    scan and one groupBy over the checkpointed diffs. Pin them
+    row-for-row against plain groupBys over the archive and the
+    returned diffs, on a first run (INSERTs) and a re-run (UNCHANGED).
+    The fixture holds every record kind and both canaries, so a
+    record_kind == 'simple' filter pushed below the observation would
+    drop the skipped kinds and fail here."""
+    from clinvar_pipeline_spark.plans.load import build_incoming_variants, entry_class
+
+    def recount(df, counter):
+        return {
+            r["counter"]: r["count"]
+            for r in df.groupBy(counter.alias("counter")).count().collect()
+        }
+
+    archive_want = (
+        recount(archive, F.concat(F.lit("RECORDS_"), F.upper("record_kind")))
+        | recount(
+            archive.filter(F.coalesce("record_status", F.lit("")) != "current"),
+            F.lit("NON_CURRENT_RECORD"),
+        )
+        | recount(
+            archive.filter(F.coalesce("species", F.lit("")) != "Homo sapiens"),
+            F.lit("NON_HUMAN_SPECIES"),
+        )
+        | recount(build_incoming_variants(archive), entry_class())
+    )
+    assert {
+        "RECORDS_SIMPLE",
+        "RECORDS_MULTI_ALLELE",
+        "RECORDS_GENOTYPE",
+        "RECORDS_HAPLOTYPE",
+        "NON_CURRENT_RECORD",
+        "NON_HUMAN_SPECIES",
+    } <= set(archive_want)
+    rerun = load_run(archive, first_run.snapshot, genes_dim)
+    for res in (first_run, rerun):
+        want = dict(archive_want)
+        for entity, diff in res.diffs.items():
+            want |= recount(diff, F.concat(F.lit(entity + "_"), F.col(CHANGE_COL)))
+        got = sorted((r["counter"], r["value"]) for r in res.counters.collect())
+        assert got == sorted(want.items())
+    assert {c for c, _ in got} >= {"VARIANTS_UNCHANGED", "XDB_IDS_UNCHANGED"}
+
+
 def test_variant_fields(first_run):
     vars_ = {r["symbol"]: r for r in first_run.snapshot.variants.collect()}
     v = vars_["CV26042"]
