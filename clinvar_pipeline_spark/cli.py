@@ -138,6 +138,7 @@ def cmd_load(spark: SparkSession, args) -> list[Row]:
         read_snapshot,
         write_snapshot,
     )
+    from clinvar_pipeline_spark.session import run_concurrently
     from clinvar_pipeline_spark.sources.vcv_xml import read_vcv_xml
 
     archive = read_vcv_xml(spark, args.xml)
@@ -146,9 +147,15 @@ def cmd_load(spark: SparkSession, args) -> list[Row]:
     )
     genes = spark.read.parquet(args.genes)
     res = load_run(archive, prev, genes)
-    write_snapshot(res.snapshot, args.out)
-    res.variant_diff.write.mode("overwrite").parquet(f"{args.out}/variant_diff")
-    return _land_counters(spark, res.counters, f"{args.out}/counters")
+    # independent actions: the snapshot tables, the variant diff and
+    # the counters all read load_run's checkpoints
+    _, _, rows = run_concurrently(
+        spark,
+        lambda: write_snapshot(res.snapshot, args.out),
+        lambda: res.variant_diff.write.mode("overwrite").parquet(f"{args.out}/variant_diff"),
+        lambda: _land_counters(spark, res.counters, f"{args.out}/counters"),
+    )
+    return rows
 
 
 def cmd_annotate(spark: SparkSession, args) -> list[Row]:

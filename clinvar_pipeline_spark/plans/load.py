@@ -7,10 +7,13 @@ re-expressing Manager.run --load (Manager.java:100-137) §3.1: the
 reference's per-record QC->Loader mutation loop becomes set-oriented
 classification — every Oracle round-trip is a join, every satellite
 sync is one generic diff_sync, the three global collection passes are
-groupBys, and the guarded stale-delete is an anti-join with a
+one groupBy, and the guarded stale-delete is an anti-join with a
 driver-side threshold branch. Counters fall out of the jobs that
 materialize the data (Observation metrics on the one XML scan, one
-groupBy over the checkpointed diffs), not out of extra passes.
+groupBy over the checkpointed diffs), not out of extra passes. Where the
+reference runs its chunk parsers and satellite syncs on hand-managed
+threads, independent Spark actions here are submitted together
+(session.run_concurrently) and share the cores through the scheduler.
 
 Stage map (reference -> here):
 - Parser.parse           -> sources/vcv_xml.read_vcv_xml (S5)
@@ -25,7 +28,8 @@ Stage map (reference -> here):
   (GeneAssociations.java:78-109), xdb ids J4 (XdbIds.java:82-146),
   map positions J5 (MapPositions.java:104-152), hgvs J6
   (HgvsNames.java:36-101), aliases J7 (Aliases.java:51-138)
-- collections M6-M8      -> groupBy(rgd_id) sorted-set agg + byte-trim
+- collections M6-M8      -> collection_values: ONE groupBy(rgd_id), a
+                            sorted-set agg per column + one byte-trim pass
 - last-modified W3       -> OR of change flags
 - stale xdb delete W4    -> guarded_stale_delete
 
@@ -79,7 +83,7 @@ from clinvar_pipeline_spark.operators.diff_sync import (
     diff_sync,
 )
 from clinvar_pipeline_spark.operators.guarded_delete import guarded_stale_delete
-from clinvar_pipeline_spark.session import rows_frame
+from clinvar_pipeline_spark.session import rows_frame, run_concurrently
 from clinvar_pipeline_spark.sources.vcv_xml import RECORD_KINDS
 
 VARIANTS_SCHEMA = (
@@ -119,12 +123,12 @@ class Snapshot:
 
 def empty_snapshot(spark: SparkSession) -> Snapshot:
     return Snapshot(
-        variants=spark.createDataFrame([], VARIANTS_SCHEMA),
-        xdb_ids=spark.createDataFrame([], XDB_IDS_SCHEMA),
-        gene_associations=spark.createDataFrame([], GENE_ASSOC_SCHEMA),
-        map_positions=spark.createDataFrame([], MAP_POS_SCHEMA),
-        hgvs_names=spark.createDataFrame([], HGVS_SCHEMA),
-        aliases=spark.createDataFrame([], ALIASES_SCHEMA),
+        variants=rows_frame(spark, [], VARIANTS_SCHEMA),
+        xdb_ids=rows_frame(spark, [], XDB_IDS_SCHEMA),
+        gene_associations=rows_frame(spark, [], GENE_ASSOC_SCHEMA),
+        map_positions=rows_frame(spark, [], MAP_POS_SCHEMA),
+        hgvs_names=rows_frame(spark, [], HGVS_SCHEMA),
+        aliases=rows_frame(spark, [], ALIASES_SCHEMA),
     )
 
 
@@ -145,9 +149,14 @@ def write_snapshot(snap: Snapshot, path: str) -> None:
     the S11 checkpoint: any snapshot dir doubles as the /tmp/clinvar.ser
     reuse cache, Clinvar2Vcf.java:405-418). Oracle's 999-key batch
     limit (O6, AnnotCache.java:285-301) has no Spark analogue —
-    vectorized Parquet writes are unbatched; parity note only."""
-    for f in fields(Snapshot):
-        getattr(snap, f.name).write.mode("overwrite").parquet(f"{path}/{f.name}")
+    vectorized Parquet writes are unbatched; parity note only.
+
+    The six table writes are independent actions and run concurrently."""
+
+    def write(name: str):
+        return lambda: getattr(snap, name).write.mode("overwrite").parquet(f"{path}/{name}")
+
+    run_concurrently(snap.variants.sparkSession, *[write(f.name) for f in fields(Snapshot)])
 
 
 def write_snapshot_bucketed(
@@ -349,9 +358,7 @@ def dispatch_xrefs(inc: DataFrame) -> tuple[DataFrame, DataFrame]:
     x = x.filter(~junk)
 
     known = x.filter(~F.col("db").isin(*XREF_DB_IGNORED))
-    mapping = spark.createDataFrame(
-        list(XREF_DB_TO_XDB_KEY.items()), "db string, xdb_key int"
-    )
+    mapping = rows_frame(spark, XREF_DB_TO_XDB_KEY.items(), "db string, xdb_key int")
     dispatched = known.join(F.broadcast(mapping), "db", "left")
     unknown = (
         dispatched.filter(F.col("xdb_key").isNull())
@@ -478,8 +485,8 @@ def build_incoming_map_positions(inc: DataFrame) -> DataFrame:
     swapped, fish_band from the cytogenetic location whose chromosome
     prefix matches."""
     spark = inc.sparkSession
-    amap = spark.createDataFrame(
-        list(ASSEMBLY_TO_MAP_KEY.items()), "assembly_name string, map_key int"
+    amap = rows_frame(
+        spark, ASSEMBLY_TO_MAP_KEY.items(), "assembly_name string, map_key int"
     )
     loc = inc.select(
         "symbol",
@@ -616,12 +623,14 @@ def build_incoming_gene_assocs(inc: DataFrame, genes_dim: DataFrame) -> DataFram
 def match_variants(
     variants_in: DataFrame,
     prev: Snapshot,
+    max_prev: int,
     _scratch: list | None = None,
 ) -> DataFrame:
     """Dao.java:80-127: find the existing variant by primary-RCV xdb
     (key 52), else by symbol, else by name; >1 hit at any stage =
     no-match (ambiguity guard inside cascade_lookup). New variants get
-    rgd_ids above the previous max, dense by symbol (deterministic).
+    rgd_ids above ``max_prev`` (the previous snapshot's highest rgd_id,
+    0 when it is empty), dense by symbol (deterministic).
 
     ``_scratch``, when given, collects the internally persisted frames
     so the caller can unpersist them once the returned plan has
@@ -661,7 +670,6 @@ def match_variants(
         result_col="matched_rgd_id",
         provenance_col="matched_by",
     )
-    max_prev = prev.variants.agg(F.max("rgd_id")).first()[0] or 0
     # Two-phase dense id assignment (no global single-partition window —
     # that funnels every new variant through ONE task at scale):
     #   1. range-partition new symbols → contiguous, ordered ranges with
@@ -771,22 +779,41 @@ def qc_merge_variants(matched: DataFrame, prev_variants: DataFrame) -> DataFrame
 # Collections M6-M8 (+ M9 trim)
 # ---------------------------------------------------------------------------
 
-def collection_value(
-    df: DataFrame, col: str, joiner: str, budget: int
-) -> DataFrame:
+# collection column -> joiner of its sorted set
+COLLECTION_JOINERS = {"notes": "; ", "trait_name": "|", "submitter": "|"}
+
+
+def collection_values(df: DataFrame) -> DataFrame:
     """NotesCollection/TraitNameCollection/SubmitterCollection
-    (M6-M8): per rgd_id, split every incoming value on '|', TreeSet,
-    join with ``joiner``, trim to the byte budget. Returns
-    (rgd_id, <col>)."""
-    parts = F.explode(F.split(F.col(col), "\\|")).alias("part")
-    agg = (
-        df.filter(F.col(col).isNotNull() & (F.trim(col) != ""))
-        .select("rgd_id", parts)
-        .filter(F.col("part") != "")
-        .groupBy("rgd_id")
-        .agg(F.concat_ws(joiner, F.array_sort(F.collect_set("part"))).alias("_v"))
+    (M6-M8, Manager.java:128-130): per rgd_id and per collection
+    column, split every non-blank incoming value on '|', TreeSet the
+    non-empty parts, join them with the column's joiner and trim to its
+    byte budget; null when no part survives. The reference runs three
+    global passes; here all three are one groupBy, and their trims one
+    Arrow pass. Returns (rgd_id, notes, trait_name, submitter)."""
+    parts = {
+        c: F.when(
+            F.col(c).isNotNull() & (F.trim(c) != ""),
+            F.filter(F.split(F.col(c), "\\|"), lambda p: p != ""),
+        )
+        for c in COLLECTION_JOINERS
+    }
+    sets = df.groupBy("rgd_id").agg(
+        *[
+            # collect_list skips the null (blank) rows
+            F.array_sort(F.array_distinct(F.flatten(F.collect_list(p)))).alias(c)
+            for c, p in parts.items()
+        ]
     )
-    return agg.select("rgd_id", byte_trim(F.col("_v"), budget).alias(col))
+    return sets.select(
+        "rgd_id",
+        *[
+            byte_trim(
+                F.when(F.size(c) > 0, F.concat_ws(joiner, c)), COLUMN_BYTE_BUDGETS[c]
+            ).alias(c)
+            for c, joiner in COLLECTION_JOINERS.items()
+        ],
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -858,24 +885,35 @@ def load_run(
     flags, the stale-xdb guard and the diff-class counters all read
     that checkpoint. ``counters`` is therefore one small job away: the
     observed counts are driver-side rows and the diff classes one
-    groupBy over the checkpoints."""
+    groupBy over the checkpoints. The M6-M8 collections are one
+    groupBy, joined once into the next variants.
+
+    Independent actions overlap (``run_concurrently``): the staging
+    checkpoint runs beside the previous max rgd_id lookup, and the six
+    diff checkpoints run together, the stale-xdb guard's count chained
+    behind the xdb diff in that diff's thread. The returned snapshot
+    frames are lazy; the caller's writes overlap too (cli.cmd_load)."""
     spark = archive.sparkSession
     ts = F.lit(run_ts).cast("timestamp")
 
     # Stage the parsed incoming records (the reference's chunk-cache S3
     # analogue): everything downstream branches off `inc` many times —
     # without truncation each of the ~6 diffs + collections would
-    # re-parse the XML and re-run the match joins per action.
+    # re-parse the XML and re-run the match joins per action. The
+    # previous max rgd_id, which new ids start above, is an independent
+    # action over the previous snapshot and runs alongside.
     #
     # The archive counters are observed BELOW the simple-record filter;
     # Catalyst does not push filters through an observation, so every
     # record kind is counted.
     record_obs, entry_obs = Observation("load_records"), Observation("load_entries")
     observed = archive.observe(record_obs, *archive_counter_columns())
-    inc = (
-        build_incoming_variants(observed)
+    inc, max_prev = run_concurrently(
+        spark,
+        lambda: build_incoming_variants(observed)
         .observe(entry_obs, *[F.count_if(entry_class() == c).alias(c) for c in ENTRY_CLASSES])
-        .localCheckpoint(eager=True)
+        .localCheckpoint(eager=True),
+        lambda: prev.variants.agg(F.max("rgd_id")).first()[0] or 0,
     )
     # absent counters read as zero, like the reference's unsent warnings
     observed_counts = [
@@ -886,7 +924,7 @@ def load_run(
     ]
 
     _scratch: list = []
-    matched = match_variants(inc, prev, _scratch=_scratch)
+    matched = match_variants(inc, prev, max_prev, _scratch=_scratch)
     merged = qc_merge_variants(matched, prev.variants).localCheckpoint(eager=True)
     # the eager checkpoint above materialized every consumer of the
     # frames match_variants persisted — release them so repeated
@@ -932,22 +970,6 @@ def load_run(
         "prevalence",
         "date_last_evaluated",
     ]
-    v_diff = materialized_diff(
-        merged.select("rgd_id", *compare_cols),
-        prev.variants.select("rgd_id", *compare_cols),
-        key_cols=["rgd_id"],
-        compare_cols=compare_cols,
-    )
-
-    # collections (matched variants only in the reference; new variants
-    # carry their values directly — same result either way here)
-    notes_c = collection_value(merged, "notes", "; ", COLUMN_BYTE_BUDGETS["notes"])
-    trait_c = collection_value(
-        merged, "trait_name", "|", COLUMN_BYTE_BUDGETS["trait_name"]
-    )
-    subm_c = collection_value(
-        merged, "submitter", "|", COLUMN_BYTE_BUDGETS["submitter"]
-    )
 
     # satellite diffs (existing side restricted to this run's variants)
     run_ids = merged.select("rgd_id").distinct()
@@ -957,30 +979,71 @@ def load_run(
             F.broadcast(run_ids.withColumnRenamed("rgd_id", key)), key
         )
 
-    xdb_diff = materialized_diff(
-        xdb_in,
-        run_slice(prev.xdb_ids.drop("modification_date")),
-        key_cols=["rgd_id", "xdb_key", "acc_id"],
-    )
-    assoc_diff = materialized_diff(
-        assoc_in,
-        run_slice(prev.gene_associations, "variant_rgd_id"),
-        key_cols=["variant_rgd_id", "gene_rgd_id"],
-    )
-    map_diff = materialized_diff(
-        map_in,
-        run_slice(prev.map_positions),
-        key_cols=["rgd_id", "map_key", "chromosome", "start_pos", "stop_pos"],
-    )
-    hgvs_diff = materialized_diff(
-        hgvs_in,
-        run_slice(prev.hgvs_names),
-        key_cols=["rgd_id", "type", "name"],
-    )
-    alias_diff = materialized_diff(
-        alias_in,
-        run_slice(prev.aliases),
-        key_cols=["rgd_id", "value"],
+    # W4 (Dao.java:409-436): the reference touches MODIFICATION_DATE on
+    # every incoming xdb id, then deletes rows whose date predates the
+    # run cutoff — unless they exceed 8% of the table (circuit breaker).
+    # Snapshot-functionally: a prev row is a stale candidate iff its key
+    # is absent from this run's incoming AND its preserved
+    # modification_date is older than run_ts - stale_cutoff_days (the
+    # grace window keeps rows recently touched by other runs).
+    #
+    # This run's incoming keys are read off the materialized diff: the
+    # full outer join carries every xdb_in key, and exactly those rows
+    # are not DELETEs. The guard's count therefore waits for the xdb
+    # diff alone, in that diff's thread.
+    _xdb_key_cols = ["rgd_id", "xdb_key", "acc_id"]
+    recently_modified = prev.xdb_ids.filter(
+        F.col("modification_date")
+        >= ts - F.expr(f"INTERVAL {int(stale_cutoff_days)} DAYS")
+    ).select(*_xdb_key_cols)
+
+    def xdb_diff_and_guard():
+        xdb_diff = materialized_diff(
+            xdb_in,
+            run_slice(prev.xdb_ids.drop("modification_date")),
+            key_cols=_xdb_key_cols,
+        )
+        touched = xdb_diff.filter(F.col(CHANGE_COL) != DELETE)
+        stale = guarded_stale_delete(
+            prev.xdb_ids,
+            touched=touched.select(*_xdb_key_cols).unionByName(recently_modified),
+            key_cols=_xdb_key_cols,
+            threshold=STALE_XDB_DELETE_THRESHOLD,
+        )
+        return xdb_diff, stale
+
+    # the six diffs are independent actions: build them concurrently
+    v_diff, (xdb_diff, stale), assoc_diff, map_diff, hgvs_diff, alias_diff = (
+        run_concurrently(
+            spark,
+            lambda: materialized_diff(
+                merged.select("rgd_id", *compare_cols),
+                prev.variants.select("rgd_id", *compare_cols),
+                key_cols=["rgd_id"],
+                compare_cols=compare_cols,
+            ),
+            xdb_diff_and_guard,
+            lambda: materialized_diff(
+                assoc_in,
+                run_slice(prev.gene_associations, "variant_rgd_id"),
+                key_cols=["variant_rgd_id", "gene_rgd_id"],
+            ),
+            lambda: materialized_diff(
+                map_in,
+                run_slice(prev.map_positions),
+                key_cols=["rgd_id", "map_key", "chromosome", "start_pos", "stop_pos"],
+            ),
+            lambda: materialized_diff(
+                hgvs_in,
+                run_slice(prev.hgvs_names),
+                key_cols=["rgd_id", "type", "name"],
+            ),
+            lambda: materialized_diff(
+                alias_in,
+                run_slice(prev.aliases),
+                key_cols=["rgd_id", "value"],
+            ),
+        )
     )
 
     # W3: variant last_modified touched iff variant or any satellite changed
@@ -1025,30 +1088,6 @@ def load_run(
         alias_diff, prev.aliases, "rgd_id", ["rgd_id", "value", "notes"]
     )
 
-    # W4 (Dao.java:409-436): the reference touches MODIFICATION_DATE on
-    # every incoming xdb id, then deletes rows whose date predates the
-    # run cutoff — unless they exceed 8% of the table (circuit breaker).
-    # Snapshot-functionally: a prev row is a stale candidate iff its key
-    # is absent from this run's incoming AND its preserved
-    # modification_date is older than run_ts - stale_cutoff_days (the
-    # grace window keeps rows recently touched by other runs).
-    #
-    # This run's incoming keys are read off the materialized diff: the
-    # full outer join carries every xdb_in key, and exactly those rows
-    # are not DELETEs.
-    _xdb_key_cols = ["rgd_id", "xdb_key", "acc_id"]
-    xdb_touched = xdb_diff.filter(F.col(CHANGE_COL) != DELETE)
-    recently_modified = prev.xdb_ids.filter(
-        F.col("modification_date")
-        >= ts - F.expr(f"INTERVAL {int(stale_cutoff_days)} DAYS")
-    ).select(*_xdb_key_cols)
-    stale = guarded_stale_delete(
-        prev.xdb_ids,
-        touched=xdb_touched.select(*_xdb_key_cols).unionByName(recently_modified),
-        key_cols=_xdb_key_cols,
-        threshold=STALE_XDB_DELETE_THRESHOLD,
-    )
-
     # next xdb state, gated by the guard (round-2 fix — the breaker used
     # to be computed but never applied, so a truncated release silently
     # lost rows):
@@ -1061,6 +1100,7 @@ def load_run(
     #     rows keep their prior modification_date (the signal the next
     #     run's cutoff needs).
     _xdb_cols = ["rgd_id", "xdb_key", "acc_id", "link_text", "notes"]
+    xdb_touched = xdb_diff.filter(F.col(CHANGE_COL) != DELETE)
     inc_keys = xdb_touched.select(
         *[F.col(c).alias(f"_i_{c}") for c in _xdb_key_cols]
     ).dropDuplicates()
@@ -1079,11 +1119,11 @@ def load_run(
     )
 
     # variants next state: merged rows + collection overrides + untouched
+    # (collections over matched variants only in the reference; new
+    # variants carry their values directly — same result either way)
     v_base = merged.select("rgd_id", *compare_cols)
     v_final = (
-        v_base.join(notes_c, "rgd_id", "left")
-        .join(trait_c, "rgd_id", "left")
-        .join(subm_c, "rgd_id", "left")
+        v_base.join(collection_values(merged), "rgd_id", "left")
         .join(
             changed_sat.withColumn("_sat_changed", F.lit(True)), "rgd_id", "left"
         )

@@ -12,8 +12,11 @@ Defaults are chosen for correctness-at-scale first:
 from __future__ import annotations
 
 import os
-from collections.abc import Iterable
+from collections.abc import Callable, Iterable
+from concurrent.futures import ThreadPoolExecutor
+from typing import Any
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
@@ -75,12 +78,37 @@ def get_spark(
 def rows_frame(
     spark: SparkSession, rows: Iterable[tuple], schema: StructType | str
 ) -> DataFrame:
-    """A DataFrame of a few driver-side rows (counters), shipped to the
-    JVM through Arrow. ``createDataFrame`` on a Python list instead
-    plans a Python map over a parallelized RDD: a Python-worker job
-    each time the frame is computed."""
-    import pandas as pd
+    """A DataFrame of a few driver-side rows (counters, lookup maps,
+    header lines), shipped to the JVM as one Arrow table: a local
+    relation, empty or not. ``createDataFrame`` on a Python list (or on
+    an empty pandas frame) instead plans a Python map over a
+    parallelized RDD: a Python-worker job each time the frame is
+    computed."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
 
     if isinstance(schema, str):
         schema = StructType.fromDDL(schema)
-    return spark.createDataFrame(pd.DataFrame(list(rows), columns=schema.names), schema)
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows], schema=to_arrow_schema(schema)
+    )
+    return spark.createDataFrame(table, schema)
+
+
+def run_concurrently(spark: SparkSession, *thunks: Callable[[], Any]) -> list[Any]:
+    """Run independent driver actions at the same time; return their
+    results in argument order.
+
+    Each thunk gets its own driver thread, so the pool is exactly as
+    wide as the number of independent actions: the scheduler, not the
+    caller, decides how their tasks share the cores. Each thread
+    inherits the caller's local properties (job group, description,
+    call site) and session tags, so the jobs it submits are labelled
+    and cancellable like the caller's own. A failure is re-raised only
+    after every thunk has finished — no action is left running behind
+    the caller's back — and the first failure in argument order wins.
+    """
+    # leaving the block waits for every thunk
+    with ThreadPoolExecutor(max_workers=max(len(thunks), 1)) as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(t)) for t in thunks]
+    return [f.result() for f in futures]

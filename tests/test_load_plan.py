@@ -323,3 +323,82 @@ def test_bucketed_diff_is_shuffle_free(spark, tmp_path):
     # and the diff itself is still correct
     counts = {r["change_type"]: r["count"] for r in diff.groupBy("change_type").count().collect()}
     assert counts.get("INSERT") == 50 and counts.get("DELETE") == 50
+
+
+def test_collection_values_match_per_column_groupby(spark):
+    """The folded M6-M8 collections equal one plain groupBy per column
+    (split on '|', TreeSet the non-empty parts, join, byte-trim), with
+    null where a column has no non-blank value for an rgd_id."""
+    from clinvar_pipeline_spark.config import COLUMN_BYTE_BUDGETS
+    from clinvar_pipeline_spark.functions.text import byte_trim
+    from clinvar_pipeline_spark.plans.load import COLLECTION_JOINERS, collection_values
+
+    # notes whose sorted set joins to well over its 4,000-byte budget,
+    # with multibyte parts so the trim must not split a character
+    long_notes = "|".join(f"note {i:04d} — ünïcødé padding text" for i in range(150))
+    df = spark.createDataFrame(
+        [
+            (1, None, "a||b", "x|y"),
+            (1, "   ", "b|c", "y"),
+            (1, "n2|n1", "b", None),
+            (2, "n1|n2", None, "|"),
+            (3, long_notes, " ", None),
+            (3, "extra|note 0001 — ünïcødé padding text", None, "  s |t"),
+            (4, None, None, None),
+        ],
+        "rgd_id long, notes string, trait_name string, submitter string",
+    )
+
+    def reference(col: str, joiner: str):
+        parts = F.explode(F.split(F.col(col), "\\|")).alias("part")
+        agg = (
+            df.filter(F.col(col).isNotNull() & (F.trim(col) != ""))
+            .select("rgd_id", parts)
+            .filter(F.col("part") != "")
+            .groupBy("rgd_id")
+            .agg(F.concat_ws(joiner, F.array_sort(F.collect_set("part"))).alias("_v"))
+        )
+        return agg.select(
+            "rgd_id", byte_trim(F.col("_v"), COLUMN_BYTE_BUDGETS[col]).alias(col)
+        )
+
+    want = df.select("rgd_id").distinct()
+    for col, joiner in COLLECTION_JOINERS.items():
+        want = want.join(reference(col, joiner), "rgd_id", "left")
+    cols = ["rgd_id", *COLLECTION_JOINERS]
+    got = sorted(collection_values(df).select(cols).collect())
+    assert got == sorted(want.select(cols).collect())
+    by_id = {r["rgd_id"]: r for r in got}
+    assert by_id[1]["trait_name"] == "a|b|c" and by_id[1]["notes"] == "n1; n2"
+    assert by_id[2]["submitter"] is None and by_id[3]["trait_name"] is None
+    assert by_id[3]["notes"].endswith(" ...")
+    assert len(by_id[3]["notes"].encode("utf-8")) <= COLUMN_BYTE_BUDGETS["notes"]
+    assert by_id[3]["submitter"] == "  s |t"
+    assert all(by_id[4][c] is None for c in COLLECTION_JOINERS)
+
+
+def _python_rdd_in_lineage(df) -> bool:
+    return "PythonRDD" in df._jdf.queryExecution().toRdd().toDebugString()
+
+
+def test_list_built_load_frames_skip_python_workers(spark, archive):
+    """Frames the load builds from driver-side lists (the empty first-run
+    snapshot, the xref -> xdb_key map, the assembly map) reach the JVM
+    as local relations: no PythonRDD, so no Python-worker job."""
+    from clinvar_pipeline_spark.plans.load import (
+        build_incoming_map_positions,
+        build_incoming_variants,
+        dispatch_xrefs,
+    )
+
+    snap = empty_snapshot(spark)
+    for name in snap.__dict__:
+        assert not _python_rdd_in_lineage(getattr(snap, name)), name
+    inc = build_incoming_variants(archive)
+    assert not _python_rdd_in_lineage(inc)
+    xrefs, unknown = dispatch_xrefs(inc)
+    assert not _python_rdd_in_lineage(xrefs)
+    assert not _python_rdd_in_lineage(unknown)
+    assert not _python_rdd_in_lineage(build_incoming_map_positions(inc))
+    # the guard: a list-built frame does show up
+    assert _python_rdd_in_lineage(spark.createDataFrame([(1,)], "a int"))

@@ -3,7 +3,7 @@
 import glob
 
 from clinvar_pipeline_spark.sources.tsv import read_concept_to_omim
-from clinvar_pipeline_spark.sources.vcf_sink import VCF_HEADER, write_vcf
+from clinvar_pipeline_spark.sources.vcf_sink import VCF_HEADER, vcf_text, write_vcf
 
 
 def test_concept_to_omim_tsv(spark, tmp_path):
@@ -40,6 +40,18 @@ def test_write_vcf_single_sorted_file(spark, tmp_path):
         "1\t200\trs1\tC\tT",
         "2\t50\trs2\tA\tG",
     ]
+
+
+def test_vcf_header_skips_python_workers(spark):
+    """The header rows reach the JVM as a local relation: the VCF
+    text's lineage has no PythonRDD (a Python-worker job) when its data
+    lines have none."""
+    lines = spark.range(3).selectExpr(
+        "'1' AS chr", "id AS pos", "concat('1\t', id) AS line"
+    )
+    text = vcf_text(lines)
+    assert "PythonRDD" not in text._jdf.queryExecution().toRdd().toDebugString()
+    assert [r["line"] for r in text.collect()] == VCF_HEADER + ["1\t0", "1\t1", "1\t2"]
 
 
 # ---------------------------------------------------------------------
