@@ -389,13 +389,14 @@ def cmd_add_rs_ids(spark: SparkSession, args) -> int:
     instead runs the positional (chr,pos,ref,alt) dbSNP lookup of
     Clinvar2Vcf.getRsIs — a documented extension, not Manager parity."""
     from clinvar_pipeline_spark.plans.load import (
+        RS_SNAPSHOT_SCHEMAS,
         Snapshot,
         read_snapshot,
         write_snapshot,
     )
     from clinvar_pipeline_spark.plans.vcf import add_rs_ids, assign_rs_from_xdb
 
-    snap = read_snapshot(spark, args.snapshot)
+    snap = read_snapshot(spark, args.snapshot, RS_SNAPSHOT_SCHEMAS)
     if args.dbsnp:
         db_snp = spark.read.parquet(args.dbsnp)
         updated = add_rs_ids(snap.variants, snap.map_positions, db_snp)
@@ -419,11 +420,11 @@ def cmd_add_rs_ids(spark: SparkSession, args) -> int:
 
 def cmd_clinvar2vcf(spark: SparkSession, args) -> list[Row]:
     from clinvar_pipeline_spark.caching import release_cached
-    from clinvar_pipeline_spark.plans.load import read_snapshot
+    from clinvar_pipeline_spark.plans.load import RS_SNAPSHOT_SCHEMAS, read_snapshot
     from clinvar_pipeline_spark.plans.vcf import clinvar2vcf_export
     from clinvar_pipeline_spark.sources.vcf_sink import write_vcf
 
-    snap = read_snapshot(spark, args.snapshot)
+    snap = read_snapshot(spark, args.snapshot, RS_SNAPSHOT_SCHEMAS)
     db_snp = spark.read.parquet(args.dbsnp) if args.dbsnp else None
     ref_bases = spark.read.parquet(args.ref_bases) if args.ref_bases else None
     # lines + drop counters share one persisted flagged-rows frame

@@ -1,9 +1,9 @@
 """Pure column-expression library (no IO).
 
-Everything here returns Catalyst Column expressions (JVM-side,
-whole-stage-codegen friendly) except the two operators that genuinely
-need Python — UTF-8 byte-budget truncation and width-bucketed packing —
-which are Arrow-batched pandas UDFs.
+Everything exported here returns Catalyst Column expressions that run
+in the JVM, UTF-8 byte-budget truncation and width-bucketed packing
+included. The Arrow-batched pandas-UDF kernels (the ``*_batch``
+factories in functions/hashes.py) are not exported here.
 """
 
 from clinvar_pipeline_spark.functions.sets import (

@@ -1,17 +1,17 @@
-"""Text expressions: term-name normalization (JVM-side), UTF-8
-byte-budget truncation and width-bucketed packing (Arrow pandas UDFs —
-the only two operators in the engine whose exact semantics ``substring``
-/ higher-order functions cannot express, SURVEY §2.8)."""
+"""Text expressions: term-name normalization, UTF-8 byte-budget
+truncation and width-bucketed packing. All three are plain Catalyst
+expressions (SURVEY §2.8): the trim cuts the UTF-8 encoding with a
+binary ``substring`` and backs off to the last whole character with
+``is_valid_utf8``; the packer is one ``aggregate`` fold over the sorted
+elements. ``byte_trim_py`` and ``pack_py`` are their Python reference
+implementations, which the tests compare them against."""
 
 from __future__ import annotations
 
 from typing import List, Optional
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import ArrayType, StringType
 
 from clinvar_pipeline_spark.config import TRIM_SUFFIX
 
@@ -38,61 +38,118 @@ def normalize_term_key(name: Column | str) -> Column:
 # Oracle VARCHAR2(4000 BYTE) parity: a string whose UTF-8 encoding
 # exceeds `budget` bytes is cut (never splitting a multibyte sequence)
 # so that trimmed + " ..." fits in `budget`, and " ..." is appended to
-# signal truncation. `substring` is char-based so it cannot express
-# this; octet_length can only test. Vectorized over Arrow batches.
+# signal truncation.
 # ---------------------------------------------------------------------------
 
-def _byte_trim_py(s: Optional[str], budget: int, suffix: str = TRIM_SUFFIX) -> Optional[str]:
+_SUFFIX_BYTES = len(TRIM_SUFFIX.encode("utf-8"))
+
+
+def _keep_bytes(budget: int) -> int:
+    """Bytes of the original string an over-budget value keeps."""
+    if budget < _SUFFIX_BYTES:
+        raise ValueError(
+            f"byte budget {budget} is below the {_SUFFIX_BYTES}-byte"
+            f" truncation suffix {TRIM_SUFFIX!r}"
+        )
+    return budget - _SUFFIX_BYTES
+
+
+def byte_trim(col: Column | str, budget: int) -> Column:
+    """Column expression form of the byte-budget trim. A row within
+    budget passes through unchanged; ``CASE WHEN`` evaluates the cut
+    only for rows over it. The cut takes the first ``keep`` bytes of
+    the UTF-8 encoding and, when that splits a character, backs off one
+    byte at a time: a character is at most 4 bytes, so one of ``keep``,
+    ``keep - 1``, ``keep - 2``, ``keep - 3`` ends on a character
+    boundary, and the longest such prefix is the one kept. Raises
+    ``ValueError`` when ``budget`` cannot hold the suffix."""
+    keep = _keep_bytes(budget)
+    c = _col(col)
+    raw = F.encode(c, "utf-8")
+    cuts = [F.substring(raw, 1, keep - k).cast("string") for k in range(4)]
+    body = F.when(F.is_valid_utf8(cuts[0]), cuts[0])
+    for cut in cuts[1:3]:
+        body = body.when(F.is_valid_utf8(cut), cut)
+    body = body.otherwise(cuts[3])
+    return F.when(F.octet_length(c) <= F.lit(budget), c).otherwise(
+        F.concat(body, F.lit(TRIM_SUFFIX))
+    )
+
+
+def byte_trim_py(s: Optional[str], budget: int) -> Optional[str]:
+    """Python reference implementation of :func:`byte_trim`."""
+    keep = _keep_bytes(budget)
     if s is None:
         return None
     raw = s.encode("utf-8")
     if len(raw) <= budget:
         return s
-    keep = budget - len(suffix.encode("utf-8"))
     # cut at the byte budget, dropping any trailing incomplete multibyte
     # sequence (input is valid UTF-8, so 'ignore' only ever drops that)
-    return raw[:keep].decode("utf-8", errors="ignore") + suffix
-
-
-def byte_trim(col: Column | str, budget: int) -> Column:
-    """Column expression form of the byte-budget trim. Fast path: rows
-    already within budget bypass Python entirely via ``octet_length``
-    guard (the UDF only ever sees rows that might need cutting)."""
-
-    @pandas_udf(StringType())
-    def _trim(s: pd.Series) -> pd.Series:
-        return s.map(lambda v: _byte_trim_py(v, budget))
-
-    c = _col(col)
-    return F.when(F.octet_length(c) <= F.lit(budget), c).otherwise(_trim(c))
-
-
-def byte_trim_py(s: Optional[str], budget: int) -> Optional[str]:
-    """Python-level reference implementation (exported for golden tests
-    and driver-side use)."""
-    return _byte_trim_py(s, budget)
+    return raw[:keep].decode("utf-8", errors="ignore") + TRIM_SUFFIX
 
 
 # ---------------------------------------------------------------------------
 # Width-bucketed packing (A3, AnnotCache.java:136-167,213-244).
 #
 # A merged sorted set whose `|`-joined serialization would exceed a
-# byte width is split into multiple rows, each row's serialization
-# ≤ width. The reference splits the *sorted joined string* at the last
-# '|' before the limit — i.e. greedy left-to-right packing of sorted
-# elements. Deterministic: same input set → same buckets.
+# width is split into multiple rows, each row's serialization ≤ width.
+# The reference splits the *sorted joined string* at the last '|'
+# before the limit — i.e. greedy left-to-right packing of sorted
+# elements. Deterministic: same input set → same buckets. Lengths are
+# counted in characters.
 # ---------------------------------------------------------------------------
 
-def _pack_py(items: Optional[List[str]], width: int, joiner: str = "|") -> Optional[List[List[str]]]:
+_JOINER = "|"
+
+
+def pack_width_buckets(col: Column | str, width: int) -> Column:
+    """array<string> → array<array<string>>: greedy packing of the
+    sorted deduped elements into buckets whose ``|``-joined length is
+    ≤ ``width``; an element longer than ``width`` gets a bucket of its
+    own. ``[[]]`` for an empty array, null for a null one; elements
+    must be non-null. Explode the result to materialize the split rows.
+
+    A set whose joined form fits is returned as its one bucket. Any
+    other runs one ``aggregate`` fold whose state is the finished
+    buckets, the open bucket and the open bucket's joined length."""
+    elems = F.sort_array(F.array_distinct(_col(col)))
+    start = F.struct(
+        F.array().cast("array<array<string>>").alias("done"),
+        F.array().cast("array<string>").alias("cur"),
+        F.lit(0).alias("n"),
+    )
+
+    def step(acc: Column, e: Column) -> Column:
+        n = F.length(e)
+        grown = acc["n"] + len(_JOINER) + n
+        empty = F.size(acc["cur"]) == 0
+        full = ~empty & (grown > width)
+        return F.struct(
+            F.when(full, F.concat(acc["done"], F.array(acc["cur"])))
+            .otherwise(acc["done"])
+            .alias("done"),
+            F.when(full, F.array(e)).otherwise(F.concat(acc["cur"], F.array(e))).alias("cur"),
+            F.when(full | empty, n).otherwise(grown).alias("n"),
+        )
+
+    packed = F.aggregate(
+        elems, start, step, lambda acc: F.concat(acc["done"], F.array(acc["cur"]))
+    )
+    return F.when(
+        F.length(F.array_join(elems, _JOINER)) <= width, F.array(elems)
+    ).otherwise(packed)
+
+
+def pack_py(items: Optional[List[str]], width: int) -> Optional[List[List[str]]]:
+    """Python reference implementation of :func:`pack_width_buckets`."""
     if items is None:
         return None
-    elems = sorted(set(items))
     buckets: List[List[str]] = []
     cur: List[str] = []
     cur_len = 0
-    jlen = len(joiner)
-    for e in elems:
-        add = len(e) if not cur else cur_len + jlen + len(e)
+    for e in sorted(set(items)):
+        add = len(e) if not cur else cur_len + len(_JOINER) + len(e)
         if cur and add > width:
             buckets.append(cur)
             cur, cur_len = [e], len(e)
@@ -101,20 +158,3 @@ def _pack_py(items: Optional[List[str]], width: int, joiner: str = "|") -> Optio
     if cur or not buckets:
         buckets.append(cur)
     return buckets
-
-
-def pack_width_buckets(col: Column | str, width: int) -> Column:
-    """array<string> → array<array<string>>: greedy packing of the
-    sorted deduped elements into buckets whose ``|``-joined length is
-    ≤ ``width``. Explode the result to materialize the split rows."""
-
-    @pandas_udf(ArrayType(ArrayType(StringType())))
-    def _pack(s: pd.Series) -> pd.Series:
-        return s.map(lambda v: _pack_py(list(v) if v is not None else None, width))
-
-    return _pack(_col(col))
-
-
-def pack_py(items: Optional[List[str]], width: int) -> Optional[List[List[str]]]:
-    """Python-level reference implementation for golden tests."""
-    return _pack_py(items, width)

@@ -423,12 +423,14 @@ def annotate_run(
         v_annots.unionByName(human_gene).unionByName(homolog_annots)
     ).localCheckpoint(eager=True)
 
+    # one job: the annot_diff write and the counters both read it, and
+    # an unmaterialized diff re-runs its full outer join for each
     diff = diff_sync(
         incoming,
         existing_annotations,
         key_cols=ANNOT_KEY,
         compare_cols=["xref_source", "notes"],
-    )
+    ).localCheckpoint(eager=True)
 
     # W5: per-aspect guarded stale delete, wired into the output state
     # (round-2 fix — the breaker used to be computed but the returned

@@ -121,24 +121,42 @@ class Snapshot:
     aliases: DataFrame
 
 
+# snapshot table -> its DDL: the empty first-run state and every read
+SNAPSHOT_SCHEMAS = {
+    "variants": VARIANTS_SCHEMA,
+    "xdb_ids": XDB_IDS_SCHEMA,
+    "gene_associations": GENE_ASSOC_SCHEMA,
+    "map_positions": MAP_POS_SCHEMA,
+    "hgvs_names": HGVS_SCHEMA,
+    "aliases": ALIASES_SCHEMA,
+}
+# the same, for a snapshot --addRsIds wrote: its variants carry rs_id
+RS_SNAPSHOT_SCHEMAS = {
+    **SNAPSHOT_SCHEMAS,
+    "variants": f"{VARIANTS_SCHEMA}, rs_id string",
+}
+
+
 def empty_snapshot(spark: SparkSession) -> Snapshot:
     return Snapshot(
-        variants=rows_frame(spark, [], VARIANTS_SCHEMA),
-        xdb_ids=rows_frame(spark, [], XDB_IDS_SCHEMA),
-        gene_associations=rows_frame(spark, [], GENE_ASSOC_SCHEMA),
-        map_positions=rows_frame(spark, [], MAP_POS_SCHEMA),
-        hgvs_names=rows_frame(spark, [], HGVS_SCHEMA),
-        aliases=rows_frame(spark, [], ALIASES_SCHEMA),
+        **{name: rows_frame(spark, [], ddl) for name, ddl in SNAPSHOT_SCHEMAS.items()}
     )
 
 
-def read_snapshot(spark: SparkSession, path: str) -> Snapshot:
+def read_snapshot(
+    spark: SparkSession, path: str, schemas: dict[str, str] = SNAPSHOT_SCHEMAS
+) -> Snapshot:
     """S6 (Dao.java:80-127,303-313): the 'current DB state' source —
-    the previous run's Parquet snapshot replaces the Oracle reads."""
+    the previous run's Parquet snapshot replaces the Oracle reads.
+
+    Every table is read with its declared schema, so the read runs no
+    Spark job (an undeclared Parquet read runs one to infer it). A
+    reader that consumes rs ids passes ``RS_SNAPSHOT_SCHEMAS``: on a
+    snapshot written before --addRsIds, ``rs_id`` reads as null."""
     return Snapshot(
         **{
-            f.name: spark.read.parquet(f"{path}/{f.name}")
-            for f in fields(Snapshot)
+            name: spark.read.schema(ddl).parquet(f"{path}/{name}")
+            for name, ddl in schemas.items()
         }
     )
 
@@ -789,8 +807,9 @@ def collection_values(df: DataFrame) -> DataFrame:
     column, split every non-blank incoming value on '|', TreeSet the
     non-empty parts, join them with the column's joiner and trim to its
     byte budget; null when no part survives. The reference runs three
-    global passes; here all three are one groupBy, and their trims one
-    Arrow pass. Returns (rgd_id, notes, trait_name, submitter)."""
+    global passes; here all three are one groupBy, and their trims JVM
+    expressions over its result. Returns (rgd_id, notes, trait_name,
+    submitter)."""
     parts = {
         c: F.when(
             F.col(c).isNotNull() & (F.trim(c) != ""),

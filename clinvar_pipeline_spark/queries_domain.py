@@ -303,11 +303,12 @@ def q_notes_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M6 (NotesCollection.java:36-84) + M9 (Manager.java:148-183):
     per-entity global notes aggregation — split, TreeSet-dedup+sort,
     '; '-join — then the Oracle VARCHAR2 byte-budget trim with ' ...'
-    suffix (pandas UDF; ASCII data lets DuckDB express the oracle with
-    char arithmetic).
+    suffix (a JVM expression; ASCII data lets DuckDB express the oracle
+    with char arithmetic).
 
-    Scale: collect_set partially aggregates map-side; the pandas UDF
-    only sees rows over budget (octet_length fast path)."""
+    Scale: collect_set partially aggregates map-side; the trim's cut
+    runs only on rows over budget (an octet_length CASE WHEN), and the
+    plan has no Python stage."""
     e = _t(spark, sf_dir, "events")
     note = F.concat_ws(
         ":", F.col("event_type"), F.floor("value").cast("int").cast("string")
@@ -398,9 +399,11 @@ _PACK_WIDTH = 16
 def q_width_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A3 (AnnotCache.java:136-167,213-244): greedy left-to-right
     packing of a sorted merged set into buckets whose '|'-joined
-    serialization fits the byte width, exploded into split rows.
-    The pandas-UDF packer is deterministic; DuckDB mirrors it with a
-    recursive CTE walking the sorted items."""
+    serialization fits the width (in characters), exploded into split
+    rows.
+    The packer is one JVM ``aggregate`` fold over the sorted items
+    (no Python stage); DuckDB mirrors it with a recursive CTE walking
+    them."""
     e = _t(spark, sf_dir, "events")
     sets = e.groupBy("user_id").agg(F.collect_set("event_type").alias("vals"))
     packed = sets.select(

@@ -5,8 +5,8 @@ Defaults are chosen for correctness-at-scale first:
   same declarative plans survive a 100x scale-up without re-tuning.
 - UTC session timezone so timestamp semantics match the DuckDB oracle
   and are cluster-location-independent.
-- Arrow enabled for the few pandas-UDF operators (byte-budget trim,
-  width packing, embedding kernels) — everything else stays JVM-side.
+- Arrow enabled for the few pandas-UDF operators (embedding, hash and
+  codec kernels) — everything else stays JVM-side.
 """
 
 from __future__ import annotations

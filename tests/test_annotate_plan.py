@@ -216,3 +216,38 @@ def test_stale_annot_guard_abort_keeps_existing(spark, inputs, result):
         F.col("annotated_object_rgd_id") >= 7777
     ).count()
     assert kept_extras == 30
+
+
+def test_counters_equal_plain_recount(spark, inputs, tmp_path):
+    """The annotation diff is computed once, and the ANNOTATIONS_*
+    counters are one groupBy over that checkpoint; they equal a plain
+    groupBy over the annot_diff that lands, on a first run (INSERTs)
+    and a re-run (UNCHANGED)."""
+    existing = inputs["existing_annotations"]
+    for run in ("first", "rerun"):
+        res = annotate_run(**{**inputs, "existing_annotations": existing})
+        # materialized: the write and the counters do not re-run the join
+        assert "Join" not in res.annot_diff._jdf.queryExecution().executedPlan().toString()
+        path = str(tmp_path / run)
+        res.annot_diff.write.parquet(path)
+        want = {
+            f"ANNOTATIONS_{r['change_type']}": r["count"]
+            for r in spark.read.parquet(path).groupBy("change_type").count().collect()
+        }
+        got = {r["counter"]: r["value"] for r in res.counters.collect()}
+        assert got == want, run
+        existing = res.annotations
+    assert set(got) == {"ANNOTATIONS_UNCHANGED"}
+
+
+def test_annotate_runs_no_python(spark, inputs):
+    """annotate_run's jobs, the merged-and-split ``incoming`` checkpoint
+    (the width packing) among them, run no Python-eval stage."""
+    from tests.test_load_plan import executed_plans, python_stages
+
+    def run():
+        annotate_run(**inputs).counters.collect()
+
+    plans = executed_plans(spark, run)
+    assert any("Generate" in p for p in plans)  # the bucket explodes
+    assert python_stages(plans) == 0

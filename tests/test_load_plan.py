@@ -8,6 +8,9 @@ from pyspark.sql import functions as F
 
 from clinvar_pipeline_spark.operators.diff_sync import CHANGE_COL
 from clinvar_pipeline_spark.plans.load import (
+    RS_SNAPSHOT_SCHEMAS,
+    SNAPSHOT_SCHEMAS,
+    Snapshot,
     empty_snapshot,
     load_run,
     read_snapshot,
@@ -402,3 +405,111 @@ def test_list_built_load_frames_skip_python_workers(spark, archive):
     assert not _python_rdd_in_lineage(build_incoming_map_positions(inc))
     # the guard: a list-built frame does show up
     assert _python_rdd_in_lineage(spark.createDataFrame([(1,)], "a int"))
+
+
+def _fields(schema):
+    return [(f.name, f.dataType) for f in schema.fields]
+
+
+def test_declared_snapshot_schemas_equal_inferred(spark, archive, genes_dim, tmp_path):
+    """read_snapshot declares each table's schema instead of inferring
+    it; on what write_snapshot lands, a first run and a re-run, the
+    declared and the inferred reads agree on field names, order and
+    types. So does the rs_id-carrying read of an --addRsIds snapshot."""
+    from clinvar_pipeline_spark.plans.vcf import assign_rs_from_xdb
+
+    snap = empty_snapshot(spark)
+    for run in ("first", "rerun"):
+        path = str(tmp_path / run)
+        write_snapshot(load_run(archive, snap, genes_dim).snapshot, path)
+        snap = read_snapshot(spark, path)
+        for name in SNAPSHOT_SCHEMAS:
+            inferred = spark.read.parquet(f"{path}/{name}").schema
+            assert _fields(getattr(snap, name).schema) == _fields(inferred), (run, name)
+    rs_path = str(tmp_path / "with_rs")
+    write_snapshot(
+        Snapshot(**{**snap.__dict__, "variants": assign_rs_from_xdb(snap.variants, snap.xdb_ids)}),
+        rs_path,
+    )
+    rs_snap = read_snapshot(spark, rs_path, RS_SNAPSHOT_SCHEMAS)
+    for name in RS_SNAPSHOT_SCHEMAS:
+        inferred = spark.read.parquet(f"{rs_path}/{name}").schema
+        assert _fields(getattr(rs_snap, name).schema) == _fields(inferred), name
+    assert rs_snap.variants.filter(F.col("rs_id").isNotNull()).count() > 0
+
+
+def test_read_snapshot_runs_no_job(spark, tmp_path):
+    """A declared-schema read plans without touching the files; an
+    undeclared one runs a Parquet schema-inference job per table."""
+    sc = spark.sparkContext
+    path = str(tmp_path / "snap")
+    write_snapshot(empty_snapshot(spark), path)
+
+    def jobs_of(group, action):
+        sc.setJobGroup(group, group)
+        try:
+            action()
+        finally:
+            for prop in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+                sc.setLocalProperty(prop, None)
+        return sc.statusTracker().getJobIdsForGroup(group)
+
+    assert jobs_of("read-snapshot-declared", lambda: read_snapshot(spark, path)) == []
+    assert jobs_of(
+        "read-snapshot-rs", lambda: read_snapshot(spark, path, RS_SNAPSHOT_SCHEMAS)
+    ) == []
+    # the guard: the same table read without a schema does run one
+    assert jobs_of(
+        "read-snapshot-inferred", lambda: spark.read.parquet(f"{path}/variants")
+    ) != []
+
+
+def executed_plans(spark, action) -> list[str]:
+    """The physical plans of the SQL executions ``action`` ran, as the
+    SQL status store records them (with or without a UI)."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    execs = store.executionsList()
+    before = execs.last().executionId() if execs.size() else -1
+    action()
+    execs = store.executionsList()
+    plans = []
+    for i in range(execs.size() - 1, -1, -1):
+        e = execs.apply(i)
+        if e.executionId() <= before:
+            break
+        plans.append(e.physicalPlanDescription())
+    return plans
+
+
+def python_stages(plans: list[str]) -> int:
+    from clinvar_pipeline_spark.audit import plan_signature
+
+    return sum(plan_signature(p).get("python", 0) for p in plans)
+
+
+def test_load_and_variants_write_run_no_python(spark, archive, genes_dim, first_run, tmp_path):
+    """The load phase of a nightly, through the variants write (the
+    collections' byte trims), runs no Python-eval stage: no Python
+    worker starts."""
+    from pyspark.sql.functions import pandas_udf
+
+    def load_and_write():
+        res = load_run(archive, first_run.snapshot, genes_dim)
+        res.snapshot.variants.write.parquet(str(tmp_path / "variants"))
+
+    plans = executed_plans(spark, load_and_write)
+    assert any("InsertIntoHadoopFsRelationCommand" in p for p in plans)
+    assert python_stages(plans) == 0
+
+    # the guard: a pandas UDF in a write shows up in its executed plan
+    @pandas_udf("string")
+    def same(s):
+        return s
+
+    guard = executed_plans(
+        spark,
+        lambda: spark.range(1)
+        .select(same(F.lit("x")).alias("x"))
+        .write.parquet(str(tmp_path / "guard")),
+    )
+    assert python_stages(guard) == 1

@@ -2,10 +2,11 @@
 algebra, byte-trim and width-split invariants.
 
 Python-level properties run hundreds of examples against the exported
-reference implementations (byte_trim_py / pack_py — the same code the
-pandas UDFs wrap). Spark-level properties batch each hypothesis example
-set into ONE DataFrame so the JVM round-trip cost is paid per example
-set, not per case."""
+reference implementations (byte_trim_py / pack_py), and Spark-level
+properties check the JVM expressions (byte_trim / pack_width_buckets)
+equal them. Spark-level properties batch each hypothesis example set
+into ONE DataFrame so the JVM round-trip cost is paid per example set,
+not per case."""
 
 from __future__ import annotations
 
@@ -16,11 +17,16 @@ from clinvar_pipeline_spark.functions.sets import (
     merge_pipe_sets,
     merge_pipe_sets_ci,
 )
-from clinvar_pipeline_spark.functions.text import byte_trim_py, pack_py
+from clinvar_pipeline_spark.functions.text import (
+    byte_trim,
+    byte_trim_py,
+    pack_py,
+    pack_width_buckets,
+)
 from clinvar_pipeline_spark.operators.diff_sync import apply_diff, diff_sync
 
 # ---------------------------------------------------------------------
-# M9 byte-budget trim (pure Python twin of the pandas UDF)
+# M9 byte-budget trim: the Python reference, then the JVM expression
 # ---------------------------------------------------------------------
 
 texts = st.text(max_size=200)
@@ -47,8 +53,41 @@ def test_byte_trim_idempotent(s, budget):
     assert byte_trim_py(once, budget) == once
 
 
+# 1- to 4-byte characters, so cuts land inside every multibyte width
+WIDE_CHARS = ["a", "é", "€", "中", "😀", "𝄞"]
+trim_texts = st.lists(
+    st.one_of(
+        st.none(),
+        st.text(alphabet=st.sampled_from(WIDE_CHARS), max_size=30),
+        st.text(max_size=30),
+    ),
+    min_size=1,
+    max_size=20,
+)
+
+
+def _trim_edges(budget):
+    keep = budget - 4
+    edges = [None, "", "a" * budget, "a" * (budget + 1), "é" * budget]
+    # a 2-, 3- and 4-byte character starting at each offset before the cut
+    for ch in WIDE_CHARS[1:]:
+        for off in range(1, len(ch.encode("utf-8")) + 1):
+            edges.append("a" * max(keep - off, 0) + ch * 3)
+    return edges
+
+
+@settings(max_examples=25, deadline=None)
+@given(trim_texts, st.integers(min_value=4, max_value=24))
+def test_byte_trim_spark_matches_reference(spark, cases, budget):
+    rows = cases + _trim_edges(budget) + _trim_edges(4)
+    df = spark.createDataFrame([(s,) for s in rows], "s string")
+    got = df.select(byte_trim("s", budget).alias("t"), byte_trim("s", 4).alias("t4")).collect()
+    assert [r["t"] for r in got] == [byte_trim_py(s, budget) for s in rows]
+    assert [r["t4"] for r in got] == [byte_trim_py(s, 4) for s in rows]
+
+
 # ---------------------------------------------------------------------
-# A3 width-bucketed split (pure Python twin of the pandas UDF)
+# A3 width-bucketed split: the Python reference, then the JVM expression
 # ---------------------------------------------------------------------
 
 elements = st.lists(
@@ -69,6 +108,37 @@ def test_pack_respects_width(items, width):
     # joined serialization must respect the width
     for b in pack_py(items, width):
         assert len("|".join(b)) <= width or len(b) <= 1
+
+
+# multibyte elements: a character count that differs from the byte count
+pack_arrays = st.lists(
+    st.one_of(
+        st.none(),
+        st.lists(
+            st.text(alphabet=st.sampled_from(WIDE_CHARS + ["b", "c"]), max_size=6),
+            max_size=12,
+        ),
+    ),
+    min_size=1,
+    max_size=15,
+)
+
+
+@settings(max_examples=25, deadline=None)
+@given(pack_arrays, st.integers(min_value=1, max_value=30))
+def test_pack_width_buckets_spark_matches_reference(spark, cases, width):
+    rows = cases + [
+        None,
+        [],
+        ["b", "a", "b", "a", "c"],  # duplicates
+        ["x" * (width + 1), "a", "b"],  # one element over the width
+        # "a|éé…" fills the first bucket in characters but not in bytes
+        ["a", "é" * (width - 2), "中" * (width + 1)],
+        ["😀" * width, "a"],
+    ]
+    df = spark.createDataFrame([(a,) for a in rows], "a array<string>")
+    got = [r["p"] for r in df.select(pack_width_buckets("a", width).alias("p")).collect()]
+    assert got == [pack_py(a, width) for a in rows]
 
 
 # ---------------------------------------------------------------------

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from clinvar_pipeline_spark.functions.text import (
@@ -38,6 +39,15 @@ class TestByteTrimPy:
 
     def test_exact_budget(self):
         assert byte_trim_py("abcd", 4) == "abcd"
+
+    def test_budget_below_suffix_rejected(self):
+        # a negative keep would slice from the end: "abcde ..." for 3
+        for budget in (3, 0, -1):
+            with pytest.raises(ValueError, match="below"):
+                byte_trim_py("abcdef", budget)
+            with pytest.raises(ValueError, match="below"):
+                byte_trim("s", budget)
+        assert byte_trim_py("abcdef", 4) == " ..."
 
 
 class TestByteTrimSpark:
