@@ -14,7 +14,6 @@ release everything after the dependent plans materialize via
 
 from __future__ import annotations
 
-import os
 from typing import Any, Callable, Hashable
 
 from pyspark.sql import DataFrame
@@ -73,57 +72,11 @@ def clear_memo() -> int:
     return n
 
 
-def register_persist(df: DataFrame, eager: bool = False) -> DataFrame:
-    """Persist ``df`` and remember it for :func:`release_cached`.
-
-    ``eager=True`` marks a frame that feeds MULTIPLE independent
-    branch stages of one downstream action: Spark submits ready
-    stages concurrently, and sibling stages that start before the
-    lazy cache fills each recompute the frame's full lineage
-    (measured r11: ngram_jaccard_pairs ran the tokenize+shingle
-    pipeline 4x per invocation — 43 s executor time for 2.4 s wall;
-    stage_profile showed four identical 2.2 MB-input scan stages).
-
-    Whether the mark actually materializes the cache NOW (one
-    ``count()`` job — a full pass that fills every partition's block;
-    InMemoryRelation caches whole rows regardless of which columns
-    the counting plan reads) is a DEPLOYMENT profile, not a plan
-    property, so it rides an env switch:
-
-    - ``SPARK_GRAFT_EAGER_PERSIST=1`` (cluster profile): serialize
-      [build cache] before [consume]. On a saturated cluster the
-      (branches-1) redundant lineage passes are paid in real
-      throughput, so one barrier pass is cheaper in total work.
-    - unset (local default): leave the persist lazy and let the
-      sibling branches race. The r11 A/B (tools/ab_eager.py, sf0.1,
-      min-of-3-warm) measured the barrier as a pure wall-time LOSS on
-      an underloaded local box — 32 cores: lazy wins every one of the
-      7 marked queries by 10-25% (e.g. langid 1.76 vs 2.13 s,
-      shingle_containment 1.54 vs 1.97 s); 8 cores: a wash (|delta|
-      <= 0.2 s, mixed signs) — because the redundant passes overlap
-      on otherwise-idle cores while the eager count() is a serial
-      extra job. Defaulting lazy keeps the driver's bench honest at
-      both of its core counts; the eager profile is for deployments
-      where executor-time is the budget.
-
-    Who gets the mark (r12 rule, from the saturated-core A/B —
-    4 Spark cores + 28 busy burners, tools/ab_eager_saturated.py):
-    eager wins only where the CACHED FRAME IS SMALL RELATIVE TO ITS
-    LINEAGE (validated: perplexity chain, langid — whose site was
-    later deleted outright by the r12 one-exchange restructure, the
-    strictly better outcome than either profile —, duplicate_spans,
-    bloom_decontaminate, class_centroid_outliers, hll_overlap). Where
-    the frame is a big exploded shingle/token stream, filling the
-    cache plus the serial count() costs more than the race even
-    under saturation (measured and REJECTED: decontaminate,
-    eval_leak_report, filter_funnel's qtok, the quality voc) — see
-    plans/r12/eager_saturated_*.json. Don't mark from an idle-box
-    profile alone; it overstates the race.
-    """
+def register_persist(df: DataFrame) -> DataFrame:
+    """Persist ``df`` (lazily: the blocks fill on the first action that
+    reads it) and remember it for :func:`release_cached`."""
     df = df.persist()
     _PERSISTED.append(df)
-    if eager and os.environ.get("SPARK_GRAFT_EAGER_PERSIST") == "1":
-        df.count()
     return df
 
 

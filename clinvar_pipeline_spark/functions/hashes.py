@@ -10,7 +10,6 @@ matters (MinHash permutations), being ~5x faster.
 from __future__ import annotations
 
 import random
-from typing import Sequence
 
 import numpy as np
 import pandas as pd
@@ -147,30 +146,6 @@ def minhash_signature(
     return F.aggregate(shingle_arr, init, merge)
 
 
-def band_keys(signature: Column, bands: int, rows: int) -> Column:
-    """LSH banding: split a MinHash signature into ``bands`` bands of
-    ``rows`` values; each band becomes ``(band_idx, xxhash64(joined))``.
-    Explode the result and groupBy the key to find candidate pairs —
-    the join is on band hash, never all-pairs.
-
-    REFERENCE-ONLY since r4: the shipped pipeline fuses banding into
-    :func:`minhash_band_buckets_batch` (per-band expression chains
-    measured ~1s at 69 bands x 5k docs); this expression form is kept
-    for composition inside pure-SQL plans and as the documented
-    alternative — it is not called by operators/dedup.py."""
-    return F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.xxhash64(
-                    F.concat_ws(",", F.slice(signature, b * rows + 1, rows).cast("array<string>"))
-                ).alias("bucket"),
-            )
-            for b in range(bands)
-        ]
-    )
-
-
 def simhash64(col: Column | str) -> Column:
     """64-bit SimHash of a text column, JVM-side.
 
@@ -205,11 +180,6 @@ def simhash64(col: Column | str) -> Column:
     return F.aggregate(weighted, F.lit(0).cast("long"), lambda acc, v: acc + v)
 
 
-def hamming64(a: Column | str, b: Column | str) -> Column:
-    """Hamming distance between two 64-bit simhashes (bit_count of XOR)."""
-    return F.bit_count(_col(a).bitwiseXOR(_col(b)))
-
-
 def cosine_similarity(a: Column | str, b: Column | str) -> Column:
     """Cosine similarity of two array<float|double> columns, computed in
     double with sequential aggregation (matches DuckDB
@@ -237,10 +207,7 @@ def hyperplane_bucket_arrays(
     embedding column to an array of ``num_tables`` bucket ids in one
     numpy matmul per Arrow batch (V @ P.T -> sign bits -> ints).
 
-    Table t's plane matrix is random.Random(seed + t) — identical to
-    ``random_hyperplane_buckets(seed=seed+t)``, so the two formulations
-    are interchangeable. The expression form exists for composition
-    inside pure-SQL plans; this batch form is the hot path: evaluating
+    Table t's plane matrix is random.Random(seed + t). Evaluating
     num_tables * num_planes interpreted zip_with/aggregate chains per
     row costs ~1000x more than one BLAS matmul over the Arrow batch."""
     from pyspark.sql.functions import pandas_udf
@@ -312,7 +279,7 @@ def _splitmix64(z: "np.ndarray") -> "np.ndarray":
 
 def _batch_min_sigs(
     sh: "pd.Series", seeds: "np.ndarray", empty_sig: "np.ndarray"
-) -> "tuple[np.ndarray, np.ndarray]":
+) -> "np.ndarray":
     """MinHash signature matrix (n_docs x num_hashes, uint64) for a
     whole Arrow batch of shingle arrays.
 
@@ -323,10 +290,7 @@ def _batch_min_sigs(
     order-independent. The python-level blake2b loop — the dominant
     kernel cost on any corpus with cross-document repetition — now
     runs once per distinct string instead of once per occurrence.
-
-    Returns ``(sigs, lens)``: callers that treat empty-shingle rows
-    specially (minhash_signature_batch's unshifted sentinel) mask on
-    ``lens == 0``."""
+    Empty-shingle rows get ``empty_sig``."""
     n_out = len(sh)
     lens = np.zeros(n_out, dtype=np.int64)
     flat: list = []
@@ -337,7 +301,7 @@ def _batch_min_sigs(
     sigs = np.empty((n_out, len(seeds)), dtype=np.uint64)
     if not flat:
         sigs[:] = empty_sig
-        return sigs, lens
+        return sigs
     codes, uniques = pd.factorize(np.asarray(flat, dtype=object))
     uh = np.array(
         [_blake64(s.encode("utf-8")) for s in uniques], dtype=np.uint64
@@ -361,45 +325,7 @@ def _batch_min_sigs(
         base = hflat[pos : pos + n]
         pos += n
         sigs[j] = _splitmix64(base[:, None] ^ seeds[None, :]).min(axis=0)
-    return sigs, lens
-
-
-def minhash_signature_batch(num_hashes: int = 64, seed: int = 42):
-    """Arrow-batched MinHash: array<string> shingles -> array<long>
-    signature. Each shingle hashes ONCE (blake2b/8); the ``num_hashes``
-    permutations are splitmix64(x ^ seed_i) — one numpy (n x H) matrix
-    min per document, no per-permutation string hashing.
-
-    Hot-path twin of the expression form :func:`minhash_signature`
-    (same algorithm family, different hash constants): evaluating H
-    interpreted zip_with chains per shingle costs ~100x more than the
-    vectorized matrix. Values are deterministic but NOT equal between
-    the two forms — pick one per pipeline. The shipped LSH pipeline
-    uses :func:`minhash_band_buckets_batch` (banding fused in-kernel);
-    this standalone-signature form is the public API for callers that
-    need raw signatures (e.g. signature similarity estimation)."""
-    from pyspark.sql.functions import pandas_udf
-
-    rng = random.Random(seed)
-    seeds = np.array(
-        [rng.randrange(0, 1 << 64) for _ in range(num_hashes)], dtype=np.uint64
-    )
-    empty_sig = np.full(num_hashes, 1 << 62, dtype=np.uint64)
-
-    @pandas_udf("array<long>")
-    def sig(sh: pd.Series) -> pd.Series:
-        # distinct-shingle hashing per batch (see _batch_min_sigs) —
-        # bit-identical values, ~1/dup-rate of the blake2b calls.
-        # Empty-shingle rows keep this form's historical UNSHIFTED
-        # 1<<62 sentinel (the fused-banding kernel folds its sentinel
-        # instead; the two forms were never value-equal).
-        sigs, lens = _batch_min_sigs(sh, seeds, empty_sig)
-        shifted = (sigs >> np.uint64(1)).astype(np.int64)
-        if (lens == 0).any():
-            shifted[lens == 0] = empty_sig.astype(np.int64)
-        return pd.Series(list(shifted))
-
-    return sig
+    return sigs
 
 
 def minhash_band_buckets_batch(
@@ -410,12 +336,11 @@ def minhash_band_buckets_batch(
 
     Folding the banding into the kernel replaces ``bands`` interpreted
     slice/cast/concat/xxhash expression chains over the signature array
-    (the per-band cost of :func:`band_keys`, measured ~1s at 69 bands x
-    5k docs) with one vectorized fold, and shrinks the exploded frame's
-    source row from ``num_hashes`` to ``bands`` longs. Buckets combine
-    each band's ``rows`` signature values with a splitmix64 fold —
-    deterministic across runs/executors; join on (band_index, bucket)
-    via posexplode."""
+    (measured ~1s at 69 bands x 5k docs) with one vectorized fold, and
+    shrinks the exploded frame's source row from ``num_hashes`` to
+    ``bands`` longs. Buckets combine each band's ``rows`` signature
+    values with a splitmix64 fold — deterministic across
+    runs/executors; join on (band_index, bucket) via posexplode."""
     from pyspark.sql.functions import pandas_udf
 
     rows = num_hashes // bands
@@ -442,7 +367,7 @@ def minhash_band_buckets_batch(
         # once (pd.factorize, C-speed) and index back: bit-identical
         # signatures, and a near-dup corpus pays ~1/dup-rate of the
         # hash calls. The band fold is likewise lifted batch-wide.
-        sigs, _lens = _batch_min_sigs(sh, seeds, empty_sig)
+        sigs = _batch_min_sigs(sh, seeds, empty_sig)
         banded = sigs[:, : bands * rows].reshape(len(sigs), bands, rows)
         acc = np.zeros((len(sigs), bands), dtype=np.uint64)
         for r in range(rows):
@@ -507,45 +432,6 @@ def simhash64_batch():
         return pd.Series(out)
 
     return sim
-
-
-def random_hyperplane_buckets(
-    vec: Column | str, num_planes: int = 16, seed: int = 42, dim: int = 64
-) -> Column:
-    """LSH bucket id for an embedding via deterministic pseudo-random
-    hyperplanes. Plane p component j = hash-derived value in [-1,1]
-    (xxhash64 of (p,j) — deterministic across runs/executors). Returns
-    an int bucket = sign-bit string of the ``num_planes`` projections.
-
-    This is the scale path for ANN: candidates are fetched per-bucket
-    (+ optional multi-probe) instead of scanning all vectors.
-
-    The plane matrix depends only on (seed, num_planes, dim), so it is
-    materialized driver-side as literal arrays — the projection is then
-    a plain zip_with/aggregate over constants (one multiply-add per
-    component), not per-row hash evaluation."""
-    v = _col(vec).cast("array<double>")
-    rng = random.Random(seed)
-    planes = [
-        [rng.uniform(-1.0, 1.0) for _ in range(dim)] for _ in range(num_planes)
-    ]
-
-    bits = []
-    for p, row in enumerate(planes):
-        proj = F.aggregate(
-            F.zip_with(
-                v,
-                F.array(*[F.lit(w) for w in row]),
-                lambda x, w: x * w,
-            ),
-            F.lit(0.0),
-            lambda acc, val: acc + val,
-        )
-        bits.append((proj > 0).cast("long") * F.lit(1 << p))
-    total = bits[0]
-    for b in bits[1:]:
-        total = total + b
-    return total
 
 
 CDC_BASE = 31

@@ -11,7 +11,7 @@ inside whole-stage codegen.
 
 from __future__ import annotations
 
-from typing import Iterable, Mapping
+from typing import Mapping
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -135,15 +135,3 @@ def newer_date(a: Column | str, b: Column | str) -> Column:
     newer non-null date."""
     ca, cb = _col(a), _col(b)
     return F.when(ca.isNull(), cb).when(cb.isNull(), ca).otherwise(F.greatest(ca, cb))
-
-
-def first_in_document_order(arr: Column | str) -> Column:
-    """First-wins pick (O4, Parser.java:107-120): arrays produced by the
-    extractor preserve XML document order, so 'first' is element 1."""
-    c = _col(arr)
-    return F.element_at(c, 1)
-
-
-def literal_str_set(values: Iterable[str]) -> Column:
-    """A literal array column from a Python set/list of strings."""
-    return F.array(*[F.lit(v) for v in sorted(values)])

@@ -1,7 +1,8 @@
 """Deduplication operators for large-scale corpora.
 
 Four tiers, cheapest-first (the standard 100 TB dedup funnel):
-1. exact: hash-groupBy on a content fingerprint — one shuffle.
+1. exact: hash-groupBy on a content fingerprint — one shuffle (the
+   registry's ``exact_dedup`` query).
 2. SimHash: 8-byte signature per doc; near-dups = small Hamming
    distance (bit-bucket join on rotated signatures for scale).
 3. MinHash + LSH: banded signature buckets; candidate pairs come from
@@ -23,40 +24,11 @@ from pyspark.sql import functions as F
 from clinvar_pipeline_spark.caching import register_persist
 from clinvar_pipeline_spark.functions.hashes import (
     jaccard,
-    md5_fingerprint,
     minhash_band_buckets_batch,
     normalized_tokens,
     shingles_of_tokens,
     simhash64_batch,
 )
-
-
-def exact_duplicates(
-    df: DataFrame, id_col: str, text_col: str
-) -> DataFrame:
-    """Groups of byte-identical documents: (fingerprint, n_docs,
-    keeper_id = min id). Shuffle carries only (fp, id)."""
-    keyed = df.select(
-        F.col(id_col).alias("id"), md5_fingerprint(F.col(text_col)).alias("fp")
-    )
-    return (
-        keyed.groupBy("fp")
-        .agg(F.count(F.lit(1)).alias("n_docs"), F.min("id").alias("keeper_id"))
-        .filter(F.col("n_docs") > 1)
-    )
-
-
-def dedup_exact(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Return df minus non-keeper exact duplicates (keeper = min id)."""
-    keyed = df.withColumn("_fp", md5_fingerprint(F.col(text_col)))
-    w_keep = (
-        keyed.groupBy("_fp").agg(F.min(id_col).alias("_keeper"))
-    )
-    return (
-        keyed.join(w_keep, on="_fp")
-        .filter(F.col(id_col) == F.col("_keeper"))
-        .drop("_fp", "_keeper")
-    )
 
 
 def minhash_lsh_candidate_pairs(
@@ -103,11 +75,7 @@ def minhash_lsh_candidate_pairs(
     # band self-join + the two jaccard-verify joins); without a persist
     # Spark recomputes tokenize->shingle->minhash once per branch
     # (released between repeated invocations via release_cached).
-    # eager: the branches are INDEPENDENT stages submitted concurrently,
-    # so a lazy cache still races — each sibling stage that starts
-    # before the blocks exist recomputes the Arrow kernel (r11
-    # stage_profile measurement; see register_persist docstring)
-    sig = register_persist(sig, eager=True)
+    sig = register_persist(sig)
     # empty-shingle docs (shorter than shingle_k tokens) all map to the
     # SAME constant signature in the kernel, so without this filter
     # every such pair collides in every band — O(n^2) candidates among

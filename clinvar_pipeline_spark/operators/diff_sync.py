@@ -124,19 +124,6 @@ def diff_sync(
     return joined.select(*out_cols)
 
 
-def diff_counters(diff: DataFrame, entity: str) -> DataFrame:
-    """Counter DataFrame (A6 pattern): per-change-type row counts with a
-    reference-style counter name, e.g. ``orders_INSERTED``."""
-    return (
-        diff.groupBy(CHANGE_COL)
-        .count()
-        .select(
-            F.concat(F.lit(entity + "_"), F.col(CHANGE_COL)).alias("counter"),
-            F.col("count").alias("value"),
-        )
-    )
-
-
 def apply_diff(diff: DataFrame, key_cols: Sequence[str], compare_cols: Sequence[str]) -> DataFrame:
     """Materialize the next snapshot from a diff: keep INSERT/UPDATE/
     UNCHANGED rows with incoming values; drop DELETEs. Together with

@@ -1,15 +1,11 @@
-"""Approximate aggregates (SURVEY §7.2 step 7): sketch-based distinct
-counts and quantiles for 100 TB-scale profiling, where exact answers
-cost a full shuffle of every distinct value.
+"""Approximate aggregates (SURVEY §7.2 step 7): sketch-based quantiles
+for 100 TB-scale profiling, where exact answers cost a full shuffle of
+every distinct value.
 
-Both wrappers compile to Spark's native sketch aggregates —
-HyperLogLog++ (`approx_count_distinct`) and a KLL-family quantile
-sketch (`percentile_approx`) — which partially aggregate map-side and
-merge fixed-size sketch state at the reducers: shuffle volume is
-O(groups * sketch_size), independent of cardinality. The exact twins
-(count(distinct ...), percentile(...)) are what the unit tests pin the
-sketches against (relative-error bounds), and what the oracle-backed
-`value_quantiles` query uses so DuckDB can verify values exactly.
+The fixed-bin histogram sketch below merges fixed-size register state
+at the reducers — shuffle volume is O(groups * bins), independent of
+cardinality — and, unlike Spark's engine-private ``percentile_approx``
+state, DuckDB recomputes it bit-for-bit.
 """
 
 from __future__ import annotations
@@ -18,36 +14,6 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def approx_distinct_counts(
-    df: DataFrame,
-    key_cols: Sequence[str],
-    value_col: str,
-    rsd: float = 0.05,
-) -> DataFrame:
-    """Per-group approximate distinct count (HyperLogLog++, relative
-    standard deviation ``rsd``). Exact twin: countDistinct."""
-    return df.groupBy(*key_cols).agg(
-        F.approx_count_distinct(value_col, rsd).alias("approx_distinct"),
-    )
-
-
-def approx_group_quantiles(
-    df: DataFrame,
-    key_cols: Sequence[str],
-    value_col: str,
-    probabilities: Sequence[float] = (0.25, 0.5, 0.75, 0.95),
-    accuracy: int = 10000,
-) -> DataFrame:
-    """Per-group approximate quantiles (positional-error sketch: rank
-    error <= 1/accuracy of the group size). Exact twin: percentile."""
-    probs = F.array(*[F.lit(float(p)) for p in probabilities])
-    return df.groupBy(*key_cols).agg(
-        F.percentile_approx(value_col, probs, F.lit(accuracy)).alias(
-            "approx_quantiles"
-        ),
-    )
 
 
 # ---------------------------------------------------------------------

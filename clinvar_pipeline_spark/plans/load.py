@@ -177,40 +177,6 @@ def write_snapshot(snap: Snapshot, path: str) -> None:
     run_concurrently(snap.variants.sparkSession, *[write(f.name) for f in fields(Snapshot)])
 
 
-def write_snapshot_bucketed(
-    snap: Snapshot, prefix: str, n_buckets: int = 32
-) -> None:
-    """Bucketed snapshot sink: every entity table saved as a managed
-    table ``<prefix>_<entity>``, bucketed AND sorted by ``rgd_id``.
-
-    This is the 100 TB nightly-diff layout: when both the previous
-    snapshot and the staged incoming release are bucketed by the diff
-    key, the full-outer diff_sync join plans with ZERO Exchange nodes —
-    the nightly run's only fact-fact shuffles disappear entirely
-    (asserted by tests/test_load_plan.py::test_bucketed_diff_is_shuffle_free).
-    Size ``n_buckets`` to the target parallelism, not the data: one
-    bucket ≈ one task per entity per run."""
-    for f in fields(Snapshot):
-        key = "variant_rgd_id" if f.name == "gene_associations" else "rgd_id"
-        df = getattr(snap, f.name)
-        df.sparkSession.sql(f"DROP TABLE IF EXISTS {prefix}_{f.name}")
-        (
-            df.write.mode("overwrite")
-            .bucketBy(n_buckets, key)
-            .sortBy(key)
-            .saveAsTable(f"{prefix}_{f.name}")
-        )
-
-
-def read_snapshot_bucketed(spark: SparkSession, prefix: str) -> Snapshot:
-    """Read a bucketed snapshot written by :func:`write_snapshot_bucketed`;
-    downstream joins/groupBys on ``rgd_id`` consume the bucketing
-    metadata and skip their shuffles."""
-    return Snapshot(
-        **{f.name: spark.table(f"{prefix}_{f.name}") for f in fields(Snapshot)}
-    )
-
-
 @dataclass
 class LoadResult:
     snapshot: Snapshot

@@ -866,11 +866,7 @@ def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # five plan branches read the exploded shingle index (both join
     # sides, two size lookups, the df counts) — persist so
     # tokenize+shingle runs once (released via release_cached()).
-    # eager (r11): the branches are independent stages submitted
-    # concurrently; a lazy cache races and each sibling recomputes the
-    # tokenize+shingle lineage — stage_profile showed FOUR identical
-    # 2.2 MB-input scan stages, 43 s executor time per invocation
-    sh = _persist(sh, eager=True)
+    sh = _persist(sh)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     hot = (
         sh.groupBy("shingle")

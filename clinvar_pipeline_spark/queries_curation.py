@@ -274,9 +274,8 @@ def q_class_centroid_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _spread(_t(spark, sf_dir, "embeddings")).select(
         "vec_id", "label", F.col("embedding").cast("array<double>").alias("v")
     )
-    # eager: centroid build + scoring scan share the cast — r12
-    # stage_profile showed two identical 1.1 MB-sw stages when lazy
-    e = _persist(e, eager=True)
+    # centroid build + scoring scan share the cast
+    e = _persist(e)
     ex = e.select("label", F.posexplode("v").alias("i", "x"))
     cent = ex.groupBy("label", "i").agg(
         (
@@ -544,9 +543,8 @@ def q_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.explode(shingles_of_tokens(F.col("toks"), k=_BLOOM_K)).alias("s"),
     )
-    # eager: eval build + training probe + sizes share it — r12
-    # stage_profile showed two identical 5.2 MB-sw stages when lazy
-    sh = _persist(sh, eager=True)
+    # eval build + training probe + sizes share it
+    sh = _persist(sh)
     is_eval = (F.col("doc_id") % 97 == 0) & (F.col("doc_id") < EVAL_ID_CAP)
     ev = sh.filter(is_eval).select("s").distinct()
     tr = sh.filter(~is_eval)

@@ -420,11 +420,7 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("doc_id", F.xxhash64("s").alias("s"))
     )
-    # NOT eager: the idle-box profile showed 3 identical 2.2 MB-input
-    # stages, but the r12 saturated A/B (4 cores + 28 burners, 4 reps)
-    # measured eager as a wash-to-loss (lazy median 1.28 s vs eager
-    # 1.39) — this frame is the BIG exploded shingle stream, so the
-    # cache fill + serial count() cost >= the de-duplicated lineage
+    # eval build + training probe both read the shingle stream
     sh = _persist(sh)
     ev = sh.filter(F.col("doc_id") % 97 == 0).select("s").distinct()
     tr = sh.filter(F.col("doc_id") % 97 != 0)
@@ -962,12 +958,9 @@ def q_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus size. Window content never leaves the mappers (the key is
     not in the result, the decontaminate discipline)."""
     win = _window_hash_frame(spark, sf_dir)
-    # eager (r11): dup-set build + position semi-join are independent
-    # branches; lazily persisted they race and re-run the Karp-Rabin
-    # kernel lineage up to 3x (stage_profile: 12.8 + 4.8 + 1.0 s
-    # stages all scanning documents) — the costliest recompute in the
-    # registry, so the cluster profile materializes it up front
-    win = _persist(win, eager=True)
+    # dup-set build + position semi-join both read the Karp-Rabin
+    # kernel's output — the costliest recompute in the registry
+    win = _persist(win)
     dup = (
         win.groupBy("h")
         .agg(F.count(F.lit(1)).alias("c"))
@@ -1003,8 +996,7 @@ def q_duplicate_spans_keep_first(spark: SparkSession, sf_dir: str) -> DataFrame:
     first-occurrence pick), one h-equi-join back, and the per-doc
     island merge. No new shuffle shape vs duplicate_spans."""
     win = _window_hash_frame(spark, sf_dir)
-    # eager (r11): same racing-kernel measurement as duplicate_spans
-    win = _persist(win, eager=True)  # first-pick build + position join
+    win = _persist(win)  # first-pick build + position join
     # carry the occurrence count with the first pick so singleton
     # windows (c == 1, the majority on a mostly-unique corpus) never
     # ride the join back — they'd only be filtered out afterwards.
@@ -1544,10 +1536,6 @@ def q_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # model screen: train once over the full corpus (the standalone
     # quality_classifier semantics), keep verdicts for train docs
-    # NOT eager: two 2.2 MB doc_tokens stages race on an idle box,
-    # but the r12 saturated A/B measured eager as a wash (lazy 3.09 s
-    # median vs eager 3.15 over 4 reps) — big exploded token stream,
-    # same trade as decontaminate's shingle frame
     qtok = _persist(doc_tokens(d))
     w, wu = quality_weight_frame(qtok)
     avg_w = F.avg(F.coalesce(F.col("w"), F.lit(wu)))
@@ -1797,11 +1785,8 @@ def q_lm_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = d.select(
         "doc_id", normalized_tokens(F.col("text")).alias("toks")
     ).select("doc_id", F.explode("toks").alias("t"))
-    # freq build + score join both read it. eager (r11): the two
-    # consumers are independent branch stages — lazily persisted they
-    # race and each re-runs the explode; the cluster profile
-    # (SPARK_GRAFT_EAGER_PERSIST) materializes first.
-    tok = _persist(tok, eager=True)
+    # freq build + score join both read it
+    tok = _persist(tok)
     # corpus token total: a corpus-derived scalar (caching.memo
     # contract, same class as row counts / quantizer centroids) — one
     # count job per session per corpus instead of one per invocation
@@ -2078,9 +2063,7 @@ def quality_weight_frame(tok: DataFrame) -> tuple[DataFrame, float]:
     # frame both read this aggregation — without the persist the
     # corpus-sized explode+groupBy runs twice per training (review
     # finding; the frame itself is vocab-sized, so the cache is tiny)
-    voc = _persist(  # lazy: the r12 saturated A/B on both consumers
-        # (quality_classifier, filter_funnel) measured the eager mark
-        # as a wash — the wu collect is a serial barrier already
+    voc = _persist(
         voc.select(
             "t", "pc", "nc",
             F.sum("pc").over(tot).alias("pt"),
@@ -2365,8 +2348,8 @@ def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     The top-k window partitions BY DOCUMENT — parallel at any corpus
     size, never a global sort."""
     d = _spread(_t(spark, sf_dir, "documents"))
-    # eager (r11): tf and df are independent branch stages off tok
-    tok = _persist(doc_tokens(d), eager=True)
+    # tf and df both read tok
+    tok = _persist(doc_tokens(d))
     # N is a corpus-derived scalar — memoized per (application,
     # corpus) on its own twin frame (r11, the _corpus_token_total /
     # pagerank-node-count discipline): counting the persisted tok
@@ -2469,10 +2452,10 @@ def _lm_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = d.select(
         "doc_id", "lang", normalized_tokens(F.col("text")).alias("toks")
     ).select("doc_id", "lang", F.explode("toks").alias("t"))
-    # eager mark + memoized corpus total: see q_lm_quality (identical
+    # persist + memoized corpus total: see q_lm_quality (identical
     # rationale; the token stream differs only by the lang column, so
     # the TOTAL is the same corpus scalar and shares the memo key)
-    tok = _persist(tok, eager=True)
+    tok = _persist(tok)
     total = _corpus_token_total(spark, sf_dir)
     freq = tok.groupBy("t").agg(F.count(F.lit(1)).alias("cnt"))
     lp = F.log(F.col("cnt").cast("double") / F.lit(float(total)))
@@ -2481,12 +2464,10 @@ def _lm_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id", "lang")
         .agg(F.round(F.avg(lp), 4).alias("score"))
     )
-    # eager (r11): both banders hang 2-3 independent consumer branches
-    # off scored (stats/histogram build + the final label join); the
-    # doc-sized cache races lazily and each sibling re-runs the
-    # corpus-sized join+agg lineage (stage_profile: 2.13/1.64/1.55 s
-    # stages per invocation) — cluster profile materializes it once
-    return _persist(scored, eager=True)
+    # both banders hang 2-3 consumer branches off scored
+    # (stats/histogram build + the final label join); the doc-sized
+    # cache spares each a re-run of the corpus-sized join+agg lineage
+    return _persist(scored)
 
 
 @register(
@@ -2636,9 +2617,8 @@ def q_perplexity_bands_pct(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("int")
         .alias("bin"),
     )
-    # eager (r11): histogram + refine are independent branches (racing
-    # lazily re-bins from the scored cache); structural mark only
-    binned = _persist(binned, eager=True)
+    # histogram + refine both read the binned frame
+    binned = _persist(binned)
     hist = binned.groupBy("lang", "bin").agg(
         F.count(F.lit(1)).alias("c")
     )
@@ -2771,11 +2751,7 @@ def q_eval_leak_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    # NOT eager: three identical 6.3 MB stages race on an idle box,
-    # but the r12 saturated A/B measured eager as a consistent ~7%
-    # LOSS (lazy median 3.37 s vs eager 3.62 over 4 reps) — the
-    # distinct shingle stream is the largest frame in the sweep, so
-    # caching it eagerly costs more than the race
+    # eval and train sides both read the distinct shingle stream
     sh = _persist(sh)
     ev = sh.filter(F.col("doc_id") % 97 == 0).select(
         F.col("doc_id").alias("eval_doc"), "s"
@@ -3020,7 +2996,7 @@ def q_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r12 (guide §2.4): ONE linear pipeline in the oracle's own direct
     # form, replacing the r11 two-branch decomposition (persisted dt →
     # seen-partials agg + per-doc-total agg → SMJ → window; 6
-    # exchanges, a cache, and an eager mark). The trigram-count frame
+    # exchanges and a cache). The trigram-count frame
     # fans out ×L through two BROADCAST joins (lwu cross, lw left —
     # both charset^3-bounded) and ONE partition-local aggregation
     # computes score = Σ cnt·coalesce(w, wu) — textually the oracle's
@@ -3033,8 +3009,7 @@ def q_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     # compact raw-doc rows exactly once (plan: Exchange 6 → 1; at
     # scale the removed dt exchange carried ~30-40 B per trigram vs
     # ~1 B per text char moved once up front). Single consumer ⇒ no
-    # persist, no cache race, no eager mark — strictly better than
-    # both profiles the r11 saturation A/B compared.
+    # persist.
     tri = _lid_trigrams(d)
     dt = tri.groupBy("doc_id", "lang", "t").agg(
         F.count(F.lit(1)).alias("cnt")
@@ -3393,13 +3368,8 @@ def _dsir_weight_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The shared DSIR plan: hashed-feature stream (persisted once —
     the bucket-count build and the scoring join both read it), bucket
     class counts, smoothed log-likelihood-ratio table, per-doc sum."""
-    # eager (r11): the class-count build and the scoring join are
-    # independent branch stages; lazily persisted they raced the cache
-    # and each re-ran the corpus explode (stage_profile: two 1.6 MB
-    # scan stages, 6.0 + 4.8 s, per invocation)
     fb = _persist(
-        dsir_feature_frame(_spread(_t(spark, sf_dir, "documents"))),
-        eager=True,
+        dsir_feature_frame(_spread(_t(spark, sf_dir, "documents")))
     )  # class counts + scoring join share it
     wtab = dsir_bucket_weights(fb).select("b", "llr")
     return (
@@ -3734,9 +3704,8 @@ def q_hll_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     (small relative overlaps can clamp to 0 — documented estimator
     property, pinned directionally in tests/test_dsir.py)."""
     mx = hll_register_frame(_t(spark, sf_dir, "documents"))
-    # eager: single + pair-union estimates share it (r12 profile:
-    # the register build ran once per consumer when lazy)
-    mx = _persist(mx, eager=True)
+    # single + pair-union estimates share it
+    mx = _persist(mx)
     langs = mx.select("lang").distinct()
     a, b = langs.alias("a"), langs.alias("b")
     pairs = a.join(

@@ -92,11 +92,9 @@ def q_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     compiles to TakeOrderedAndProject over the rounded PMI with a
     (w1, w2) tiebreak, so the LIMIT cut is engine-deterministic."""
     d = _t(spark, sf_dir, "documents")
-    # eager (r11): uni and bi are independent branch stages — a lazy
-    # cache raced and tokenized twice (see register_persist docstring)
+    # uni and bi both read the tokens
     toks = _persist(
-        _spread(d).select(normalized_tokens(F.col("text")).alias("t")),
-        eager=True,
+        _spread(d).select(normalized_tokens(F.col("text")).alias("t"))
     )
     uni = toks.select(F.explode("t").alias("w"))
     bi = (
@@ -208,11 +206,9 @@ def q_shingle_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
             "shingle"
         ),
     )
-    # eager (r11): same racing-branches measurement as
-    # q_ngram_jaccard_pairs — four concurrent consumer stages each
-    # recomputed tokenize+shingle under a lazy persist (32.7 s executor
-    # per invocation, stage_profile)
-    sh = _persist(sh, eager=True)
+    # four consumer branches read the shingle index (as in
+    # q_ngram_jaccard_pairs) — tokenize+shingle runs once
+    sh = _persist(sh)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     cold = (
         sh.groupBy("shingle")

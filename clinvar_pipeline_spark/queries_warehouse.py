@@ -533,11 +533,9 @@ def pagerank(
     # boundary. Halves the key bytes through every exchange and
     # replaces string hashing/equality with long ops on the per-round
     # edge-sized frames.
-    # eager marks (r11): the cached pair set feeds the degree build +
-    # the symmetrized edge build; deg feeds the rank init + the
-    # dst_deg join — independent branch stages that race a lazy cache
-    # (the cluster profile materializes them up front; locally the
-    # overlap wins, the measured A/B rule)
+    # persisted: the pair set feeds the degree build + the
+    # symmetrized edge build; deg feeds the rank init + the dst_deg
+    # join
     #
     # r12 (guide §2.4 remove duplicated subtrees): symmetrize with ONE
     # explode instead of unionAll(eraw, eraw.swapped) — the union's
@@ -563,14 +561,12 @@ def pagerank(
             (F.col("o_custkey") * 2).alias("u"),
             (F.col("l_suppkey") * 2 + 1).alias("v"),
         )
-        .distinct(),
-        eager=True,
+        .distinct()
     )
     deg = _persist(
         eraw.select(F.explode(F.array("u", "v")).alias("node"))
         .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("deg")),
-        eager=True,
+        .agg(F.count(F.lit(1)).alias("deg"))
     )
     edges = eraw.select(
         F.explode(

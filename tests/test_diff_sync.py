@@ -11,7 +11,6 @@ from clinvar_pipeline_spark.operators.diff_sync import (
     UNCHANGED,
     UPDATE,
     apply_diff,
-    diff_counters,
     diff_sync,
 )
 from clinvar_pipeline_spark.operators.guarded_delete import guarded_stale_delete
@@ -59,13 +58,8 @@ def test_null_vs_empty_distinguished(spark):
 def test_counters(spark):
     incoming, existing = _dfs(spark)
     diff = diff_sync(incoming, existing, ["k"])
-    got = {r["counter"]: r["value"] for r in diff_counters(diff, "orders").collect()}
-    assert got == {
-        "orders_DELETE": 1,
-        "orders_INSERT": 1,
-        "orders_UNCHANGED": 1,
-        "orders_UPDATE": 1,
-    }
+    got = {r[CHANGE_COL]: r["count"] for r in diff.groupBy(CHANGE_COL).count().collect()}
+    assert got == {DELETE: 1, INSERT: 1, UNCHANGED: 1, UPDATE: 1}
 
 
 class TestGuardedDelete:

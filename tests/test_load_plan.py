@@ -271,63 +271,6 @@ def test_stale_xdb_guard_abort_keeps_rows(spark, archive, genes_dim, first_run):
     assert {f"STALE{i}" for i in range(5)} <= accs
 
 
-def test_bucketed_diff_is_shuffle_free(spark, tmp_path):
-    """SURVEY §4/§7: with both snapshot sides bucketed by the diff key,
-    the full-outer diff_sync join must plan with ZERO Exchange nodes —
-    the nightly run's only fact-fact shuffle disappears."""
-    from clinvar_pipeline_spark.operators.diff_sync import diff_sync
-    from clinvar_pipeline_spark.plans.load import (
-        Snapshot,
-        empty_snapshot,
-        read_snapshot_bucketed,
-        write_snapshot_bucketed,
-    )
-
-    import shutil
-
-    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    for prefix in ("bkt_prev", "bkt_inc"):
-        for entity in (
-            "variants xdb_ids gene_associations map_positions "
-            "hgvs_names aliases".split()
-        ):
-            shutil.rmtree(f"{wh}/{prefix}_{entity}", ignore_errors=True)
-
-    base = empty_snapshot(spark)
-    old = Snapshot(
-        **{
-            name: getattr(base, name)
-            for name in (
-                "variants xdb_ids gene_associations map_positions "
-                "hgvs_names aliases".split()
-            )
-        }
-    )
-    rows_old = spark.createDataFrame(
-        [(i, "t", f"n{i}") for i in range(100)], "rgd_id long, type string, name string"
-    )
-    rows_new = spark.createDataFrame(
-        [(i, "t", f"n{i % 7}") for i in range(50, 150)],
-        "rgd_id long, type string, name string",
-    )
-    old = Snapshot(**{**old.__dict__, "hgvs_names": rows_old})
-    new = Snapshot(**{**old.__dict__, "hgvs_names": rows_new})
-    write_snapshot_bucketed(old, "bkt_prev", n_buckets=4)
-    write_snapshot_bucketed(new, "bkt_inc", n_buckets=4)
-    prev = read_snapshot_bucketed(spark, "bkt_prev")
-    inc = read_snapshot_bucketed(spark, "bkt_inc")
-
-    diff = diff_sync(
-        inc.hgvs_names, prev.hgvs_names, key_cols=["rgd_id"],
-        compare_cols=["type", "name"], null_safe_keys=False,
-    )
-    plan = diff._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan, plan
-    # and the diff itself is still correct
-    counts = {r["change_type"]: r["count"] for r in diff.groupBy("change_type").count().collect()}
-    assert counts.get("INSERT") == 50 and counts.get("DELETE") == 50
-
-
 def test_collection_values_match_per_column_groupby(spark):
     """The folded M6-M8 collections equal one plain groupBy per column
     (split on '|', TreeSet the non-empty parts, join, byte-trim), with

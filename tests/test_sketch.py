@@ -1,60 +1,7 @@
 """Approximate-aggregate operators: sketches must land within their
 documented error bounds of the exact answers on the real testdata."""
 
-import pytest
 from pyspark.sql import functions as F
-
-from clinvar_pipeline_spark.operators.sketch import (
-    approx_distinct_counts,
-    approx_group_quantiles,
-)
-
-SF_DIR = "/root/testdata/sf0.01"
-
-
-@pytest.fixture(scope="module")
-def events(spark):
-    return spark.read.parquet(f"{SF_DIR}/events.parquet")
-
-
-def test_approx_distinct_within_rsd(spark, events):
-    exact = {
-        r["event_type"]: r["n"]
-        for r in events.groupBy("event_type")
-        .agg(F.countDistinct("user_id").alias("n"))
-        .collect()
-    }
-    approx = {
-        r["event_type"]: r["approx_distinct"]
-        for r in approx_distinct_counts(
-            events, ["event_type"], "user_id", rsd=0.05
-        ).collect()
-    }
-    assert set(approx) == set(exact)
-    for k, n in exact.items():
-        # HLL++ rsd=0.05 -> allow 4 sigma
-        assert abs(approx[k] - n) <= max(4 * 0.05 * n, 2), (k, approx[k], n)
-
-
-def test_approx_quantiles_rank_error(spark, events):
-    probs = (0.25, 0.5, 0.75, 0.95)
-    approx = {
-        r["event_type"]: r["approx_quantiles"]
-        for r in approx_group_quantiles(
-            events, ["event_type"], "value", probs, accuracy=10000
-        ).collect()
-    }
-    values = {}
-    for r in events.select("event_type", "value").collect():
-        values.setdefault(r["event_type"], []).append(r["value"])
-    for k, qs in approx.items():
-        vs = sorted(values[k])
-        n = len(vs)
-        for p, q in zip(probs, qs):
-            # positional guarantee: within rank-error 1/accuracy (+1 slack)
-            lo = vs[max(0, int((p - 2 / 10000) * (n - 1)) - 1)]
-            hi = vs[min(n - 1, int((p + 2 / 10000) * (n - 1)) + 1)]
-            assert lo <= q <= hi, (k, p, q, lo, hi)
 
 
 # ---------------------------------------------------------------------
