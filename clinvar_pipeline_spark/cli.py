@@ -738,7 +738,7 @@ def cmd_corpus_prep(spark: SparkSession, args) -> None:
         if retrain:
             cells = _derived_num_cells(_corpus_count(emb, key))
             C = _train_centroids(
-                emb, "embedding", cells, 10000, 5, 42,
+                emb, "embedding", cells, 10000, 5,
                 id_col="vec_id", memo_key=key,
             )
             save_centroids(spark, C, f"{args.out}/ivf_index")
@@ -761,7 +761,7 @@ def cmd_corpus_prep(spark: SparkSession, args) -> None:
         if retrain or not os.path.exists(f"{args.out}/pq_index"):
             dim = len(emb.select("embedding").head()["embedding"])
             B = _train_pq_codebooks(
-                emb, "embedding", pq_subspaces_for_dim(dim), 256, 10000, 5, 42,
+                emb, "embedding", pq_subspaces_for_dim(dim), 256, 10000, 5,
                 id_col="vec_id", memo_key=key,
             )
             save_pq_codebooks(spark, B, f"{args.out}/pq_index")

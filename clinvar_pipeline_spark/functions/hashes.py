@@ -200,39 +200,6 @@ def jaccard(a: Column, b: Column) -> Column:
     return inter / (F.size(F.array_distinct(a)) + F.size(F.array_distinct(b)) - inter)
 
 
-def hyperplane_bucket_arrays(
-    num_planes: int = 8, num_tables: int = 6, seed: int = 42, dim: int = 64
-):
-    """Vectorized multi-table sign-LSH: a pandas UDF mapping an
-    embedding column to an array of ``num_tables`` bucket ids in one
-    numpy matmul per Arrow batch (V @ P.T -> sign bits -> ints).
-
-    Table t's plane matrix is random.Random(seed + t). Evaluating
-    num_tables * num_planes interpreted zip_with/aggregate chains per
-    row costs ~1000x more than one BLAS matmul over the Arrow batch."""
-    from pyspark.sql.functions import pandas_udf
-
-    planes = []
-    for t in range(num_tables):
-        rng = random.Random(seed + t)
-        planes.append(
-            [[rng.uniform(-1.0, 1.0) for _ in range(dim)] for _ in range(num_planes)]
-        )
-    W = np.array(planes, dtype=np.float64).reshape(num_tables * num_planes, dim)
-    weights = (1 << np.arange(num_planes)).astype(np.int64)
-
-    @pandas_udf("array<long>")
-    def buckets(s: pd.Series) -> pd.Series:
-        V = np.asarray(s.tolist(), dtype=np.float64)
-        if V.size == 0:
-            return pd.Series([], dtype=object)
-        bits = (V @ W.T) > 0  # n x (T*P)
-        b = bits.reshape(len(V), num_tables, num_planes) @ weights  # n x T
-        return pd.Series(list(b))
-
-    return buckets
-
-
 def dot_product_batch():
     """Arrow-batched dot product of two array<double> columns (numpy
     einsum per batch). The re-rank hot path for candidate pairs: one

@@ -146,7 +146,7 @@ def semantic_dedup_oracle(
     lloyd_iters: int = 5,
     cell_cap: int = 100_000,
 ) -> str:
-    """Twin of operators/similarity.semantic_dedup(quantized=True):
+    """Twin of operators/similarity.semantic_dedup:
     intra-cell pairs with lattice cosine ≥ tau; each dropped id keeps
     its SMALLEST-id qualifying neighbor. The tau comparison is on the
     raw integer dot against the Python-computed tau·1e12 double
@@ -180,10 +180,10 @@ def ann_topk_ivf_oracle(
     train_sample: int = 10000,
     lloyd_iters: int = 5,
 ) -> str:
-    """Twin of operators/similarity.ann_topk_ivf(quantized=True),
-    self-search: probe lists = top max(4, k_cells//4) cells per query
-    (dot DESC, cell ASC — row_number naturally clamps when fewer cells
-    exist), candidates = probed-cell join, re-rank on the raw integer
+    """Twin of operators/similarity.ann_topk_ivf, self-search: probe
+    lists = top max(4, k_cells//4) cells per query (dot DESC, cell
+    ASC — row_number naturally clamps when fewer cells exist),
+    candidates = probed-cell join, re-rank on the raw integer
     dot (ties nn_id ASC), emit qround6 lattice cosine + int rank."""
     i = id_col
     body = kmeans_cells_ctes(table, id_col, vec_col, train_sample, lloyd_iters)
@@ -363,7 +363,7 @@ def ann_topk_pq_oracle(
     train_sample: int = 10000,
     lloyd_iters: int = 5,
 ) -> str:
-    """Twin of ann_topk_pq(quantized=True), self-search pure scan:
+    """Twin of operators/similarity.ann_topk_pq, self-search pure scan:
     deterministic PQ codebooks, integer ADC over every (query, code)
     pair, global top-``rerank`` pool (adc DESC, nn_id ASC), lattice-
     cosine re-rank."""
@@ -385,7 +385,7 @@ def ann_topk_ivfpq_oracle(
     train_sample: int = 10000,
     lloyd_iters: int = 5,
 ) -> str:
-    """Twin of ann_topk_pq(quantized=True, ivf=True): the coarse
+    """Twin of operators/similarity.ann_topk_pq(ivf=True): the coarse
     quantizer prunes WHAT is scored (a query only scores candidates
     whose cell is in its probe list — the probed-cell semijoin below
     == the Spark path's probed-union filter + per-query −inf mask),

@@ -90,7 +90,8 @@ def ann_topk_lsh_oracle(
     seed: int = 42,
     dim: int = 64,
 ) -> str:
-    """Twin of operators/similarity.ann_topk_lsh_q (self-search)."""
+    """Twin of operators/similarity.ann_topk_lsh_q, self-search
+    (``queries is corpus``)."""
     i = id_col
     body = ",\n    ".join(
         _base_ctes(table, id_col, vec_col, train_sample=1)

@@ -6,8 +6,7 @@ Dao.java:218-248; reused for every satellite sync J3-J7).
 Scale notes:
 - One full outer join on the key columns; both sides shuffle once on
   the same key, so co-partitioning is preserved for any downstream
-  per-key work. With bucketed snapshot tables the shuffle disappears
-  entirely.
+  per-key work.
 - Change detection is a row fingerprint (md5 over normalized compare
   columns) computed map-side — the join carries two fingerprint
   columns, not wide row comparisons.
@@ -42,7 +41,6 @@ def diff_sync(
     existing: DataFrame,
     key_cols: Sequence[str],
     compare_cols: Sequence[str] | None = None,
-    null_safe_keys: bool = True,
 ) -> DataFrame:
     """Return one row per key present on either side, with
     ``change_type`` ∈ {INSERT, UPDATE, UNCHANGED, DELETE}, incoming
@@ -51,14 +49,6 @@ def diff_sync(
 
     ``compare_cols`` defaults to all non-key columns shared by both
     sides. UPDATE = key on both sides and fingerprint differs.
-
-    ``null_safe_keys``: with True (default) key columns match via
-    ``<=>`` so a NULL key component is a legitimate value. Pass False
-    when every key column is non-null by construction (e.g. rgd_id
-    diffs against bucketed snapshot tables): Catalyst rewrites ``<=>``
-    keys to ``(coalesce(k, 0), isnull(k))``, which disables bucketed
-    joins — plain equality keeps the scan's bucketing and the diff
-    plans shuffle-free (tests/test_load_plan.py).
     """
     key_cols = list(key_cols)
     if compare_cols is None:
@@ -89,10 +79,7 @@ def diff_sync(
     )
     cond = None
     for c in key_cols:
-        if null_safe_keys:
-            eq = F.col(c).eqNullSafe(F.col(f"_k_{c}"))
-        else:
-            eq = F.col(c) == F.col(f"_k_{c}")
+        eq = F.col(c).eqNullSafe(F.col(f"_k_{c}"))
         cond = eq if cond is None else cond & eq
     joined = inc.join(ex_k, on=cond, how="full_outer").select(
         *[F.coalesce(F.col(c), F.col(f"_k_{c}")).alias(c) for c in key_cols],

@@ -1,15 +1,28 @@
 """Similarity search over embedding columns.
 
-Brute-force cosine top-k (the exact baseline; queries.q_topk_cosine has
-the oracle-checked formulation) plus the scale path: hyperplane-LSH
-bucketed ANN — candidates come from an equi-join on bucket ids, never a
-cross product. Multi-probe widens recall by also probing buckets at
-Hamming distance 1 from the query's bucket.
+Brute-force cosine top-k (:func:`brute_force_topk`, the exact baseline
+and test oracle; queries.q_topk_cosine has the oracle-checked
+formulation) plus the scale paths, one implementation each:
 
-Scale: the bucket join shuffles both sides once on (bucket); with P
-planes the expected candidate set shrinks ~2^P-fold. Skewed buckets
-(dense regions) are the known cost — AQE skew-join or a second-level
-salt handles them; recall/cost tunes with (num_planes, n_probes).
+- sign-LSH top-k and near-dup pairs (:func:`ann_topk_lsh_q`,
+  :func:`lsh_neardup_pairs_q`) — candidates from an equi-join on
+  bucket ids, never a cross product; multi-probe also probes buckets
+  at Hamming distance 1;
+- IVF top-k (:func:`ann_topk_ivf`) — k-means coarse cells, queries
+  probe their nearest cells;
+- PQ / IVF-PQ top-k (:func:`ann_topk_pq`) — a bounded query batch
+  scans the byte-coded corpus with lookup tables;
+- SemDeDup (:func:`semantic_dedup`) — intra-cell near-dup drop list.
+
+Every scale path is engine-portable: vectors are rounded onto the Q6
+integer lattice (:func:`_q6_unit_np`), so each dot product is exact in
+any summation order and every tie is broken explicitly. The DuckDB
+twins in functions/kmeans_oracle.py and functions/lsh_oracle.py
+reproduce their rows bit-for-bit. Candidate exchanges move ids and
+bucket/cell keys only; vectors attach after the pairs are deduped
+(:func:`_scored_pair_dots`). The float trainers and save/load helpers
+serve the cross-session index lifecycle (--corpusPrep lands float
+books; the operators re-quantize them exactly).
 """
 
 from __future__ import annotations
@@ -22,7 +35,6 @@ from pyspark.sql import functions as F
 from clinvar_pipeline_spark.functions.hashes import (
     cosine_similarity,
     dot_product_batch,
-    hyperplane_bucket_arrays,
 )
 
 
@@ -57,229 +69,6 @@ def brute_force_topk(
         .filter(F.col("rk") <= k)
         .select("query_id", "nn_id", "cos_sim", "rk")
     )
-
-
-def _l2_normalized(df: DataFrame, id_col: str, vec_col: str, role: str) -> DataFrame:
-    """(role_id, role_v): L2-normalized vectors, norm computed once per
-    row (two-step select so the norm alias is a plain column inside the
-    divide lambda, not a re-evaluated aggregate)."""
-    v = F.col(vec_col).cast("array<double>")
-    with_norm = df.select(
-        F.col(id_col).alias(f"{role}_id"),
-        v.alias("_v"),
-        F.sqrt(F.aggregate(v, F.lit(0.0), lambda acc, x: acc + x * x)).alias(
-            "_norm"
-        ),
-    )
-    return with_norm.select(
-        f"{role}_id",
-        F.expr("transform(_v, x -> x / _norm)").alias(f"{role}_v"),
-    )
-
-
-def _rerank_topk(
-    pairs: DataFrame,
-    queries: DataFrame,
-    corpus: DataFrame,
-    id_col: str,
-    vec_col: str,
-    k: int,
-) -> DataFrame:
-    """Exact cosine re-rank of deduped candidate (query_id, nn_id)
-    pairs: join the normalized vector tables back (AQE broadcasts them
-    when small; at scale they hash-partition on id like any dim), score
-    with one Arrow-batched dot product, keep top-k per query.
-
-    Self-search (queries IS corpus — the dedup/self-kNN case) computes
-    the normalization once and reuses it for both roles via column
-    renames over one persisted frame, halving the normalize work."""
-    if queries is corpus:
-        from clinvar_pipeline_spark.caching import register_persist
-
-        norm = register_persist(_l2_normalized(corpus, id_col, vec_col, "nn"))
-        q_norm = norm.withColumnsRenamed({"nn_id": "query_id", "nn_v": "query_v"})
-        c_norm = norm
-    else:
-        q_norm = _l2_normalized(queries, id_col, vec_col, "query")
-        c_norm = _l2_normalized(corpus, id_col, vec_col, "nn")
-    scored = (
-        pairs.join(q_norm, "query_id")
-        .join(c_norm, "nn_id")
-        .select(
-            "query_id",
-            "nn_id",
-            F.round(
-                dot_product_batch()(F.col("query_v"), F.col("nn_v")), 6
-            ).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("nn_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "nn_id", "cos_sim", "rk")
-    )
-
-
-def ann_topk_hyperplane(
-    queries: DataFrame,
-    corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-    num_planes: int = 8,
-    n_probes: int = 9,
-    num_tables: int = 6,
-    seed: int = 42,
-    dim: int = 64,
-) -> DataFrame:
-    """Approximate top-k: multi-table sign-LSH bucket join + exact
-    re-rank inside candidate buckets.
-
-    ``num_tables`` independent hash tables (seeded seed+t) are unioned —
-    the standard LSH recall amplifier: a true neighbor is found if ANY
-    table agrees on all ``num_planes`` sign bits. ``n_probes`` > 1
-    additionally probes buckets at Hamming distance 1 (multi-probe),
-    trading shuffle volume for recall. Defaults are tuned on the driver
-    testdata (near-uniform 64-dim vectors, mean top-5 neighbor angle
-    ~71°): recall ~0.5 of exact top-5 while scoring ~20% of the corpus
-    per query; on genuinely clustered embeddings (angles 20-40°) the
-    same config recalls >0.9.
-
-    Scale: the candidate join moves ONLY (id, bucket) pairs — never the
-    vectors — so the big exchange is 16 bytes/row; pairs are deduped
-    narrow, then the (id -> normalized vector) tables join back for
-    scoring (AQE broadcasts them when small; at 100 TB they
-    hash-partition on id like any dim). Per-pair score is one dot
-    product over pre-normalized vectors. Bucket skew (dense regions) is
-    handled by AQE skew-join."""
-    v = F.col(vec_col).cast("array<double>")
-
-    bucket_udf = hyperplane_bucket_arrays(
-        num_planes=num_planes, num_tables=num_tables, seed=seed, dim=dim
-    )
-
-    def key_exprs(probe: bool) -> list:
-        keys = []
-        for t in range(num_tables):
-            b = F.col("_bs").getItem(t)
-            tb = F.lit(t << num_planes).cast("long")
-            keys.append(tb + b)
-            if probe:
-                for bit in range(min(n_probes - 1, num_planes)):
-                    keys.append(tb + b.bitwiseXOR(F.lit(1 << bit)))
-        return keys
-
-    def keyed(buckets: DataFrame, role: str, probe: bool) -> DataFrame:
-        renamed = buckets.withColumnRenamed("_id", f"{role}_id")
-        return renamed.select(
-            f"{role}_id", F.explode(F.array(*key_exprs(probe))).alias("bucket")
-        )
-
-    # all num_tables bucket ids in one vectorized pass (numpy matmul
-    # per Arrow batch), then the key arrays explode; vectors do NOT
-    # travel with the keys. Self-search runs the bucket kernel ONCE
-    # and derives both roles' keys from the persisted bucket frame.
-    def bucket_frame(df: DataFrame) -> DataFrame:
-        return df.select(F.col(id_col).alias("_id"), bucket_udf(v).alias("_bs"))
-
-    if queries is corpus:
-        from clinvar_pipeline_spark.caching import register_persist
-
-        shared = register_persist(bucket_frame(corpus))
-        c = keyed(shared, "nn", probe=False)
-        q = keyed(shared, "query", probe=True)
-    else:
-        c = keyed(bucket_frame(corpus), "nn", probe=False)
-        q = keyed(bucket_frame(queries), "query", probe=True)
-    # dedup (query, nn) id-pairs BEFORE fetching vectors or scoring:
-    # the same true pair surfaces once per agreeing (table, probe)
-    pairs = (
-        q.join(c, "bucket")
-        .filter(F.col("query_id") != F.col("nn_id"))
-        .select("query_id", "nn_id")
-        .dropDuplicates(["query_id", "nn_id"])
-    )
-    return _rerank_topk(pairs, queries, corpus, id_col, vec_col, k)
-
-
-def lsh_neardup_pairs(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.9,
-    num_planes: int = 8,
-    n_probes: int = 9,
-    num_tables: int = 6,
-    seed: int = 42,
-    dim: int = 64,
-) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs via sign-LSH buckets — the
-    label-free scale path beside the label-blocked exact query
-    (queries.q_embedding_neardup_pairs): candidates come from the same
-    multi-table/multi-probe bucket join as :func:`ann_topk_hyperplane`
-    (ids + buckets only in the exchange), then exact cosine verifies
-    each candidate against ``threshold``.
-
-    Sign-LSH collision probability per plane is (1 - angle/pi), so the
-    operator targets HIGH-similarity near-dups: at cosine 0.99
-    (angle ~8 deg) a pair survives one 8-plane table with p ~ 0.69 and
-    all 6 tables miss with p ~ 1e-3 before multi-probe; at cosine 0.5
-    recall degrades by design — near-uniform pairs are the ANN top-k
-    queries' job, not dedup's. Emits (id_a, id_b, cos_sim) with
-    id_a < id_b, cos_sim >= threshold."""
-    v = F.col(vec_col).cast("array<double>")
-    bucket_udf = hyperplane_bucket_arrays(
-        num_planes=num_planes, num_tables=num_tables, seed=seed, dim=dim
-    )
-    from clinvar_pipeline_spark.caching import register_persist
-
-    buckets = register_persist(
-        df.select(F.col(id_col).alias("_id"), bucket_udf(v).alias("_bs"))
-    )
-    keys = []
-    for t in range(num_tables):
-        b = F.col("_bs").getItem(t)
-        tb = F.lit(t << num_planes).cast("long")
-        keys.append(tb + b)
-        for bit in range(min(n_probes - 1, num_planes)):
-            keys.append(tb + b.bitwiseXOR(F.lit(1 << bit)))
-    # one side probes (Hamming-1 neighbors), the other holds the exact
-    # bucket — same asymmetry as the ANN query/corpus roles
-    probed = buckets.select("_id", F.explode(F.array(*keys)).alias("bucket"))
-    exact = buckets.select(
-        "_id",
-        F.explode(
-            F.array(
-                *[
-                    F.lit(t << num_planes).cast("long") + F.col("_bs").getItem(t)
-                    for t in range(num_tables)
-                ]
-            )
-        ).alias("bucket"),
-    )
-    pairs = (
-        probed.withColumnRenamed("_id", "id_a")
-        .join(exact.withColumnRenamed("_id", "id_b"), "bucket")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    norm = register_persist(_l2_normalized(df, id_col, vec_col, "nn"))
-    scored = (
-        pairs.join(
-            norm.withColumnsRenamed({"nn_id": "id_a", "nn_v": "va"}), "id_a"
-        )
-        .join(norm.withColumnsRenamed({"nn_id": "id_b", "nn_v": "vb"}), "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.round(dot_product_batch()(F.col("va"), F.col("vb")), 6).alias(
-                "cos_sim"
-            ),
-        )
-    )
-    return scored.filter(F.col("cos_sim") >= threshold)
 
 
 def _corpus_count(corpus: DataFrame, memo_key: str | None) -> int:
@@ -369,15 +158,14 @@ def _train_centroids_q6(
       cell (np.argmax first-max == SQL row_number ORDER BY dot DESC,
       cell ASC);
     - update: per-component integer member sums (exact), mean
-      re-quantized via floor(S/n + 0.5) BEFORE normalizing (keeping
+      rounded back to integers via floor(S/n + 0.5) BEFORE normalizing (keeping
       the norm input integer), then floor(mq/‖mq‖·1e6 + 0.5);
     - empty or zero-norm cells keep their previous centroid.
     Every step unrolls to ANSI SQL (functions/kmeans_oracle.py), so a
     DuckDB oracle reproduces cells — and everything downstream of
     them — bit-for-bit at any SF.
 
-    Sample/memo semantics match the legacy float trainer: ≤
-    train_sample smallest ids when id_col is given (TakeOrdered —
+    Sample/memo semantics: ≤ train_sample smallest ids when id_col is given (TakeOrdered —
     partitioning-independent), memoized per corpus under caching.memo
     (a quantizer is corpus state; see the r5 bench regression)."""
     from clinvar_pipeline_spark.caching import memo
@@ -429,20 +217,18 @@ def _train_centroids(
     num_cells: int,
     train_sample: int,
     lloyd_iters: int,
-    seed: int,
     id_col: str | None = None,
     memo_key: str | None = None,
 ) -> np.ndarray:
-    """Coarse quantizer for IVF-family operators — the float-facing
-    wrapper over :func:`_train_centroids_q6`: the Q6 integer centroids
-    divided back to ~unit-norm float64. Since r9 the trainer is the
-    deterministic integer k-means (strided init, integer Lloyd steps),
-    so ``seed`` no longer influences the result — kept for API
-    stability; the quantizer for a given corpus is now unique, which
-    is what an INDEX should be (retrains can't silently re-cluster).
-    ‖centroid‖ ∈ [1-1e-6, 1+1e-6] — close enough to unit for every
-    argmax/probe consumer (the same rows-only float paths as before)."""
-    del seed  # deterministic since r9; see _train_centroids_q6
+    """Coarse quantizer as the float matrix the CLI's --corpusPrep
+    lands and the drift monitor reads: the Q6 integer centroids of
+    :func:`_train_centroids_q6` divided back to ~unit-norm float64
+    (‖centroid‖ ∈ [1-1e-6, 1+1e-6]). The integer k-means is
+    deterministic (strided init, integer Lloyd steps), so the
+    quantizer for a given corpus is unique, which is what an INDEX
+    should be (retrains can't silently re-cluster); ann_topk_ivf /
+    ann_topk_pq / semantic_dedup re-quantize a loaded float matrix
+    exactly (floor(c·1e6 + 0.5) recovers the integers)."""
     return _train_centroids_q6(
         corpus, vec_col, num_cells, train_sample, lloyd_iters,
         id_col=id_col, memo_key=memo_key,
@@ -596,9 +382,9 @@ def index_drift_ratio(
 
 
 def load_pq_codebooks(spark, path: str) -> np.ndarray:
-    """Load codebooks saved by :func:`save_pq_codebooks`; pass to
-    :func:`pq_encode` or precompute LUTs against them. Bounded driver
-    collect (codebooks are KBs)."""
+    """Load codebooks saved by :func:`save_pq_codebooks` into the
+    (n_subspaces, K, dsub) array ann_topk_pq accepts via
+    ``codebooks=``. Bounded driver collect (codebooks are KBs)."""
     rows = spark.read.parquet(path).orderBy("subspace", "code").collect()
     M = 1 + max(r["subspace"] for r in rows)
     K = len(rows) // M
@@ -619,11 +405,9 @@ def semantic_dedup(
     num_cells: int | None = None,
     train_sample: int = 10000,
     lloyd_iters: int = 5,
-    seed: int = 42,
     cell_cap: int = 100_000,
     memo_key: str | None = None,
     centroids: np.ndarray | None = None,
-    quantized: bool = False,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
     arXiv:2303.09540): k-means-cluster the embedding space, then inside
@@ -653,111 +437,74 @@ def semantic_dedup(
 
     ``memo_key`` (a corpus identity string, e.g. the parquet dir)
     memoizes the corpus count and trained centroids across
-    invocations — see _train_centroids. ``centroids`` bypasses
+    invocations — see _train_centroids_q6. ``centroids`` bypasses
     training entirely with a pre-trained quantizer
     (save_centroids/load_centroids — the cross-session index
     lifecycle).
 
-    ``quantized=True`` runs the ENGINE-PORTABLE path: cells and pair
-    cosines both computed on the Q6 integer lattice (_q6_unit_np), so
-    the full drop-list — ids, keepers, AND sims — is reproducible
-    bit-for-bit by the DuckDB twin (functions/kmeans_oracle.py); the
-    quantization perturbs each cosine by < 1e-5, far inside any
-    sensible tau. Zero-norm vectors (cosine undefined) are excluded
-    from the search in this mode. Plan shape is identical: the pair
-    dot is a JVM-side zip_with/aggregate fold (exact on
-    integer-valued doubles), not a Python kernel."""
+    Engine-portable: cells and pair cosines are both computed on the
+    Q6 integer lattice (_q6_unit_np), so the full drop-list — ids,
+    keepers, AND sims — is reproducible bit-for-bit by the DuckDB twin
+    (functions/kmeans_oracle.py); the quantization perturbs each
+    cosine by < 1e-5, far inside any sensible tau. Zero-norm vectors
+    (cosine undefined) are excluded from the search."""
     if num_cells is None and centroids is None:
         num_cells = _derived_num_cells(_corpus_count(corpus, memo_key))
-    from pyspark.sql.functions import pandas_udf
+    from typing import Iterator as _It
 
     from clinvar_pipeline_spark.caching import register_persist
 
-    if quantized:
-        if centroids is not None:
-            Cq = np.floor(np.asarray(centroids, dtype=np.float64) * _Q6 + 0.5)
-        else:
-            Cq = _train_centroids_q6(
-                corpus, vec_col, num_cells, train_sample, lloyd_iters,
-                id_col=id_col, memo_key=memo_key,
-            )
-
-        from typing import Iterator as _It
-
-        def assign_q(batches: _It[pd.DataFrame]) -> _It[pd.DataFrame]:
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                V = np.asarray(pdf["_v"].tolist(), dtype=np.float64)
-                U, nzm = _q6_unit_np(V)
-                if not nzm.any():
-                    continue  # empty frame would type _qv float64, not list
-                cell = np.argmax(U @ Cq.T, axis=1).astype(np.int32)
-                yield pd.DataFrame(
-                    {
-                        "_id": pdf["_id"].to_numpy()[nzm],
-                        "_cell": cell[nzm],
-                        "_qv": [row.tolist() for row in U[nzm]],
-                    }
-                )
-
-        assigned = register_persist(
-            corpus.select(
-                F.col(id_col).alias("_id"),
-                F.col(vec_col).cast("array<double>").alias("_v"),
-            ).mapInPandas(assign_q, "_id long, _cell int, _qv array<double>")
-        )
-        # exact integer dot, Arrow-batched (r11 — see _rerank_topk_q:
-        # every partial sum < 2^53 so any summation order yields the
-        # identical double); nondeterministic so the pushed-down tau
-        # filter can't duplicate the kernel (guide §4.4).
-        # r12: the _scored_pair_dots gather-by-id shape was measured
-        # here and REJECTED — in-cell pair volume is ~sqrt(N)·N/2, far
-        # below the rerank family's bucket fan-out, so the bounded-
-        # collect actions cost more than the slimmer boundary saves
-        # (paired A/B at sf0.1: warm 1.06-1.22 join-attach vs
-        # 1.30-1.31 gathered). Vectors keep riding the cell self-join.
-        sim_dot = dot_product_batch().asNondeterministic()(
-            F.col("a._qv"), F.col("b._qv")
-        )
-        # tau·1e12 is the same single IEEE multiply the SQL twin spells
-        keep_pred = F.col("_dot") >= F.lit(tau) * F.lit(1.0e12)
-        sim_out = (
-            F.floor(F.col("_dot") / F.lit(1.0e12) * F.lit(1.0e6) + F.lit(0.5))
-            / F.lit(1.0e6)
-        )
+    if centroids is not None:
+        Cq = np.floor(np.asarray(centroids, dtype=np.float64) * _Q6 + 0.5)
     else:
-        if centroids is not None:
-            C = np.asarray(centroids, dtype=np.float64)
-        else:
-            C = _train_centroids(
-                corpus, vec_col, num_cells, train_sample, lloyd_iters, seed,
-                id_col=id_col, memo_key=memo_key,
-            )
-
-        @pandas_udf("int")
-        def nearest_cell(s: pd.Series) -> pd.Series:
-            V = np.asarray(s.tolist(), dtype=np.float64)
-            if V.size == 0:
-                return pd.Series([], dtype="int32")
-            V = V / np.linalg.norm(V, axis=1, keepdims=True)
-            return pd.Series(np.argmax(V @ C.T, axis=1).astype(np.int32))
-
-        assigned = register_persist(
-            corpus.select(
-                F.col(id_col).alias("_id"),
-                F.col(vec_col).alias("_v"),
-                nearest_cell(F.col(vec_col).cast("array<double>")).alias(
-                    "_cell"
-                ),
-            )
+        Cq = _train_centroids_q6(
+            corpus, vec_col, num_cells, train_sample, lloyd_iters,
+            id_col=id_col, memo_key=memo_key,
         )
-        sim_dot = cosine_similarity(F.col("a._v"), F.col("b._v"))
-        keep_pred = F.col("_dot") >= tau
-        sim_out = F.round(F.col("_dot"), 6)
+
+    def assign_q(batches: _It[pd.DataFrame]) -> _It[pd.DataFrame]:
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            V = np.asarray(pdf["_v"].tolist(), dtype=np.float64)
+            U, nzm = _q6_unit_np(V)
+            if not nzm.any():
+                continue  # empty frame would type _qv float64, not list
+            cell = np.argmax(U @ Cq.T, axis=1).astype(np.int32)
+            yield pd.DataFrame(
+                {
+                    "_id": pdf["_id"].to_numpy()[nzm],
+                    "_cell": cell[nzm],
+                    "_qv": [row.tolist() for row in U[nzm]],
+                }
+            )
+
     # persisted: the assignment kernel output feeds the oversize
     # guard AND both sides of the pair join — without a persist the
     # Arrow kernel reruns once per plan branch
+    assigned = register_persist(
+        corpus.select(
+            F.col(id_col).alias("_id"),
+            F.col(vec_col).cast("array<double>").alias("_v"),
+        ).mapInPandas(assign_q, "_id long, _cell int, _qv array<double>")
+    )
+    # exact integer dot, Arrow-batched (r11 — see _rerank_topk_q:
+    # every partial sum < 2^53 so any summation order yields the
+    # identical double); nondeterministic so the pushed-down tau
+    # filter can't duplicate the kernel (guide §4.4).
+    # r12: the _scored_pair_dots gather-by-id shape was measured
+    # here and REJECTED — in-cell pair volume is ~sqrt(N)·N/2, far
+    # below the rerank family's bucket fan-out, so the bounded-
+    # collect actions cost more than the slimmer boundary saves
+    # (paired A/B at sf0.1: warm 1.06-1.22 join-attach vs
+    # 1.30-1.31 gathered). Vectors keep riding the cell self-join.
+    sim_dot = dot_product_batch().asNondeterministic()(
+        F.col("a._qv"), F.col("b._qv")
+    )
+    sim_out = (
+        F.floor(F.col("_dot") / F.lit(1.0e12) * F.lit(1.0e6) + F.lit(0.5))
+        / F.lit(1.0e6)
+    )
     oversize = (
         assigned.groupBy("_cell")
         .agg(F.count(F.lit(1)).alias("_n"))
@@ -778,7 +525,8 @@ def semantic_dedup(
             F.col("a._id").alias("_keeper"),
             sim_dot.alias("_dot"),
         )
-        .filter(keep_pred)
+        # tau·1e12 is the same single IEEE multiply the SQL twin spells
+        .filter(F.col("_dot") >= F.lit(tau) * F.lit(1.0e12))
         .select(id_col, "_keeper", sim_out.alias("_sim"))
     )
     # smallest-id qualifying neighbor wins; its sim rides along in the
@@ -817,63 +565,21 @@ def _train_pq_codebooks(
     pq_k: int,
     train_sample: int,
     lloyd_iters: int,
-    seed: int,
     id_col: str | None = None,
     memo_key: str | None = None,
 ) -> np.ndarray:
     """Product-quantization codebooks (Jégou et al. 2011, "Product
-    Quantization for Nearest Neighbor Search") — since r9 the
-    float-facing wrapper over :func:`_train_pq_codebooks_q6`: the Q6
-    integer codebooks divided back to unit scale, so the SAME
-    codebooks serve the float ADC path, the quantized (engine-
-    portable) path, and the landed pq_index artifact — the full
-    IndexIVFPQ state is one set of books however it is consumed, and
-    ``quantized=True`` re-quantizes a loaded float book exactly
-    (floor(b·1e6 + 0.5) recovers the integers). ``seed`` is inert
-    (strided init); kept for API stability. Returns
-    (n_subspaces, K, dim/n_subspaces) float64."""
-    del seed  # deterministic since r9; see _train_pq_codebooks_q6
+    Quantization for Nearest Neighbor Search") as the float book the
+    CLI's --corpusPrep lands: the Q6 integer codebooks of
+    :func:`_train_pq_codebooks_q6` divided back to unit scale.
+    :func:`ann_topk_pq` re-quantizes a loaded float book exactly
+    (floor(b·1e6 + 0.5) recovers the integers), so the landed pq_index
+    artifact and an in-session training serve identical codes.
+    Returns (n_subspaces, K, dim/n_subspaces) float64."""
     return _train_pq_codebooks_q6(
         corpus, vec_col, n_subspaces, pq_k, train_sample, lloyd_iters,
         id_col=id_col, memo_key=memo_key,
     ) / _Q6
-
-
-def pq_encode(
-    corpus: DataFrame,
-    codebooks: np.ndarray,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(id, code): each unit-normalized vector compressed to one byte
-    per subspace (``binary`` column of n_subspaces bytes) — the
-    memory shape that makes 100 TB vector search feasible: an
-    encoded 64-dim float corpus shrinks 32x (256B -> 8B/vector), so
-    the whole code table fits where 3% of the raw vectors would.
-    Map-only Arrow kernel; codebooks ride via closure capture
-    (n_subspaces * 256 * dsub doubles — KBs)."""
-    from pyspark.sql.functions import pandas_udf
-
-    B = codebooks
-    M, K, dsub = B.shape
-
-    @pandas_udf("binary")
-    def encode(s: pd.Series) -> pd.Series:
-        V = np.asarray(s.tolist(), dtype=np.float64)
-        if V.size == 0:
-            return pd.Series([], dtype=object)
-        V = V / np.linalg.norm(V, axis=1, keepdims=True)
-        out = np.empty((len(V), M), dtype=np.uint8)
-        for m in range(M):
-            S = V[:, m * dsub : (m + 1) * dsub]
-            d2 = ((S[:, None, :] - B[m][None, :, :]) ** 2).sum(axis=2)
-            out[:, m] = np.argmin(d2, axis=1).astype(np.uint8)
-        return pd.Series([row.tobytes() for row in out])
-
-    return corpus.select(
-        F.col(id_col).alias("nn_id"),
-        encode(F.col(vec_col).cast("array<double>")).alias("code"),
-    )
 
 
 def ann_topk_pq(
@@ -887,7 +593,6 @@ def ann_topk_pq(
     rerank: int | None = None,
     train_sample: int = 10000,
     lloyd_iters: int = 5,
-    seed: int = 42,
     memo_key: str | None = None,
     max_queries: int = 10000,
     ivf: bool = False,
@@ -895,24 +600,32 @@ def ann_topk_pq(
     n_probe_cells: int | None = None,
     codebooks: np.ndarray | None = None,
     centroids: np.ndarray | None = None,
-    quantized: bool = False,
 ) -> DataFrame:
     """Product-quantization ANN — the SERVE path: a bounded query set
     (collected driver-side, ``max_queries`` guard — query batches are
     benchmark-sized by definition, the same closure-capture budget as
-    decontaminate's eval set) scans the 8-byte-per-vector code table
+    decontaminate's eval set) scans the M-byte-per-vector code table
     with asymmetric distance computation (ADC), then the top
-    ``rerank`` candidates per query get an exact cosine re-rank.
+    ``rerank`` candidates per query get an exact re-rank.
 
-    Plan shape at 100 TB: the scan is mapInPandas over the ENCODED
-    corpus — each task builds the M x pq_k dot-lookup table per query
-    once, scores its partition's codes via table lookups (no float
-    vectors touched), and emits only its local top-``rerank`` per
-    query (map-side partial top-k). One narrow shuffle of
-    (n_partitions x n_queries x rerank) id rows picks the global
-    candidate pool; exact re-rank joins full vectors for just those
-    rows. Nothing vector-sized is ever shuffled, and the scan reads
-    M bytes per corpus row.
+    Plan shape at 100 TB: the driver builds the M x pq_k dot-lookup
+    table per query once and ships it in the closure; the scan is
+    mapInPandas over the ENCODED corpus — each task scores its
+    partition's codes via table lookups (no vectors touched) and emits
+    only its local top-``rerank`` per query (map-side partial top-k).
+    One narrow shuffle of (n_partitions x n_queries x rerank) id rows
+    picks the global candidate pool; the re-rank joins vectors for
+    just those rows. Nothing vector-sized is ever shuffled, and the
+    scan reads M bytes per corpus row.
+
+    Engine-portable end to end: codebooks, codes, ADC scores and the
+    re-rank all live on the Q6 integer lattice (_q6_unit_np) with
+    every selection tie-broken (score DESC, nn_id ASC), so the DuckDB
+    twin (functions/kmeans_oracle.py) reproduces the rows
+    bit-for-bit. cos_sim is the lattice cosine (within 1e-5 of
+    exact); zero-norm vectors are excluded. Self matches are masked
+    INSIDE the scan (not post-filtered) so the partial top-k is the
+    exact superset of the global one the SQL computes.
 
     ``ivf=True`` composes the coarse quantizer on top (the FAISS
     IndexIVFPQ shape): the encode kernel also emits each vector's
@@ -930,29 +643,20 @@ def ann_topk_pq(
     load_pq_codebooks + save_centroids/load_centroids — the full
     IndexIVFPQ state round-trips across sessions; the CLI's
     --corpusPrep lands both as out/pq_index + out/ivf_index)."""
-    from pyspark.sql.functions import pandas_udf
+    from typing import Iterator as _It
+
+    from clinvar_pipeline_spark.caching import register_persist
 
     if rerank is None:
         rerank = max(4 * k, 16)
-    if quantized:
-        # engine-portable path: quantizer, codes, ADC, and re-rank all
-        # on the Q6 integer lattice with explicit tie-breaks, so the
-        # DuckDB twin (functions/kmeans_oracle.py) reproduces rows
-        # bit-for-bit; cos_sim is the lattice cosine (within 1e-5 of
-        # exact); zero-norm vectors excluded
-        return _ann_topk_pq_q(
-            queries, corpus, id_col, vec_col, k, n_subspaces, pq_k,
-            rerank, train_sample, lloyd_iters, memo_key, max_queries,
-            ivf, num_cells, n_probe_cells, codebooks, centroids,
-        )
     if codebooks is not None:
-        B = np.asarray(codebooks, dtype=np.float64)
+        Bq = np.floor(np.asarray(codebooks, dtype=np.float64) * _Q6 + 0.5)
     else:
-        B = _train_pq_codebooks(
+        Bq = _train_pq_codebooks_q6(
             corpus, vec_col, n_subspaces, pq_k, train_sample, lloyd_iters,
-            seed, id_col=id_col, memo_key=memo_key,
+            id_col=id_col, memo_key=memo_key,
         )
-    M, K, dsub = B.shape
+    M, K, dsub = Bq.shape
 
     q_rows = (
         queries.select(
@@ -967,46 +671,80 @@ def ann_topk_pq(
         raise ValueError(
             f"ann_topk_pq serves bounded query batches (max_queries="
             f"{max_queries}); for corpus-scale self-search use "
-            "ann_topk_ivf/ann_topk_hyperplane"
+            "ann_topk_ivf/ann_topk_lsh_q"
         )
     if not q_rows:
-        # empty query set -> empty result with the contract schema
-        # (np.linalg.norm on a (0,) array would raise on the driver)
         return queries.sparkSession.createDataFrame(
             [], "query_id long, nn_id long, cos_sim double, rk int"
         )
-    qids = np.asarray([r["_qid"] for r in q_rows])
-    Q = np.asarray([r["_qv"] for r in q_rows], dtype=np.float64)
-    Q = Q / np.linalg.norm(Q, axis=1, keepdims=True)
-    # per-query lookup tables, built once on the driver and shipped in
-    # the closure: LUT[q, m, j] = <Q[q] subspace m, codebook[m][j]>
-    LUT = np.einsum(
-        "qmd,mjd->qmj", Q.reshape(len(Q), M, dsub), B
-    )
+    qids_all = np.asarray([r["_qid"] for r in q_rows])
+    Qm = np.asarray([r["_qv"] for r in q_rows], dtype=np.float64)
+    Uq, qnz = _q6_unit_np(Qm)
+    qids, Uq = qids_all[qnz], Uq[qnz]  # zero-norm queries excluded
+    # LUT[q, m, j] = <query subvector, codebook centroid> — exact ints
+    LUT = np.einsum("qmd,mjd->qmj", Uq.reshape(len(Uq), M, dsub), Bq)
 
     probe_mask = None
     probed_union: list[int] = []
+    Cq = None
     if ivf:
         if centroids is not None:
-            C = np.asarray(centroids, dtype=np.float64)
+            Cq = np.floor(
+                np.asarray(centroids, dtype=np.float64) * _Q6 + 0.5
+            )
         else:
             if num_cells is None:
-                num_cells = _derived_num_cells(
-                    _corpus_count(corpus, memo_key)
-                )
-            C = _train_centroids(
+                num_cells = _derived_num_cells(_corpus_count(corpus, memo_key))
+            Cq = _train_centroids_q6(
                 corpus, vec_col, num_cells, train_sample, lloyd_iters,
-                seed, id_col=id_col, memo_key=memo_key,
+                id_col=id_col, memo_key=memo_key,
             )
-        npr = n_probe_cells if n_probe_cells else max(4, len(C) // 4)
-        npr = min(npr, len(C))
-        sims = Q @ C.T
-        probe = np.argpartition(-sims, npr - 1, axis=1)[:, :npr]
-        probe_mask = np.zeros((len(Q), len(C)), dtype=bool)
-        probe_mask[np.arange(len(Q))[:, None], probe] = True
+        npr = n_probe_cells if n_probe_cells else max(4, len(Cq) // 4)
+        npr = min(npr, len(Cq))
+        sims = Uq @ Cq.T  # exact ints
+        # stable sort on -sims keeps ascending cell among ties — the
+        # SQL row_number (dot DESC, cell ASC); argpartition would pick
+        # arbitrarily at tied boundaries
+        probe = np.argsort(-sims, axis=1, kind="stable")[:, :npr]
+        probe_mask = np.zeros((len(Uq), len(Cq)), dtype=bool)
+        probe_mask[np.arange(len(Uq))[:, None], probe] = True
         probed_union = sorted(int(c) for c in np.unique(probe))
 
-    from typing import Iterator as _It
+    def enc_q(batches: _It[pd.DataFrame]) -> _It[pd.DataFrame]:
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            V = np.asarray(pdf["_v"].tolist(), dtype=np.float64)
+            U, nzm = _q6_unit_np(V)
+            U = U[nzm]
+            if not len(U):
+                continue
+            codes = _pq_encode_q(U, Bq)
+            out = {
+                "nn_id": pdf["_id"].to_numpy()[nzm],
+                "code": [row.tobytes() for row in codes],
+                "_qv": [row.tolist() for row in U],
+            }
+            if Cq is not None:
+                out["cell"] = np.argmax(U @ Cq.T, axis=1).astype(np.int32)
+            yield pd.DataFrame(out)
+
+    enc_schema = "nn_id long, code binary, _qv array<double>" + (
+        ", cell int" if ivf else ""
+    )
+    enc = register_persist(
+        corpus.select(
+            F.col(id_col).alias("_id"),
+            F.col(vec_col).cast("array<double>").alias("_v"),
+        ).mapInPandas(enc_q, enc_schema)
+    )
+    scan_in = (
+        enc.filter(F.col("cell").isin(probed_union)).select(
+            "nn_id", "code", "cell"
+        )
+        if ivf
+        else enc.select("nn_id", "code")
+    )
 
     # chunk the query axis so per-task peak memory is bounded by
     # Q_CHUNK x arrow-batch-rows doubles (~20 MB at defaults)
@@ -1015,26 +753,34 @@ def ann_topk_pq(
     # in-flight batch and OOMs executors before the guard helps
     Q_CHUNK = 256
 
-    def scan(batches: _It[pd.DataFrame]) -> _It[pd.DataFrame]:
+    def scan_q(batches: _It[pd.DataFrame]) -> _It[pd.DataFrame]:
         for pdf in batches:
             if not len(pdf):
                 continue
+            # sort batch rows by nn_id so a stable sort on -scores
+            # breaks ties toward the SMALLER nn_id (== SQL ORDER BY
+            # adc DESC, nn_id ASC)
+            pdf = pdf.sort_values("nn_id", kind="stable")
             codes = np.frombuffer(
                 b"".join(pdf["code"]), dtype=np.uint8
             ).reshape(len(pdf), M)
             ids = pdf["nn_id"].to_numpy()
-            cells = (
-                pdf["cell"].to_numpy() if probe_mask is not None else None
-            )
+            cells = pdf["cell"].to_numpy() if probe_mask is not None else None
             r = min(rerank, len(ids))
             for q0 in range(0, len(qids), Q_CHUNK):
                 lut = LUT[q0 : q0 + Q_CHUNK]
                 # ADC: score[q, x] = sum_m lut[q, m, codes[x, m]] —
-                # one vectorized gather per subspace (M is 8; the
-                # (chunk, nx) gather is the hot loop, pure numpy)
+                # one vectorized gather per subspace
                 scores = np.zeros((len(lut), len(ids)))
                 for m in range(M):
                     scores += lut[:, m, :][:, codes[:, m]]
+                # self matches masked HERE so the partial top-k is the
+                # exact superset of the SQL's global (self-excluded) one
+                scores = np.where(
+                    ids[None, :] == qids[q0 : q0 + Q_CHUNK, None],
+                    -np.inf,
+                    scores,
+                )
                 if cells is not None:
                     # IVF: a query only scores candidates in its own
                     # probed cells (the union filter upstream already
@@ -1044,7 +790,7 @@ def ann_topk_pq(
                         scores,
                         -np.inf,
                     )
-                top = np.argpartition(-scores, r - 1, axis=1)[:, :r]
+                top = np.argsort(-scores, axis=1, kind="stable")[:, :r]
                 adc = np.take_along_axis(scores, top, axis=1).ravel()
                 keep = np.isfinite(adc)
                 yield pd.DataFrame(
@@ -1057,45 +803,8 @@ def ann_topk_pq(
                     }
                 )
 
-    if probe_mask is not None:
-
-        def enc_with_cell(
-            batches: _It[pd.DataFrame],
-        ) -> _It[pd.DataFrame]:
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                V = np.asarray(pdf["_v"].tolist(), dtype=np.float64)
-                V = V / np.linalg.norm(V, axis=1, keepdims=True)
-                cell = np.argmax(V @ C.T, axis=1).astype(np.int32)
-                out = np.empty((len(V), M), dtype=np.uint8)
-                for m in range(M):
-                    S = V[:, m * dsub : (m + 1) * dsub]
-                    d2 = ((S[:, None, :] - B[m][None, :, :]) ** 2).sum(
-                        axis=2
-                    )
-                    out[:, m] = np.argmin(d2, axis=1).astype(np.uint8)
-                yield pd.DataFrame(
-                    {
-                        "nn_id": pdf["nn_id"],
-                        "cell": cell,
-                        "code": [row.tobytes() for row in out],
-                    }
-                )
-
-        enc = corpus.select(
-            F.col(id_col).alias("nn_id"),
-            F.col(vec_col).cast("array<double>").alias("_v"),
-        ).mapInPandas(
-            enc_with_cell, "nn_id long, cell int, code binary"
-        ).filter(F.col("cell").isin(probed_union))
-    else:
-        enc = pq_encode(corpus, B, id_col=id_col, vec_col=vec_col)
-    scan_schema = (
-        "query_id long, nn_id long, adc double"
-    )
-    partial = enc.mapInPandas(scan, scan_schema).filter(
-        F.col("query_id") != F.col("nn_id")
+    partial = scan_in.mapInPandas(
+        scan_q, "query_id long, nn_id long, adc double"
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("adc"), F.asc("nn_id"))
     pool = (
@@ -1103,7 +812,19 @@ def ann_topk_pq(
         .filter(F.col("_r") <= rerank)
         .select("query_id", "nn_id")
     )
-    return _rerank_topk(pool, queries, corpus, id_col, vec_col, k)
+    cv = enc.select(F.col("nn_id").alias("_id"), "_qv")
+    if queries is corpus:
+        qv = cv
+    else:
+        # bounded query batch (<= max_queries, already on the driver)
+        qv = queries.sparkSession.createDataFrame(
+            [(int(i), [float(x) for x in u]) for i, u in zip(qids, Uq)],
+            "_id long, _qv array<double>",
+        )
+    # gather=False: the PQ rerank pool is <= rerank per query, far too
+    # small to repay the gather's bounded-collect actions (see the
+    # _rerank_topk_q note) — keep the r11 join-attach shape here
+    return _rerank_topk_q(pool, qv, cv, k, gather=False)
 
 
 def ann_topk_ivf(
@@ -1116,10 +837,8 @@ def ann_topk_ivf(
     n_probe_cells: int | None = None,
     train_sample: int = 10000,
     lloyd_iters: int = 5,
-    seed: int = 42,
     memo_key: str | None = None,
     centroids: np.ndarray | None = None,
-    quantized: bool = False,
 ) -> DataFrame:
     """Approximate top-k via IVF (inverted-file) coarse quantization:
     k-means cells over a bounded training sample, corpus rows assigned
@@ -1128,9 +847,19 @@ def ann_topk_ivf(
 
     Centroid training collects ≤``train_sample`` vectors to the driver
     and runs a few Lloyd iterations in numpy — bounded, deterministic
-    (seeded init), and standard IVF practice: the quantizer is trained
-    on a sample, applied distributively. Assignment is one Arrow-batch
-    matmul per partition against the broadcast centroid matrix.
+    (strided init, integer Lloyd steps; _train_centroids_q6), and
+    standard IVF practice: the quantizer is trained on a sample,
+    applied distributively. Assignment and probe ranking are one
+    map-only Arrow pass per partition against the closure-captured
+    centroid matrix.
+
+    Engine-portable end to end: quantizer, cell assignment, probe
+    ranking AND the final re-rank all run on the Q6 integer lattice
+    (_q6_unit_np) — every dot product exact, every tie broken (dot
+    DESC, id/cell ASC) — so the emitted (query_id, nn_id, cos_sim, rk)
+    rows are reproducible bit-for-bit by the DuckDB twin
+    (functions/kmeans_oracle.py). cos_sim is the Q6-lattice cosine
+    (within 1e-5 of exact); zero-norm vectors are excluded.
 
     Scale: the candidate join moves only (id, cell); expected candidate
     fraction ~= n_probe_cells / num_cells of the corpus, concentrated
@@ -1142,119 +871,10 @@ def ann_topk_ivf(
     n_probe_cells to num_cells/4 (preserving the probed-fraction —
     and so the recall/cost point — as the corpus scales); pass
     explicit values to pin either. ``memo_key`` memoizes count +
-    centroids across invocations (see _train_centroids); ``centroids``
-    serves a pre-trained quantizer (save_centroids/load_centroids —
-    the cross-session index lifecycle) and skips training.
-
-    ``quantized=True`` runs the ENGINE-PORTABLE path end-to-end:
-    quantizer, cell assignment, probe ranking, AND the final re-rank
-    all on the Q6 integer lattice (_q6_unit_np) — every dot product
-    exact, every tie broken (dot DESC, id/cell ASC) — so the emitted
-    (query_id, nn_id, cos_sim, rk) rows are reproducible bit-for-bit
-    by the DuckDB twin (functions/kmeans_oracle.py). cos_sim is the
-    Q6-lattice cosine (within 1e-5 of exact); zero-norm vectors are
-    excluded. Same plan shape as the float path: map-only Arrow
-    assignment, narrow (id, cell) candidate exchange, JVM fold dots."""
-    from pyspark.sql.functions import pandas_udf
-
-    if quantized:
-        return _ann_topk_ivf_q(
-            queries, corpus, id_col, vec_col, k, num_cells,
-            n_probe_cells, train_sample, lloyd_iters, memo_key, centroids,
-        )
-    if centroids is not None:
-        C = np.asarray(centroids, dtype=np.float64)
-    else:
-        if num_cells is None:
-            num_cells = _derived_num_cells(_corpus_count(corpus, memo_key))
-        C = _train_centroids(
-            corpus, vec_col, num_cells, train_sample, lloyd_iters, seed,
-            id_col=id_col, memo_key=memo_key,
-        )
-    if n_probe_cells is None:
-        n_probe_cells = max(4, len(C) // 4)
-
-    @pandas_udf("array<int>")
-    def probe_cells(s: pd.Series) -> pd.Series:
-        V = np.asarray(s.tolist(), dtype=np.float64)
-        if V.size == 0:
-            return pd.Series([], dtype=object)
-        V = V / np.linalg.norm(V, axis=1, keepdims=True)
-        sims = V @ C.T
-        # argpartition (O(cells)) then sort only the probe prefix —
-        # cheaper than a full argsort when num_cells >> n_probe_cells.
-        # kth is clamped: the trained cell count is min(num_cells,
-        # len(sample)), which a tiny corpus can push below
-        # n_probe_cells — an unclamped kth raises "kth out of bounds".
-        kth = min(n_probe_cells, sims.shape[1]) - 1
-        part = np.argpartition(-sims, kth, axis=1)[:, : kth + 1]
-        order = np.argsort(
-            -np.take_along_axis(sims, part, axis=1), axis=1
-        )
-        top = np.take_along_axis(part, order, axis=1).astype(np.int32)
-        return pd.Series(list(top))
-
-    @pandas_udf("int")
-    def nearest_cell(s: pd.Series) -> pd.Series:
-        # corpus assignment needs only the argmax, not a ranked probe
-        # list — one O(cells) pass per row (r2's full argsort wasted
-        # ~num_cells*log(num_cells) per corpus row)
-        V = np.asarray(s.tolist(), dtype=np.float64)
-        if V.size == 0:
-            return pd.Series([], dtype="int32")
-        V = V / np.linalg.norm(V, axis=1, keepdims=True)
-        return pd.Series(np.argmax(V @ C.T, axis=1).astype(np.int32))
-
-    v = F.col(vec_col).cast("array<double>")
-    if queries is corpus:
-        # self-search: one probe-kernel pass serves both roles — the
-        # ranked probe list's head IS the argmax cell assignment
-        from clinvar_pipeline_spark.caching import register_persist
-
-        shared = register_persist(
-            corpus.select(F.col(id_col).alias("_id"), probe_cells(v).alias("_pc"))
-        )
-        c_cells = shared.select(
-            F.col("_id").alias("nn_id"), F.col("_pc").getItem(0).alias("cell")
-        )
-        q_cells = shared.select(
-            F.col("_id").alias("query_id"), F.explode("_pc").alias("cell")
-        )
-    else:
-        c_cells = corpus.select(
-            F.col(id_col).alias("nn_id"),
-            nearest_cell(v).alias("cell"),
-        )
-        q_cells = queries.select(
-            F.col(id_col).alias("query_id"),
-            F.explode(probe_cells(v)).alias("cell"),
-        )
-    pairs = (
-        q_cells.join(c_cells, "cell")
-        .filter(F.col("query_id") != F.col("nn_id"))
-        .select("query_id", "nn_id")
-        .dropDuplicates(["query_id", "nn_id"])
-    )
-    return _rerank_topk(pairs, queries, corpus, id_col, vec_col, k)
-
-
-def _ann_topk_ivf_q(
-    queries: DataFrame,
-    corpus: DataFrame,
-    id_col: str,
-    vec_col: str,
-    k: int,
-    num_cells: int | None,
-    n_probe_cells: int | None,
-    train_sample: int,
-    lloyd_iters: int,
-    memo_key: str | None,
-    centroids: np.ndarray | None,
-) -> DataFrame:
-    """Quantized (engine-portable) IVF — see ann_topk_ivf(quantized=
-    True). Same plan shape as the float path; all scoring on the Q6
-    integer lattice with explicit tie-breaks, so the DuckDB twin
-    (functions/kmeans_oracle.py) reproduces rows bit-for-bit."""
+    centroids across invocations (see _train_centroids_q6);
+    ``centroids`` serves a pre-trained quantizer
+    (save_centroids/load_centroids — the cross-session index
+    lifecycle) and skips training."""
     from typing import Iterator as _It
 
     from clinvar_pipeline_spark.caching import register_persist
@@ -1270,6 +890,8 @@ def _ann_topk_ivf_q(
         )
     if n_probe_cells is None:
         n_probe_cells = max(4, len(Cq) // 4)
+    # clamped: the trained cell count is min(num_cells, len(sample)),
+    # which a tiny corpus can push below n_probe_cells
     npr = min(n_probe_cells, len(Cq))
 
     def probe_q(batches: _It[pd.DataFrame]) -> _It[pd.DataFrame]:
@@ -1447,7 +1069,7 @@ def _rerank_topk_q(
     k: int,
     gather: bool = True,
 ) -> DataFrame:
-    """Quantized re-rank shared by the IVF/PQ engine-portable paths:
+    """Re-rank shared by the LSH/IVF/PQ paths:
     exact integer dot over the Q6 unit vectors (``_id``, ``_qv``
     frames), rank on the RAW dot (ties nn_id ASC), emit the Q6-lattice
     cosine qround'd to 6 plus the int rank.
@@ -1590,207 +1212,6 @@ def _pq_encode_q(U: np.ndarray, Bq: np.ndarray) -> np.ndarray:
     return out
 
 
-def _ann_topk_pq_q(
-    queries: DataFrame,
-    corpus: DataFrame,
-    id_col: str,
-    vec_col: str,
-    k: int,
-    n_subspaces: int,
-    pq_k: int,
-    rerank: int,
-    train_sample: int,
-    lloyd_iters: int,
-    memo_key: str | None,
-    max_queries: int,
-    ivf: bool,
-    num_cells: int | None,
-    n_probe_cells: int | None,
-    codebooks: np.ndarray | None,
-    centroids: np.ndarray | None,
-) -> DataFrame:
-    """Quantized (engine-portable) PQ / IVF-PQ — see
-    ann_topk_pq(quantized=True). Same plan shape as the float path
-    (bounded driver query batch + LUT closure, map-only encode+scan
-    with per-batch partial top-``rerank``, one narrow id exchange,
-    re-rank joins) with every score an exact integer on the Q6
-    lattice and every selection tie-broken (score DESC, nn_id ASC) —
-    reproducible bit-for-bit by the DuckDB twin
-    (functions/kmeans_oracle.py). Self matches are masked INSIDE the
-    scan (not post-filtered) so the partial top-k is the exact
-    superset of the global one the SQL computes."""
-    from typing import Iterator as _It
-
-    from clinvar_pipeline_spark.caching import register_persist
-
-    if codebooks is not None:
-        Bq = np.floor(np.asarray(codebooks, dtype=np.float64) * _Q6 + 0.5)
-    else:
-        Bq = _train_pq_codebooks_q6(
-            corpus, vec_col, n_subspaces, pq_k, train_sample, lloyd_iters,
-            id_col=id_col, memo_key=memo_key,
-        )
-    M, K, dsub = Bq.shape
-
-    q_rows = (
-        queries.select(
-            F.col(id_col).alias("_qid"),
-            F.col(vec_col).cast("array<double>").alias("_qv"),
-        )
-        .orderBy("_qid")
-        .limit(max_queries + 1)
-        .collect()
-    )
-    if len(q_rows) > max_queries:
-        raise ValueError(
-            f"ann_topk_pq serves bounded query batches (max_queries="
-            f"{max_queries}); for corpus-scale self-search use "
-            "ann_topk_ivf/ann_topk_hyperplane"
-        )
-    if not q_rows:
-        return queries.sparkSession.createDataFrame(
-            [], "query_id long, nn_id long, cos_sim double, rk int"
-        )
-    qids_all = np.asarray([r["_qid"] for r in q_rows])
-    Qm = np.asarray([r["_qv"] for r in q_rows], dtype=np.float64)
-    Uq, qnz = _q6_unit_np(Qm)
-    qids, Uq = qids_all[qnz], Uq[qnz]  # zero-norm queries excluded
-    # LUT[q, m, j] = <query subvector, codebook centroid> — exact ints
-    LUT = np.einsum("qmd,mjd->qmj", Uq.reshape(len(Uq), M, dsub), Bq)
-
-    probe_mask = None
-    probed_union: list[int] = []
-    Cq = None
-    if ivf:
-        if centroids is not None:
-            Cq = np.floor(
-                np.asarray(centroids, dtype=np.float64) * _Q6 + 0.5
-            )
-        else:
-            if num_cells is None:
-                num_cells = _derived_num_cells(_corpus_count(corpus, memo_key))
-            Cq = _train_centroids_q6(
-                corpus, vec_col, num_cells, train_sample, lloyd_iters,
-                id_col=id_col, memo_key=memo_key,
-            )
-        npr = n_probe_cells if n_probe_cells else max(4, len(Cq) // 4)
-        npr = min(npr, len(Cq))
-        sims = Uq @ Cq.T  # exact ints
-        # stable sort on -sims keeps ascending cell among ties — the
-        # SQL row_number (dot DESC, cell ASC); argpartition would pick
-        # arbitrarily at tied boundaries
-        probe = np.argsort(-sims, axis=1, kind="stable")[:, :npr]
-        probe_mask = np.zeros((len(Uq), len(Cq)), dtype=bool)
-        probe_mask[np.arange(len(Uq))[:, None], probe] = True
-        probed_union = sorted(int(c) for c in np.unique(probe))
-
-    def enc_q(batches: _It[pd.DataFrame]) -> _It[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            V = np.asarray(pdf["_v"].tolist(), dtype=np.float64)
-            U, nzm = _q6_unit_np(V)
-            U = U[nzm]
-            if not len(U):
-                continue
-            codes = _pq_encode_q(U, Bq)
-            out = {
-                "nn_id": pdf["_id"].to_numpy()[nzm],
-                "code": [row.tobytes() for row in codes],
-                "_qv": [row.tolist() for row in U],
-            }
-            if Cq is not None:
-                out["cell"] = np.argmax(U @ Cq.T, axis=1).astype(np.int32)
-            yield pd.DataFrame(out)
-
-    enc_schema = "nn_id long, code binary, _qv array<double>" + (
-        ", cell int" if ivf else ""
-    )
-    enc = register_persist(
-        corpus.select(
-            F.col(id_col).alias("_id"),
-            F.col(vec_col).cast("array<double>").alias("_v"),
-        ).mapInPandas(enc_q, enc_schema)
-    )
-    scan_in = (
-        enc.filter(F.col("cell").isin(probed_union)).select(
-            "nn_id", "code", "cell"
-        )
-        if ivf
-        else enc.select("nn_id", "code")
-    )
-
-    Q_CHUNK = 256
-
-    def scan_q(batches: _It[pd.DataFrame]) -> _It[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            # sort batch rows by nn_id so a stable sort on -scores
-            # breaks ties toward the SMALLER nn_id (== SQL ORDER BY
-            # adc DESC, nn_id ASC)
-            pdf = pdf.sort_values("nn_id", kind="stable")
-            codes = np.frombuffer(
-                b"".join(pdf["code"]), dtype=np.uint8
-            ).reshape(len(pdf), M)
-            ids = pdf["nn_id"].to_numpy()
-            cells = pdf["cell"].to_numpy() if probe_mask is not None else None
-            r = min(rerank, len(ids))
-            for q0 in range(0, len(qids), Q_CHUNK):
-                lut = LUT[q0 : q0 + Q_CHUNK]
-                scores = np.zeros((len(lut), len(ids)))
-                for m in range(M):
-                    scores += lut[:, m, :][:, codes[:, m]]
-                # self matches masked HERE so the partial top-k is the
-                # exact superset of the SQL's global (self-excluded) one
-                scores = np.where(
-                    ids[None, :] == qids[q0 : q0 + Q_CHUNK, None],
-                    -np.inf,
-                    scores,
-                )
-                if cells is not None:
-                    scores = np.where(
-                        probe_mask[q0 : q0 + Q_CHUNK][:, cells],
-                        scores,
-                        -np.inf,
-                    )
-                top = np.argsort(-scores, axis=1, kind="stable")[:, :r]
-                adc = np.take_along_axis(scores, top, axis=1).ravel()
-                keep = np.isfinite(adc)
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.repeat(
-                            qids[q0 : q0 + Q_CHUNK], r
-                        )[keep],
-                        "nn_id": ids[top].ravel()[keep],
-                        "adc": adc[keep],
-                    }
-                )
-
-    partial = scan_in.mapInPandas(
-        scan_q, "query_id long, nn_id long, adc double"
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("adc"), F.asc("nn_id"))
-    pool = (
-        partial.withColumn("_r", F.row_number().over(w))
-        .filter(F.col("_r") <= rerank)
-        .select("query_id", "nn_id")
-    )
-    cv = enc.select(F.col("nn_id").alias("_id"), "_qv")
-    if queries is corpus:
-        qv = cv
-    else:
-        # bounded query batch (<= max_queries, already on the driver)
-        qv = queries.sparkSession.createDataFrame(
-            [(int(i), [float(x) for x in u]) for i, u in zip(qids, Uq)],
-            "_id long, _qv array<double>",
-        )
-    # gather=False: the PQ rerank pool is <= rerank per query, far too
-    # small to repay the gather's bounded-collect actions (see the
-    # _rerank_topk_q note) — keep the r11 join-attach shape here
-    return _rerank_topk_q(pool, qv, cv, k, gather=False)
-
-
 def _lsh_q6_frame(
     df: DataFrame, id_col: str, vec_col: str, W: np.ndarray
 ) -> DataFrame:
@@ -1834,8 +1255,8 @@ def _lsh_q6_frame(
 def _lsh_key_exprs(num_tables: int, num_planes: int, n_probes: int,
                    probe: bool) -> list:
     """Global bucket keys (t << P) + b, plus the Hamming-1 multi-probe
-    XOR variants on the probe side — identical to the float path's
-    keying so the candidate semantics match the established operator."""
+    XOR variants on the probe side (``probe=True``); the other side
+    holds only its exact bucket per table."""
     keys = []
     for t in range(num_tables):
         b = F.col("_bs").getItem(t)
@@ -1848,6 +1269,7 @@ def _lsh_key_exprs(num_tables: int, num_planes: int, n_probes: int,
 
 
 def ann_topk_lsh_q(
+    queries: DataFrame,
     corpus: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
@@ -1858,29 +1280,49 @@ def ann_topk_lsh_q(
     seed: int = 42,
     dim: int = 64,
 ) -> DataFrame:
-    """Quantized (engine-portable) self-search sign-LSH ANN — the r9
-    graduation of the last hash family the oracle could not reproduce:
-    planes come from the md5-prefix generator
-    (functions.hashes.lsh_plane_matrix_q) and every dot runs on the Q6
-    integer lattice, so buckets, probe keys, candidate pairs, AND the
-    re-ranked (query_id, nn_id, cos_sim, rk) rows are reproducible
-    bit-for-bit by the DuckDB twin (functions/lsh_oracle.py). Same
-    plan shape as ann_topk_hyperplane's self-search: one Arrow bucket
-    pass, narrow (id, key) exchanges, dedup before vectors, JVM fold
-    re-rank."""
+    """Approximate top-k: multi-table sign-LSH bucket join + exact
+    re-rank inside candidate buckets.
+
+    ``num_tables`` hash tables are unioned — the standard LSH recall
+    amplifier: a true neighbor is found if ANY table agrees on all
+    ``num_planes`` sign bits. ``n_probes`` > 1 additionally probes the
+    query's buckets at Hamming distance 1 (multi-probe), trading
+    shuffle volume for recall. Defaults are tuned on the driver
+    testdata (near-uniform 64-dim vectors): recall ~0.5 of exact top-5
+    while scoring ~20% of the corpus per query; on genuinely clustered
+    embeddings (angles 20-40°) the same config recalls >0.9.
+
+    Engine-portable: planes come from the md5-prefix generator
+    (functions.hashes.lsh_plane_matrix_q, keyed by ``seed``) and every
+    dot runs on the Q6 integer lattice, so buckets, probe keys,
+    candidate pairs, AND the re-ranked (query_id, nn_id, cos_sim, rk)
+    rows are reproducible bit-for-bit by the DuckDB twin
+    (functions/lsh_oracle.py). Zero-norm vectors are excluded.
+
+    Scale: one Arrow bucket pass per side, then the candidate join
+    moves ONLY (id, bucket) pairs — never the vectors; pairs are
+    deduped narrow before any vector is attached for the re-rank.
+    Self-search (``queries is corpus``) runs the bucket kernel once
+    and derives both roles' keys from one persisted frame. Bucket
+    skew (dense regions) is handled by AQE skew-join."""
     from clinvar_pipeline_spark.functions.hashes import lsh_plane_matrix_q
 
     from clinvar_pipeline_spark.caching import register_persist
 
     W = lsh_plane_matrix_q(num_tables, num_planes, dim, seed)
-    shared = register_persist(_lsh_q6_frame(corpus, id_col, vec_col, W))
-    c = shared.select(
+    c_side = register_persist(_lsh_q6_frame(corpus, id_col, vec_col, W))
+    q_side = (
+        c_side
+        if queries is corpus
+        else register_persist(_lsh_q6_frame(queries, id_col, vec_col, W))
+    )
+    c = c_side.select(
         F.col("_id").alias("nn_id"),
         F.explode(
             F.array(*_lsh_key_exprs(num_tables, num_planes, n_probes, False))
         ).alias("bucket"),
     )
-    q = shared.select(
+    q = q_side.select(
         F.col("_id").alias("query_id"),
         F.explode(
             F.array(*_lsh_key_exprs(num_tables, num_planes, n_probes, True))
@@ -1892,7 +1334,7 @@ def ann_topk_lsh_q(
         .select("query_id", "nn_id")
         .dropDuplicates(["query_id", "nn_id"])
     )
-    return _rerank_topk_q(pairs, shared, shared, k)
+    return _rerank_topk_q(pairs, q_side, c_side, k)
 
 
 def lsh_neardup_pairs_q(
@@ -1906,13 +1348,22 @@ def lsh_neardup_pairs_q(
     seed: int = 42,
     dim: int = 64,
 ) -> DataFrame:
-    """Quantized (engine-portable) sign-LSH near-dup pairs — the
-    graduation twin of lsh_neardup_pairs: md5-derived integer planes,
-    Q6 lattice buckets and cosines, the same asymmetric
-    probe-vs-exact candidate join (id_a probes, id_b holds the exact
-    bucket, id_a < id_b), threshold compared on the raw integer dot
-    against the same threshold·1e12 double the SQL twin inlines.
-    Emits (id_a, id_b, cos_sim) qround'd to 6."""
+    """Embedding-cosine near-duplicate pairs via sign-LSH buckets — the
+    label-free scale path beside the label-blocked exact query
+    (queries.q_embedding_neardup_pairs). Candidates come from the same
+    bucket join as :func:`ann_topk_lsh_q` with the asymmetric
+    probe-vs-exact roles (id_a probes, id_b holds the exact bucket,
+    id_a < id_b); the exact lattice cosine then verifies each
+    candidate, compared on the raw integer dot against the same
+    threshold·1e12 double the DuckDB twin (functions/lsh_oracle.py)
+    inlines. Emits (id_a, id_b, cos_sim) qround'd to 6.
+
+    Sign-LSH collision probability per plane is (1 - angle/pi), so the
+    operator targets HIGH-similarity near-dups: at cosine 0.99
+    (angle ~8 deg) a pair survives one 8-plane table with p ~ 0.69 and
+    all 6 tables miss with p ~ 1e-3 before multi-probe; at cosine 0.5
+    recall degrades by design — near-uniform pairs are the ANN top-k
+    queries' job, not dedup's."""
     from clinvar_pipeline_spark.functions.hashes import lsh_plane_matrix_q
 
     from clinvar_pipeline_spark.caching import register_persist

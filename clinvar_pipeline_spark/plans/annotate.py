@@ -329,7 +329,6 @@ def annotate_run(
     carpe = carpe_compliant(variants).localCheckpoint(eager=True)
     pm = pubmed_ids(xdb_ids)
     conds = variant_conditions(carpe)
-    var_aliases = aliases
 
     # disease track: concept path wins per variant-with-mapping;
     # name tiers cover the rest (the reference falls through per
@@ -340,15 +339,15 @@ def annotate_run(
     concept_vars = cterms.select("rgd_id").distinct()
     name_conds = conds.join(concept_vars, "rgd_id", "left_anti")
     nterms, unmatched = tiered_term_match(
-        name_conds, var_aliases, ont_terms, ont_synonyms, "RDO"
+        name_conds, aliases, ont_terms, ont_synonyms, "RDO"
     )
     d_terms = cterms.unionByName(
         nterms.select("rgd_id", "term_acc", "term", "match_by")
     ).distinct()
 
     # phenotype track: name tiers only (VariantAnnotator.java:497-507)
-    h_terms, h_unmatched = tiered_term_match(
-        conds, var_aliases, ont_terms, ont_synonyms, "HP"
+    h_terms, _ = tiered_term_match(
+        conds, aliases, ont_terms, ont_synonyms, "HP"
     )
 
     def variant_annots(terms: DataFrame, aspect: str) -> DataFrame:

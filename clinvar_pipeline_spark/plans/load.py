@@ -35,9 +35,7 @@ Stage map (reference -> here):
 
 Scale: the release is partitioned by input splits; every lookup table
 (genes, prev xdb key-52 slice) is broadcast; the only fact-fact
-shuffles are the diff_sync full-outer joins, all keyed on rgd_id so
-one exchange serves every satellite when snapshots are bucketed by
-rgd_id.
+shuffles are the diff_sync full-outer joins.
 """
 
 from __future__ import annotations

@@ -1030,9 +1030,10 @@ def q_embedding_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     same-semantics reference. Threshold 0.45 on the near-uniform
     testdata keeps the emitted set tiny; the full-recall guarantee on
     genuinely near-duplicate vectors (cos >= 0.99) is pinned by
-    tests/test_lsh_neardup.py on constructed duplicates (float path).
+    tests/test_lsh_neardup.py on constructed duplicates, on this same
+    operator.
 
-    ORACLE-BACKED since r9: the quantized path
+    ORACLE-BACKED since r9: the operator
     (operators/similarity.lsh_neardup_pairs_q) uses md5-derived
     integer planes + Q6 lattice scoring, and the DuckDB twin
     (functions/lsh_oracle.py) reproduces the asymmetric

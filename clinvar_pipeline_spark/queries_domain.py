@@ -1202,7 +1202,7 @@ def q_multimodal_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------
-# ANN: hyperplane-LSH bucketed top-k (scale path for similarity search)
+# ANN: sign-LSH, IVF and PQ top-k (scale paths for similarity search)
 # ---------------------------------------------------------------------
 
 from clinvar_pipeline_spark.functions.lsh_oracle import (
@@ -1213,23 +1213,24 @@ from clinvar_pipeline_spark.functions.lsh_oracle import (
 @register("ann_topk", _lsh_ann_oracle(k=5))
 def q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate top-5 cosine neighbors via sign-LSH bucket join +
-    in-bucket re-rank with multi-probe. Recall vs the exact baseline
-    is pinned by tests (float path); q_topk_cosine is the exact twin.
+    in-bucket re-rank with multi-probe (operators/similarity.
+    ann_topk_lsh_q, self-search). Recall vs the exact baseline is
+    pinned by tests/test_multimodal_similarity.py on this same
+    operator; q_topk_cosine is the exact twin.
 
     ORACLE-BACKED since r9 (previously the 'permanently rows-only'
-    poster child): the quantized path (operators/similarity.
-    ann_topk_lsh_q) draws its hyperplanes from the md5-prefix
-    generator — the simhash portable-hash discipline applied to plane
-    GENERATION — and scores on the Q6 integer lattice, so buckets,
-    multi-probe keys, candidates, and the re-ranked rows are
-    reproduced bit-for-bit by the DuckDB twin
-    (functions/lsh_oracle.py). Same plan shape as the float operator:
-    one Arrow bucket pass over the persisted spread input, narrow
-    (id, key) exchanges, dedup before vectors, JVM fold re-rank."""
+    poster child): the operator draws its hyperplanes from the
+    md5-prefix generator — the simhash portable-hash discipline
+    applied to plane GENERATION — and scores on the Q6 integer
+    lattice, so buckets, multi-probe keys, candidates, and the
+    re-ranked rows are reproduced bit-for-bit by the DuckDB twin
+    (functions/lsh_oracle.py). Plan: one Arrow bucket pass over the
+    persisted spread input, narrow (id, key) exchanges, dedup before
+    vectors, then the re-rank."""
     from clinvar_pipeline_spark.operators.similarity import ann_topk_lsh_q
 
     e = _persist(_spread(_t(spark, sf_dir, "embeddings"), parts=8))
-    return ann_topk_lsh_q(e, k=5)
+    return ann_topk_lsh_q(e, e, k=5)
 
 
 from clinvar_pipeline_spark.functions.kmeans_oracle import (
@@ -1241,21 +1242,21 @@ from clinvar_pipeline_spark.functions.kmeans_oracle import (
 def q_ann_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-ANN top-5 (operators/similarity.py ann_topk_ivf): k-means
     coarse quantizer + probed-cell candidate join + re-rank.
-    Complements ann_topk (hyperplane LSH) — IVF candidates are
+    Complements ann_topk (sign-LSH) — IVF candidates are
     spatially coherent, so recall per scored candidate is higher on
     clustered corpora; LSH needs no training pass. Recall floor pinned
-    by tests/test_multimodal_similarity.py.
+    by tests/test_multimodal_similarity.py on this same operator.
 
-    ORACLE-BACKED since r9 (previously rows-only): quantized=True runs
-    the deterministic Q6 integer quantizer + lattice scoring end-to-end
-    (operators/similarity._ann_topk_ivf_q), and the DuckDB twin
-    (functions/kmeans_oracle.py) unrolls the same k-means iterations,
-    probe ranking, candidate join, and re-rank — rows match
-    bit-for-bit, cos_sim within 1e-5 of the float path's exact cosine.
+    ORACLE-BACKED since r9 (previously rows-only): the operator runs
+    the deterministic Q6 integer quantizer + lattice scoring end to
+    end, and the DuckDB twin (functions/kmeans_oracle.py) unrolls the
+    same k-means iterations, probe ranking, candidate join, and
+    re-rank — rows match bit-for-bit, cos_sim within 1e-5 of the
+    exact cosine.
 
-    The spread input is persisted: the plan consumes it five times
-    (driver-side training sample, cell assignment for both roles,
-    normalized vectors for both re-rank joins) — r2's unexplained 2x
+    The spread input is persisted: the plan consumes it more than once
+    (driver-side training sample, the probe/assignment kernel, the
+    corpus count) — r2's unexplained 2x
     cold regression was each consumer re-running the repartition
     exchange + Arrow kernels; the training-sample collect now also
     primes the cache instead of being a throwaway job. 8-way spread,
@@ -1276,9 +1277,7 @@ def q_ann_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cell count) is corpus state — train once per sf_dir per session,
     # not once per invocation (r5's warm-slower-than-cold bench
     # regression was the per-invocation re-training job)
-    return ann_topk_ivf(
-        e, e, k=5, memo_key=f"{sf_dir}:embeddings", quantized=True
-    )
+    return ann_topk_ivf(e, e, k=5, memo_key=f"{sf_dir}:embeddings")
 
 
 from clinvar_pipeline_spark.functions.kmeans_oracle import (
@@ -1296,19 +1295,17 @@ def q_ann_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     index-free) and ann_topk_ivf (spatial cells). Recall floor,
     code-size contract, exact-duplicate guarantee, and the
     bounded-query guard are pinned by
-    tests/test_multimodal_similarity.py.
+    tests/test_multimodal_similarity.py on this same operator.
 
-    ORACLE-BACKED since r9 (previously rows-only): quantized=True runs
+    ORACLE-BACKED since r9 (previously rows-only): the operator runs
     the deterministic Q6 integer codebooks + integer ADC + lattice
-    re-rank (operators/similarity._ann_topk_pq_q), and the DuckDB twin
-    unrolls the same per-subspace k-means, encode, ADC pool, and
-    re-rank — rows match bit-for-bit."""
+    re-rank, and the DuckDB twin (functions/kmeans_oracle.py) unrolls
+    the same per-subspace k-means, encode, ADC pool, and re-rank —
+    rows match bit-for-bit."""
     from clinvar_pipeline_spark.operators.similarity import ann_topk_pq
 
     e = _persist(_spread(_t(spark, sf_dir, "embeddings"), parts=8))
-    return ann_topk_pq(
-        e, e, k=5, memo_key=f"{sf_dir}:embeddings", quantized=True
-    )
+    return ann_topk_pq(e, e, k=5, memo_key=f"{sf_dir}:embeddings")
 
 
 @register("ann_topk_ivfpq", _ivfpq_oracle(k=5, rerank=20))
@@ -1320,13 +1317,12 @@ def q_ann_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates. Full-probe equivalence to the pure scan and the recall
     floor are pinned by tests/test_multimodal_similarity.py.
 
-    ORACLE-BACKED since r9: the quantized path composes the
-    deterministic coarse quantizer (probe semijoin) with the integer
-    ADC; the DuckDB twin mirrors both (functions/kmeans_oracle.py)."""
+    ORACLE-BACKED since r9: the operator composes the deterministic
+    Q6 coarse quantizer (probe semijoin) with the integer ADC; the
+    DuckDB twin mirrors both (functions/kmeans_oracle.py)."""
     from clinvar_pipeline_spark.operators.similarity import ann_topk_pq
 
     e = _persist(_spread(_t(spark, sf_dir, "embeddings"), parts=8))
     return ann_topk_pq(
-        e, e, k=5, ivf=True, memo_key=f"{sf_dir}:embeddings",
-        quantized=True,
+        e, e, k=5, ivf=True, memo_key=f"{sf_dir}:embeddings"
     )

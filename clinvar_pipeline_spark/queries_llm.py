@@ -1941,15 +1941,16 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup over the embeddings table: k-means cells + intra-cell
     cosine ≥ τ → drop-list with surviving representative.
 
-    ORACLE-BACKED since r9 (previously rows-only): the quantized path
-    runs the deterministic Q6 integer k-means
+    ORACLE-BACKED since r9 (previously rows-only): the operator runs
+    the deterministic Q6 integer k-means
     (operators/similarity._train_centroids_q6 — strided init, integer
     Lloyd steps, exact lattice dots) and scores pairs on the same
     lattice, so the DuckDB twin (functions/kmeans_oracle.py) unrolls
     the identical iterations as CTEs and matches ids, keepers, AND
     sims bit-for-bit. The exact contract — identical-vector groups
     collapse to their min-id member, dissimilar vectors never drop —
-    stays pinned by tests/test_multimodal_similarity.py.
+    stays pinned by tests/test_llm_queries.py and
+    tests/test_kmeans_q6.py.
 
     τ here is 0.4, not the operator's production default 0.95: the
     synthetic embeddings are near-orthogonal (max pairwise cosine
@@ -1959,7 +1960,7 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _spread(_t(spark, sf_dir, "embeddings"), 8)
     return semantic_dedup(
         e, id_col="vec_id", vec_col="embedding", tau=0.4,
-        memo_key=f"{sf_dir}:embeddings", quantized=True,
+        memo_key=f"{sf_dir}:embeddings",
     ).orderBy("vec_id")
 
 

@@ -446,12 +446,12 @@ def test_cli_corpus_prep(spark, tmp_path):
     from clinvar_pipeline_spark.queries_domain import _spread, _t
 
     emb = _spread(_t(spark, "/root/testdata/sf0.001", "embeddings"), parts=8)
-    # quantized=True like the registry query: a loaded float book
-    # re-quantizes exactly (floor(b*1e6+0.5) recovers the Q6 ints),
-    # so artifact-served rows are bit-identical to in-session rows
+    # a loaded float book re-quantizes exactly (floor(b*1e6+0.5)
+    # recovers the Q6 ints), so artifact-served rows are bit-identical
+    # to in-session rows
     served = {
         tuple(r) for r in ann_topk_pq(
-            emb, emb, k=5, ivf=True, quantized=True,
+            emb, emb, k=5, ivf=True,
             codebooks=load_pq_codebooks(
                 spark, str(tmp_path / "prep" / "pq_index")
             ),

@@ -53,7 +53,7 @@ def test_drift_monitor_trips_on_shift_and_retrain_restores(spark):
     from clinvar_pipeline_spark.caching import clear_memo
 
     corpus_a = spark.createDataFrame(_clustered(400, seed=1), SCHEMA)
-    C = _train_centroids(corpus_a, "embedding", 16, 400, 5, 42,
+    C = _train_centroids(corpus_a, "embedding", 16, 400, 5,
                          id_col="vec_id")
     train_stats = assignment_distance_stats(corpus_a, C)
     assert train_stats["n"] == 400
@@ -70,7 +70,7 @@ def test_drift_monitor_trips_on_shift_and_retrain_restores(spark):
     assert r_shift > DRIFT_RETRAIN_THRESHOLD, r_shift
     # retrain on the shifted corpus restores the monitor
     clear_memo()
-    C2 = _train_centroids(corpus_b, "embedding", 16, 400, 5, 42,
+    C2 = _train_centroids(corpus_b, "embedding", 16, 400, 5,
                           id_col="vec_id")
     stats2 = assignment_distance_stats(corpus_b, C2)
     r_after = index_drift_ratio(corpus_b, C2, stats2)

@@ -1,12 +1,12 @@
 """Deterministic Q6 k-means quantizer (operators/similarity).
 
-The r9 graduation path: semantic_dedup and ann_topk_ivf run their
-quantized (engine-portable) mode in the registry and are DuckDB-exact
-at every SF via functions/kmeans_oracle.py — the cross-engine pin
+The r9 graduation path: semantic_dedup and ann_topk_ivf run on the
+Q6 integer lattice (engine-portable) and are DuckDB-exact at every SF
+via functions/kmeans_oracle.py — the cross-engine pin
 lives in the correctness gate. These tests pin the LOCAL contracts
 that make that possible: integer-lattice state, partitioning/repeat
 invariance, a pure-Python decimal-free twin of the trainer, and the
-quantized cosine staying within the lattice error bound of the exact
+lattice cosine staying within the lattice error bound of the exact
 cosine."""
 
 import numpy as np
@@ -100,12 +100,12 @@ def test_q6_unit_rejects_oversize_components():
 def test_quantized_ivf_matches_repeat_and_bounds_exact_cosine(spark):
     emb = _mk_emb(spark, n=80, dim=8, parts=4)
     out1 = sorted(
-        tuple(r) for r in ann_topk_ivf(emb, emb, k=3, quantized=True).collect()
+        tuple(r) for r in ann_topk_ivf(emb, emb, k=3).collect()
     )
     out2 = sorted(
         tuple(r)
         for r in ann_topk_ivf(
-            _mk_emb(spark, n=80, dim=8, parts=2), emb, k=3, quantized=True
+            _mk_emb(spark, n=80, dim=8, parts=2), emb, k=3
         ).collect()
     )
     assert out1 == out2 and len(out1) == 80 * 3
@@ -129,9 +129,7 @@ def test_quantized_semdedup_drops_identical_keeps_orthogonal(spark):
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     out = {
         r["vec_id"]: r
-        for r in semantic_dedup(
-            emb, tau=0.9, num_cells=2, quantized=True
-        ).collect()
+        for r in semantic_dedup(emb, tau=0.9, num_cells=2).collect()
     }
     assert set(out) == {2}
     # lattice cosine of an exact dup: 1.0 within the Q6 error bound
@@ -213,11 +211,11 @@ def test_float_trainers_are_q6_wrappers(spark):
 
     emb = _mk_emb(spark, n=60, dim=8, parts=2)
     Cq = _train_centroids_q6(emb, "embedding", 5, 1000, 2, id_col="vec_id")
-    C = _train_centroids(emb, "embedding", 5, 1000, 2, 42, id_col="vec_id")
+    C = _train_centroids(emb, "embedding", 5, 1000, 2, id_col="vec_id")
     assert np.array_equal(np.floor(C * 1e6 + 0.5), Cq)
     Bq = _train_pq_codebooks_q6(emb, "embedding", 4, 8, 1000, 2,
                                 id_col="vec_id")
-    B = _train_pq_codebooks(emb, "embedding", 4, 8, 1000, 2, 42,
+    B = _train_pq_codebooks(emb, "embedding", 4, 8, 1000, 2,
                             id_col="vec_id")
     assert np.array_equal(np.floor(B * 1e6 + 0.5), Bq)
 
@@ -227,7 +225,8 @@ def test_quantized_lsh_ann_recall_and_determinism(spark):
     on a corpus with planted near-duplicate pairs (cos >= 0.99) every
     planted neighbor must be recalled at rank 1 (the
     tests/test_lsh_neardup.py guarantee carried over), and repeated
-    runs over different partitionings return identical rows."""
+    runs over different partitionings return identical rows. A
+    distinct query frame gets the self-search rows of its own ids."""
     from clinvar_pipeline_spark.operators.similarity import (
         ann_topk_lsh_q,
         lsh_neardup_pairs_q,
@@ -243,13 +242,20 @@ def test_quantized_lsh_ann_recall_and_determinism(spark):
     emb = spark.createDataFrame(
         rows, "vec_id long, embedding array<float>"
     ).repartition(3)
-    out = ann_topk_lsh_q(emb, k=3, dim=64).collect()
+    out = ann_topk_lsh_q(emb, emb, k=3, dim=64).collect()
     top1 = {r["query_id"]: r["nn_id"] for r in out if r["rk"] == 1}
     for i in range(20):
         assert top1[i] == 100 + i, (i, top1.get(i))
         assert top1[100 + i] == i
-    out2 = ann_topk_lsh_q(emb.repartition(7), k=3, dim=64).collect()
+    e7 = emb.repartition(7)
+    out2 = ann_topk_lsh_q(e7, e7, k=3, dim=64).collect()
     assert sorted(map(tuple, out)) == sorted(map(tuple, out2))
+    served = ann_topk_lsh_q(
+        emb.filter("vec_id < 100"), emb, k=3, dim=64
+    ).collect()
+    assert sorted(map(tuple, served)) == sorted(
+        tuple(r) for r in out if r["query_id"] < 100
+    )
 
     pairs = {
         (r["id_a"], r["id_b"])

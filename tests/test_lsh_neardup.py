@@ -1,12 +1,12 @@
 """Label-free LSH embedding near-dup (operators/similarity.py
-lsh_neardup_pairs): on constructed near-duplicate vectors (base + tiny
+lsh_neardup_pairs_q): on constructed near-duplicate vectors (base + tiny
 noise, cosine >= 0.99) the bucket join must find EVERY planted pair,
 and every emitted pair must satisfy the exact-cosine contract."""
 
 import math
 import random
 
-from clinvar_pipeline_spark.operators.similarity import lsh_neardup_pairs
+from clinvar_pipeline_spark.operators.similarity import lsh_neardup_pairs_q
 
 
 def _unit(rng, dim):
@@ -34,7 +34,7 @@ def test_planted_duplicates_all_found(spark):
             vid += 1
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
-    out = lsh_neardup_pairs(df, threshold=0.9, dim=dim)
+    out = lsh_neardup_pairs_q(df, threshold=0.9, dim=dim)
     got = {(r["id_a"], r["id_b"]): r["cos_sim"] for r in out.collect()}
 
     # every planted near-dup pair (cosine ~0.995) is found: miss

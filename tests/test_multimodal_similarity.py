@@ -1,8 +1,10 @@
 """Multimodal plumbing tests (binary columns, Arrow batch shape,
-partitioning invariance) and ANN recall vs the exact baseline."""
+partitioning invariance) and ANN recall vs the exact baseline, on the
+same LSH/IVF/PQ operators the registry queries run."""
 
 import hashlib
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -12,9 +14,36 @@ from clinvar_pipeline_spark.operators.multimodal import (
     sample_frames,
 )
 from clinvar_pipeline_spark.operators.similarity import (
-    ann_topk_hyperplane,
+    _Q6,
+    _pq_encode_q,
+    _q6_unit_np,
+    ann_topk_lsh_q,
     brute_force_topk,
 )
+
+
+def _recall_with_exact_scores(exact, approx) -> float:
+    """Recall of ``approx`` against the exact top-k. Every pair both
+    return must carry the exact cosine to within two steps of the
+    6-decimal rounding (measured maximum: 2.0e-6; the 1e-12 absorbs
+    the binary representation of that difference)."""
+    es = {(r["query_id"], r["nn_id"]): r["cos_sim"] for r in exact.collect()}
+    as_ = {(r["query_id"], r["nn_id"]): r["cos_sim"] for r in approx.collect()}
+    both = es.keys() & as_.keys()
+    worst = max(abs(as_[p] - es[p]) for p in both)
+    assert worst <= 2e-6 + 1e-12, worst
+    return len(both) / len(es)
+
+
+def _q6_units(emb) -> np.ndarray:
+    """The corpus as the PQ encoder sees it: Q6 unit vectors, zero
+    rows dropped, in vec_id order."""
+    V = np.asarray(
+        [r["embedding"] for r in emb.orderBy("vec_id").collect()],
+        dtype=np.float64,
+    )
+    U, nz = _q6_unit_np(V)
+    return U[nz]
 
 
 @pytest.fixture(scope="module")
@@ -65,35 +94,31 @@ def test_sample_frames_fanout(docs):
 
 def test_ann_recall_vs_brute_force(spark):
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    exact = brute_force_topk(emb, emb, k=5)
-    approx = ann_topk_hyperplane(emb, emb, k=5)
-    e = {(r["query_id"], r["nn_id"]) for r in exact.collect()}
-    a = {(r["query_id"], r["nn_id"]) for r in approx.collect()}
-    recall = len(e & a) / len(e)
+    recall = _recall_with_exact_scores(
+        brute_force_topk(emb, emb, k=5), ann_topk_lsh_q(emb, emb, k=5)
+    )
     # 8 planes x 6 tables, single-bit multi-probe, on near-uniform
     # 64-dim vectors (mean top-5 angle ~71°): measured recall ~0.5;
     # the floor pins regressions, not the exact value
     assert recall > 0.3, recall
-    # scores on the intersection must agree with the exact cosine up
-    # to FP reordering (ANN pre-normalizes, exact divides per pair)
-    es = {(r["query_id"], r["nn_id"]): r["cos_sim"] for r in exact.collect()}
-    as_ = {(r["query_id"], r["nn_id"]): r["cos_sim"] for r in approx.collect()}
-    for key in list(e & a)[:20]:
-        assert abs(es[key] - as_[key]) < 2e-6
+    from clinvar_pipeline_spark.caching import release_cached
+
+    release_cached()
 
 
 def test_ivf_recall_vs_brute_force(spark):
     from clinvar_pipeline_spark.operators.similarity import ann_topk_ivf
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    exact = brute_force_topk(emb, emb, k=5)
-    approx = ann_topk_ivf(emb, emb, k=5)
-    e = {(r["query_id"], r["nn_id"]) for r in exact.collect()}
-    a = {(r["query_id"], r["nn_id"]) for r in approx.collect()}
-    recall = len(e & a) / len(e)
+    recall = _recall_with_exact_scores(
+        brute_force_topk(emb, emb, k=5), ann_topk_ivf(emb, emb, k=5)
+    )
     # 8 of 32 cells probed on near-uniform vectors; spatially coherent
     # candidates beat hash-uniform LSH at similar candidate volume
     assert recall > 0.4, recall
+    from clinvar_pipeline_spark.caching import release_cached
+
+    release_cached()
 
 
 def test_ivf_index_save_load_roundtrip(spark, tmp_path):
@@ -101,8 +126,6 @@ def test_ivf_index_save_load_roundtrip(spark, tmp_path):
     quantizer, serve a later search from the loaded index — results
     identical to the in-session search, no training job on the serve
     path."""
-    import numpy as np
-
     from clinvar_pipeline_spark.operators.similarity import (
         _train_centroids,
         ann_topk_ivf,
@@ -111,7 +134,7 @@ def test_ivf_index_save_load_roundtrip(spark, tmp_path):
     )
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    C = _train_centroids(emb, "embedding", 16, 10000, 5, 42, id_col="vec_id")
+    C = _train_centroids(emb, "embedding", 16, 10000, 5, id_col="vec_id")
     path = str(tmp_path / "ivf_index")
     save_centroids(spark, C, path)
     C2 = load_centroids(spark, path)
@@ -136,17 +159,17 @@ def test_pq_encode_code_size_contract(spark):
     """PQ's whole point is the memory shape: every code is exactly
     n_subspaces bytes regardless of vector width."""
     from clinvar_pipeline_spark.operators.similarity import (
-        _train_pq_codebooks,
-        pq_encode,
+        _train_pq_codebooks_q6,
     )
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    B = _train_pq_codebooks(emb, "embedding", 8, 256, 10000, 3, 42,
-                            id_col="vec_id")
-    assert B.shape[0] == 8 and B.shape[2] == 8  # 64-dim -> 8x8
-    codes = pq_encode(emb, B).collect()
-    assert len(codes) == emb.count()
-    assert all(len(bytes(r["code"])) == 8 for r in codes)
+    Bq = _train_pq_codebooks_q6(emb, "embedding", 8, 256, 10000, 3,
+                                id_col="vec_id")
+    assert Bq.shape[0] == 8 and Bq.shape[2] == 8  # 64-dim -> 8x8
+    U = _q6_units(emb)
+    codes = _pq_encode_q(U, Bq)
+    assert len(codes) == len(U) == emb.count()
+    assert all(len(row.tobytes()) == 8 for row in codes)
 
 
 def test_pq_recall_vs_brute_force(spark):
@@ -159,12 +182,10 @@ def test_pq_recall_vs_brute_force(spark):
     )
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    exact = {(r.query_id, r.nn_id) for r in brute_force_topk(emb, emb, k=5).collect()}
-    approx = {
-        (r.query_id, r.nn_id)
-        for r in ann_topk_pq(emb, emb, k=5, rerank=40).collect()
-    }
-    recall = len(exact & approx) / len(exact)
+    recall = _recall_with_exact_scores(
+        brute_force_topk(emb, emb, k=5),
+        ann_topk_pq(emb, emb, k=5, rerank=40),
+    )
     assert recall > 0.4, recall
     from clinvar_pipeline_spark.caching import release_cached
 
@@ -196,26 +217,25 @@ def test_pq_bounded_query_guard(spark):
 
 
 def test_pq_codebooks_save_load_roundtrip(spark, tmp_path):
-    import numpy as np
-
     from clinvar_pipeline_spark.operators.similarity import (
         _train_pq_codebooks,
         load_pq_codebooks,
-        pq_encode,
         save_pq_codebooks,
     )
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    B = _train_pq_codebooks(emb, "embedding", 8, 64, 10000, 3, 42,
+    B = _train_pq_codebooks(emb, "embedding", 8, 64, 10000, 3,
                             id_col="vec_id")
     path = str(tmp_path / "pq_books")
     save_pq_codebooks(spark, B, path)
     B2 = load_pq_codebooks(spark, path)
     assert B2.shape == B.shape and np.allclose(B, B2)
-    # loaded books reproduce encodings bit-for-bit
-    c1 = {r["nn_id"]: bytes(r["code"]) for r in pq_encode(emb, B).collect()}
-    c2 = {r["nn_id"]: bytes(r["code"]) for r in pq_encode(emb, B2).collect()}
-    assert c1 == c2
+    # loaded books re-quantize as ann_topk_pq does and reproduce the
+    # encodings bit-for-bit
+    U = _q6_units(emb)
+    c1 = _pq_encode_q(U, np.floor(B * _Q6 + 0.5))
+    c2 = _pq_encode_q(U, np.floor(B2 * _Q6 + 0.5))
+    assert np.array_equal(c1, c2)
 
 
 def test_ivfpq_full_probe_equals_pure_scan(spark):
@@ -250,15 +270,10 @@ def test_ivfpq_recall_vs_brute_force(spark):
     )
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    exact = {
-        (r.query_id, r.nn_id)
-        for r in brute_force_topk(emb, emb, k=5).collect()
-    }
-    approx = {
-        (r.query_id, r.nn_id)
-        for r in ann_topk_pq(emb, emb, k=5, rerank=40, ivf=True).collect()
-    }
-    recall = len(exact & approx) / len(exact)
+    recall = _recall_with_exact_scores(
+        brute_force_topk(emb, emb, k=5),
+        ann_topk_pq(emb, emb, k=5, rerank=40, ivf=True),
+    )
     # probed-cell pruning on top of PQ quantization: a lower floor
     # than the full scan's 0.4, same discipline as ann_topk_ivf
     assert recall > 0.3, recall

@@ -1,6 +1,6 @@
 #!/usr/bin/env python
-"""ANN scale probe: ann_topk (hyperplane LSH) and ann_topk_ivf at a
-10x replication of the sf embeddings corpus — the same adversarial
+"""ANN scale probe: ann_topk (sign-LSH, ann_topk_lsh_q) and ann_topk_ivf
+at a 10x replication of the sf embeddings corpus — the same adversarial
 replication as the round-4 dedup skew probe (each vector copied
 ``--factor`` times with shifted ids, labels kept), so every point has
 factor-1 planted exact duplicates.
@@ -26,7 +26,7 @@ corpus, then serve increasingly noise-shifted corpora with the STALE
 index (centroids=) — exactly what production does between retrain
 threshold crossings — reporting index_drift_ratio next to recall@k vs
 exact brute force on the same shifted corpus. The interesting rows are
-drift ratios just below DRIFT_RETRAIN_THRESHOLD (1.25): if recall has
+drift ratios just below DRIFT_RETRAIN_THRESHOLD (1.10): if recall has
 already slipped there, the threshold is too loose. --out writes the
 JSON document (committed as ANN_PROBE.json).
 """
@@ -96,7 +96,7 @@ def drift_recall_probe(spark, sf: str, sample: int, k: int) -> dict:
     ).repartition(16).persist()
     n = base.count()
     cells = _derived_num_cells(n)
-    C = _train_centroids(base, "embedding", cells, 10000, 5, 42, id_col="vec_id")
+    C = _train_centroids(base, "embedding", cells, 10000, 5, id_col="vec_id")
     train_stats = assignment_distance_stats(base, C)
 
     def shifted(eps: float):
@@ -124,7 +124,7 @@ def drift_recall_probe(spark, sf: str, sample: int, k: int) -> dict:
     # the corpus is already high-entropy (train mean assignment
     # distance ~0.63 in 64-dim), so small eps barely moves the ratio;
     # the ladder runs to eps=3 (direction mostly noise) to bracket the
-    # 1.25 retrain threshold from below AND above
+    # 1.10 retrain threshold from below AND above
     ladder = [0.0, 0.25, 0.5, 0.75, 1.0, 1.5, 2.0, 3.0]
     rows = []
     for eps in ladder:
@@ -154,7 +154,7 @@ def drift_recall_probe(spark, sf: str, sample: int, k: int) -> dict:
     corpus = shifted(worst).persist()
     corpus.count()
     C2 = _train_centroids(
-        corpus, "embedding", cells, 10000, 5, 42, id_col="vec_id"
+        corpus, "embedding", cells, 10000, 5, id_col="vec_id"
     )
     qs = corpus.orderBy("vec_id").limit(sample).persist()
     qs.count()
@@ -214,8 +214,8 @@ def main() -> None:
 
     from clinvar_pipeline_spark.caching import release_cached
     from clinvar_pipeline_spark.operators.similarity import (
-        ann_topk_hyperplane,
         ann_topk_ivf,
+        ann_topk_lsh_q,
         brute_force_topk,
     )
     from clinvar_pipeline_spark.session import get_spark
@@ -259,19 +259,13 @@ def main() -> None:
     t0 = time.time()
     exact = brute_force_topk(qs, rep, k=args.k).collect()
     exact_wall = round(time.time() - t0, 2)
-    # per query: the k-th best exact score is the hit threshold
-    kth = {}
-    for r in exact:
-        cur = kth.setdefault(r["query_id"], [])
-        cur.append(r["cos_sim"])
-    thresholds = {q: min(scores) for q, scores in kth.items()}
 
     out = {"sf": args.sf, "factor": args.factor, "corpus_rows": n,
            "sample": len(sample_ids), "k": args.k,
            "exact_baseline_wall_sec": exact_wall, "variants": {}}
 
     for name, fn in (
-        ("ann_topk", ann_topk_hyperplane),
+        ("ann_topk", ann_topk_lsh_q),
         ("ann_topk_ivf", ann_topk_ivf),
     ):
         t0 = time.time()
@@ -279,15 +273,8 @@ def main() -> None:
         rows = res.count()
         wall = round(time.time() - t0, 2)
 
-        hits = 0
         got = res.filter(F.col("query_id").isin(sample_ids)).collect()
-        per_q = {}
-        for r in got:
-            per_q.setdefault(r["query_id"], []).append(r["cos_sim"])
-        for q, thr in thresholds.items():
-            found = sum(1 for s in per_q.get(q, []) if s >= thr - 1e-6)
-            hits += min(found, args.k)
-        recall = round(hits / (args.k * len(thresholds)), 4)
+        recall = _recall_vs_exact(exact, got, args.k)
 
         out["variants"][name] = {
             "wall_sec": wall,
@@ -309,7 +296,7 @@ def main() -> None:
     )
 
     cells = _derived_num_cells(n)
-    C = _train_centroids(rep, "embedding", cells, 10000, 5, 42, id_col="vec_id")
+    C = _train_centroids(rep, "embedding", cells, 10000, 5, id_col="vec_id")
 
     @pandas_udf("int")
     def cell_of(s: pd.Series) -> pd.Series:

@@ -12,9 +12,10 @@ invariants under load:
 - decontaminate: replicas of eval-slice docs are verbatim copies, so
   every replica whose id leaves the eval slice must be flagged 100%
   contaminated — planted-recall under 10x.
-- semantic_dedup (tau=0.99): each vector's factor-1 exact copies must
-  collapse onto one survivor per identical group — planted drop
-  fraction == (factor-1)/factor over duplicated groups.
+- semantic_dedup (tau=0.99, the Q6-lattice operator the registry
+  runs): each vector's factor-1 exact copies must collapse onto one
+  survivor per identical group — planted drop fraction ==
+  (factor-1)/factor over duplicated groups.
 - corpus_shuffle (late r6): global_pos must remain an exact
   permutation 0..N-1 at 10x — the two-phase prefix-sum rank cannot
   drop or duplicate a position as the range exchange widens.

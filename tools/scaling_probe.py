@@ -136,9 +136,7 @@ def _ann_pq_fixed_batch(spark, sf_dir: str):
 
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet").repartition(8)
     q = e.orderBy("vec_id").limit(2500)
-    return ann_topk_pq(
-        q, e, k=5, memo_key=f"{sf_dir}:embeddings", quantized=True
-    )
+    return ann_topk_pq(q, e, k=5, memo_key=f"{sf_dir}:embeddings")
 
 
 # probe-specific stand-ins where the registry query's contract can't
@@ -158,17 +156,15 @@ def _ann_serve_fixed_batch(ivf: bool):
 
     def probe(spark, sf_dir: str):
         from clinvar_pipeline_spark.operators.similarity import (
-            ann_topk_hyperplane,
             ann_topk_ivf,
+            ann_topk_lsh_q,
         )
 
         e = spark.read.parquet(f"{sf_dir}/embeddings.parquet").repartition(8)
         q = e.orderBy("vec_id").limit(2500)
         if ivf:
-            return ann_topk_ivf(
-                q, e, k=5, memo_key=f"{sf_dir}:embeddings", quantized=True
-            )
-        return ann_topk_hyperplane(q, e, k=5)
+            return ann_topk_ivf(q, e, k=5, memo_key=f"{sf_dir}:embeddings")
+        return ann_topk_lsh_q(q, e, k=5)
 
     return probe
 
