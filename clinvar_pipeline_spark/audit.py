@@ -10,9 +10,8 @@ counter email (SURVEY §5.1); this engine's equivalents are:
   registry (cartesian products, row-Python UDFs, unpruned scans),
   with an explicit waiver table for the plans that are intended.
 
-``tools/skew_report.py`` and ``tools/explain_audit.py`` are thin
-wrappers; ``python -m clinvar_pipeline_spark --audit --sf DIR`` runs
-both.
+``python -m clinvar_pipeline_spark --audit --sf DIR`` runs both;
+``tools/explain_audit.py`` is a thin wrapper over the second.
 """
 
 from __future__ import annotations

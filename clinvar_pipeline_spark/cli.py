@@ -721,7 +721,6 @@ def cmd_corpus_prep(spark: SparkSession, args) -> None:
         )
 
         emb = spark.read.parquet(f"{emb_sf}/embeddings.parquet")
-        key = f"{emb_sf}:embeddings"
         retrain = True
         if os.path.exists(f"{args.out}/ivf_index") and os.path.exists(
             f"{args.out}/ivf_index_stats"
@@ -736,10 +735,9 @@ def cmd_corpus_prep(spark: SparkSession, args) -> None:
                 retrain = False
                 C = C_old
         if retrain:
-            cells = _derived_num_cells(_corpus_count(emb, key))
+            cells = _derived_num_cells(_corpus_count(emb))
             C = _train_centroids(
-                emb, "embedding", cells, 10000, 5,
-                id_col="vec_id", memo_key=key,
+                emb, "embedding", cells, 10000, 5, id_col="vec_id"
             )
             save_centroids(spark, C, f"{args.out}/ivf_index")
             save_index_stats(
@@ -762,7 +760,7 @@ def cmd_corpus_prep(spark: SparkSession, args) -> None:
             dim = len(emb.select("embedding").head()["embedding"])
             B = _train_pq_codebooks(
                 emb, "embedding", pq_subspaces_for_dim(dim), 256, 10000, 5,
-                id_col="vec_id", memo_key=key,
+                id_col="vec_id",
             )
             save_pq_codebooks(spark, B, f"{args.out}/pq_index")
         else:

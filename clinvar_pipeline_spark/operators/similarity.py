@@ -32,6 +32,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from clinvar_pipeline_spark.caching import memo, register_persist
 from clinvar_pipeline_spark.functions.hashes import (
     cosine_similarity,
     dot_product_batch,
@@ -71,16 +72,11 @@ def brute_force_topk(
     )
 
 
-def _corpus_count(corpus: DataFrame, memo_key: str | None) -> int:
-    """Row count of the corpus — one driver scalar (same budget as the
-    oversize-cell guard counts), memoized per corpus so repeated
-    invocations don't re-scan. Feeds the derived ``num_cells``
-    default."""
-    from clinvar_pipeline_spark.caching import memo
-
-    if memo_key is None:
-        return corpus.count()
-    return memo(("corpus_count", memo_key), corpus.count)
+def _corpus_count(corpus: DataFrame) -> int:
+    """Row count of the corpus, memoized on it (caching.memo) so
+    repeated invocations don't re-scan. Feeds the derived
+    ``num_cells`` default."""
+    return memo(("corpus_count",), corpus, corpus.count)
 
 
 def _derived_num_cells(n: int) -> int:
@@ -141,7 +137,6 @@ def _train_centroids_q6(
     train_sample: int,
     lloyd_iters: int,
     id_col: str | None = None,
-    memo_key: str | None = None,
 ) -> np.ndarray:
     """Deterministic, ENGINE-PORTABLE k-means coarse quantizer: Q6
     integer arithmetic end-to-end (see _q6_unit_np), strided init,
@@ -165,31 +160,34 @@ def _train_centroids_q6(
     DuckDB oracle reproduces cells — and everything downstream of
     them — bit-for-bit at any SF.
 
-    Sample/memo semantics: ≤ train_sample smallest ids when id_col is given (TakeOrdered —
-    partitioning-independent), memoized per corpus under caching.memo
-    (a quantizer is corpus state; see the r5 bench regression)."""
-    from clinvar_pipeline_spark.caching import memo
+    Sample/memo semantics: ≤ train_sample smallest ids when id_col is
+    given (TakeOrdered — partitioning-independent), memoized on the
+    corpus and these parameters (caching.memo — a quantizer is corpus
+    state; see the r5 bench regression): a second call over the same
+    files trains nothing, a rewritten corpus retrains."""
+    key = ("ivf_centroids_q6", vec_col, num_cells, train_sample, lloyd_iters, id_col)
+    X = lambda: _training_sample(corpus, vec_col, train_sample, id_col)
+    return memo(key, corpus, lambda: _lloyd_q6(X(), num_cells, lloyd_iters))
 
-    if memo_key is not None:
-        key = (
-            "ivf_centroids_q6", memo_key, vec_col, num_cells,
-            train_sample, lloyd_iters, id_col,
-        )
-        return memo(
-            key,
-            lambda: _train_centroids_q6(
-                corpus, vec_col, num_cells, train_sample, lloyd_iters,
-                id_col=id_col, memo_key=None,
-            ),
-        )
+
+def _training_sample(
+    corpus: DataFrame, vec_col: str, train_sample: int, id_col: str | None
+) -> np.ndarray:
+    """≤ train_sample vectors: the smallest ids when id_col is given."""
     sel = corpus.select(
         *([F.col(id_col)] if id_col else []),
         F.col(vec_col).cast("array<double>").alias("_v"),
     )
     if id_col:
         sel = sel.orderBy(id_col)
-    sample = [r["_v"] for r in sel.limit(train_sample).collect()]
-    X = np.asarray(sample, dtype=np.float64)
+    return np.asarray(
+        [r["_v"] for r in sel.limit(train_sample).collect()],
+        dtype=np.float64,
+    )
+
+
+def _lloyd_q6(X: np.ndarray, num_cells: int, lloyd_iters: int) -> np.ndarray:
+    """:func:`_train_centroids_q6`'s integer k-means over a sample."""
     U, nz = _q6_unit_np(X)
     U = U[nz]  # zero vectors can't vote for a direction
     n = len(U)
@@ -218,7 +216,6 @@ def _train_centroids(
     train_sample: int,
     lloyd_iters: int,
     id_col: str | None = None,
-    memo_key: str | None = None,
 ) -> np.ndarray:
     """Coarse quantizer as the float matrix the CLI's --corpusPrep
     lands and the drift monitor reads: the Q6 integer centroids of
@@ -230,8 +227,7 @@ def _train_centroids(
     ann_topk_pq / semantic_dedup re-quantize a loaded float matrix
     exactly (floor(c·1e6 + 0.5) recovers the integers)."""
     return _train_centroids_q6(
-        corpus, vec_col, num_cells, train_sample, lloyd_iters,
-        id_col=id_col, memo_key=memo_key,
+        corpus, vec_col, num_cells, train_sample, lloyd_iters, id_col=id_col
     ) / _Q6
 
 
@@ -406,7 +402,6 @@ def semantic_dedup(
     train_sample: int = 10000,
     lloyd_iters: int = 5,
     cell_cap: int = 100_000,
-    memo_key: str | None = None,
     centroids: np.ndarray | None = None,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
@@ -435,10 +430,10 @@ def semantic_dedup(
     practice), keeping expected cell width ~sqrt(N) as the corpus
     grows; pass an explicit num_cells to pin it.
 
-    ``memo_key`` (a corpus identity string, e.g. the parquet dir)
-    memoizes the corpus count and trained centroids across
-    invocations — see _train_centroids_q6. ``centroids`` bypasses
-    training entirely with a pre-trained quantizer
+    The corpus count and trained centroids are memoized on the corpus
+    across invocations (caching.memo, see _train_centroids_q6): a
+    second call over the same files runs neither job again.
+    ``centroids`` bypasses training entirely with a pre-trained quantizer
     (save_centroids/load_centroids — the cross-session index
     lifecycle).
 
@@ -449,17 +444,15 @@ def semantic_dedup(
     cosine by < 1e-5, far inside any sensible tau. Zero-norm vectors
     (cosine undefined) are excluded from the search."""
     if num_cells is None and centroids is None:
-        num_cells = _derived_num_cells(_corpus_count(corpus, memo_key))
+        num_cells = _derived_num_cells(_corpus_count(corpus))
     from typing import Iterator as _It
-
-    from clinvar_pipeline_spark.caching import register_persist
 
     if centroids is not None:
         Cq = np.floor(np.asarray(centroids, dtype=np.float64) * _Q6 + 0.5)
     else:
         Cq = _train_centroids_q6(
             corpus, vec_col, num_cells, train_sample, lloyd_iters,
-            id_col=id_col, memo_key=memo_key,
+            id_col=id_col,
         )
 
     def assign_q(batches: _It[pd.DataFrame]) -> _It[pd.DataFrame]:
@@ -566,7 +559,6 @@ def _train_pq_codebooks(
     train_sample: int,
     lloyd_iters: int,
     id_col: str | None = None,
-    memo_key: str | None = None,
 ) -> np.ndarray:
     """Product-quantization codebooks (Jégou et al. 2011, "Product
     Quantization for Nearest Neighbor Search") as the float book the
@@ -578,7 +570,7 @@ def _train_pq_codebooks(
     Returns (n_subspaces, K, dim/n_subspaces) float64."""
     return _train_pq_codebooks_q6(
         corpus, vec_col, n_subspaces, pq_k, train_sample, lloyd_iters,
-        id_col=id_col, memo_key=memo_key,
+        id_col=id_col,
     ) / _Q6
 
 
@@ -593,7 +585,6 @@ def ann_topk_pq(
     rerank: int | None = None,
     train_sample: int = 10000,
     lloyd_iters: int = 5,
-    memo_key: str | None = None,
     max_queries: int = 10000,
     ivf: bool = False,
     num_cells: int | None = None,
@@ -645,8 +636,6 @@ def ann_topk_pq(
     --corpusPrep lands both as out/pq_index + out/ivf_index)."""
     from typing import Iterator as _It
 
-    from clinvar_pipeline_spark.caching import register_persist
-
     if rerank is None:
         rerank = max(4 * k, 16)
     if codebooks is not None:
@@ -654,7 +643,7 @@ def ann_topk_pq(
     else:
         Bq = _train_pq_codebooks_q6(
             corpus, vec_col, n_subspaces, pq_k, train_sample, lloyd_iters,
-            id_col=id_col, memo_key=memo_key,
+            id_col=id_col,
         )
     M, K, dsub = Bq.shape
 
@@ -694,10 +683,10 @@ def ann_topk_pq(
             )
         else:
             if num_cells is None:
-                num_cells = _derived_num_cells(_corpus_count(corpus, memo_key))
+                num_cells = _derived_num_cells(_corpus_count(corpus))
             Cq = _train_centroids_q6(
                 corpus, vec_col, num_cells, train_sample, lloyd_iters,
-                id_col=id_col, memo_key=memo_key,
+                id_col=id_col,
             )
         npr = n_probe_cells if n_probe_cells else max(4, len(Cq) // 4)
         npr = min(npr, len(Cq))
@@ -837,7 +826,6 @@ def ann_topk_ivf(
     n_probe_cells: int | None = None,
     train_sample: int = 10000,
     lloyd_iters: int = 5,
-    memo_key: str | None = None,
     centroids: np.ndarray | None = None,
 ) -> DataFrame:
     """Approximate top-k via IVF (inverted-file) coarse quantization:
@@ -870,23 +858,21 @@ def ann_topk_ivf(
     num_cells defaults to ~sqrt(N) from a memoized corpus count and
     n_probe_cells to num_cells/4 (preserving the probed-fraction —
     and so the recall/cost point — as the corpus scales); pass
-    explicit values to pin either. ``memo_key`` memoizes count +
-    centroids across invocations (see _train_centroids_q6);
-    ``centroids`` serves a pre-trained quantizer
+    explicit values to pin either. Count and centroids are memoized on
+    the corpus across invocations (caching.memo, see
+    _train_centroids_q6); ``centroids`` serves a pre-trained quantizer
     (save_centroids/load_centroids — the cross-session index
     lifecycle) and skips training."""
     from typing import Iterator as _It
-
-    from clinvar_pipeline_spark.caching import register_persist
 
     if centroids is not None:
         Cq = np.floor(np.asarray(centroids, dtype=np.float64) * _Q6 + 0.5)
     else:
         if num_cells is None:
-            num_cells = _derived_num_cells(_corpus_count(corpus, memo_key))
+            num_cells = _derived_num_cells(_corpus_count(corpus))
         Cq = _train_centroids_q6(
             corpus, vec_col, num_cells, train_sample, lloyd_iters,
-            id_col=id_col, memo_key=memo_key,
+            id_col=id_col,
         )
     if n_probe_cells is None:
         n_probe_cells = max(4, len(Cq) // 4)
@@ -894,7 +880,7 @@ def ann_topk_ivf(
     # which a tiny corpus can push below n_probe_cells
     npr = min(n_probe_cells, len(Cq))
 
-    def probe_q(batches: _It[pd.DataFrame]) -> _It[pd.DataFrame]:
+    def probe_q(batches: _It[pd.DataFrame], width: int) -> _It[pd.DataFrame]:
         for pdf in batches:
             if not len(pdf):
                 continue
@@ -906,8 +892,13 @@ def ann_topk_ivf(
             dots = U @ Cq.T  # integer-exact
             # stable sort on -dots: ties keep ascending cell order —
             # the numpy twin of SQL row_number (dot DESC, cell ASC);
-            # argpartition would pick arbitrarily among boundary ties
-            order = np.argsort(-dots, axis=1, kind="stable")[:, :npr]
+            # argpartition would pick arbitrarily among boundary ties.
+            # Width 1 (a corpus cell) takes argmax: first max == head.
+            order = (
+                np.argmax(dots, axis=1)[:, None]
+                if width == 1
+                else np.argsort(-dots, axis=1, kind="stable")[:, :width]
+            )
             yield pd.DataFrame(
                 {
                     "_id": pdf["_id"].to_numpy()[nzm],
@@ -917,18 +908,19 @@ def ann_topk_ivf(
             )
 
     schema = "_id long, _pc array<int>, _qv array<double>"
-    sel = lambda df: df.select(
-        F.col(id_col).alias("_id"),
-        F.col(vec_col).cast("array<double>").alias("_v"),
+    side = lambda df, width: register_persist(
+        df.select(
+            F.col(id_col).alias("_id"),
+            F.col(vec_col).cast("array<double>").alias("_v"),
+        ).mapInPandas(lambda it: probe_q(it, width), schema)
     )
     if queries is corpus:
         # one kernel pass serves both roles: the ranked probe list's
         # head IS the argmax cell assignment (same ordering rule)
-        shared = register_persist(sel(corpus).mapInPandas(probe_q, schema))
-        c_side, q_side = shared, shared
+        c_side = q_side = side(corpus, npr)
     else:
-        c_side = register_persist(sel(corpus).mapInPandas(probe_q, schema))
-        q_side = register_persist(sel(queries).mapInPandas(probe_q, schema))
+        # the corpus side reads only its argmax cell
+        c_side, q_side = side(corpus, 1), side(queries, npr)
     c_cells = c_side.select(
         F.col("_id").alias("nn_id"), F.col("_pc").getItem(0).alias("cell")
     )
@@ -1121,7 +1113,6 @@ def _train_pq_codebooks_q6(
     train_sample: int,
     lloyd_iters: int,
     id_col: str | None = None,
-    memo_key: str | None = None,
 ) -> np.ndarray:
     """Deterministic, engine-portable PQ codebooks: per-subspace
     k-means over the Q6 UNIT subvectors with pure integer arithmetic —
@@ -1138,32 +1129,18 @@ def _train_pq_codebooks_q6(
       their previous centroid — no renormalization (euclidean PQ).
     Bounds: components ≤ ~1.2e6, d2 ≤ dsub·(2.4e6)^2 < 2^53, member
     sums ≤ train_sample·1.2e6 < 2^53 — exact at any order."""
-    from clinvar_pipeline_spark.caching import memo
-
     if pq_k > 256:
         raise ValueError(f"pq_k must be <= 256 (uint8 codes), got {pq_k}")
-    if memo_key is not None:
-        key = (
-            "pq_codebooks_q6", memo_key, vec_col, n_subspaces, pq_k,
-            train_sample, lloyd_iters, id_col,
-        )
-        return memo(
-            key,
-            lambda: _train_pq_codebooks_q6(
-                corpus, vec_col, n_subspaces, pq_k, train_sample,
-                lloyd_iters, id_col=id_col, memo_key=None,
-            ),
-        )
-    sel = corpus.select(
-        *([F.col(id_col)] if id_col else []),
-        F.col(vec_col).cast("array<double>").alias("_v"),
-    )
-    if id_col:
-        sel = sel.orderBy(id_col)
-    X = np.asarray(
-        [r["_v"] for r in sel.limit(train_sample).collect()],
-        dtype=np.float64,
-    )
+    key = ("pq_codebooks_q6", vec_col, n_subspaces, pq_k, train_sample,
+           lloyd_iters, id_col)
+    X = lambda: _training_sample(corpus, vec_col, train_sample, id_col)
+    return memo(key, corpus, lambda: _pq_lloyd_q6(X(), n_subspaces, pq_k, lloyd_iters))
+
+
+def _pq_lloyd_q6(
+    X: np.ndarray, n_subspaces: int, pq_k: int, lloyd_iters: int
+) -> np.ndarray:
+    """:func:`_train_pq_codebooks_q6`'s per-subspace k-means over a sample."""
     U, nz = _q6_unit_np(X)
     U = U[nz]
     n = len(U)
@@ -1307,8 +1284,6 @@ def ann_topk_lsh_q(
     skew (dense regions) is handled by AQE skew-join."""
     from clinvar_pipeline_spark.functions.hashes import lsh_plane_matrix_q
 
-    from clinvar_pipeline_spark.caching import register_persist
-
     W = lsh_plane_matrix_q(num_tables, num_planes, dim, seed)
     c_side = register_persist(_lsh_q6_frame(corpus, id_col, vec_col, W))
     q_side = (
@@ -1365,8 +1340,6 @@ def lsh_neardup_pairs_q(
     recall degrades by design — near-uniform pairs are the ANN top-k
     queries' job, not dedup's."""
     from clinvar_pipeline_spark.functions.hashes import lsh_plane_matrix_q
-
-    from clinvar_pipeline_spark.caching import register_persist
 
     W = lsh_plane_matrix_q(num_tables, num_planes, dim, seed)
     shared = register_persist(_lsh_q6_frame(df, id_col, vec_col, W))

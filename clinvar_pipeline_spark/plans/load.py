@@ -75,9 +75,9 @@ from clinvar_pipeline_spark.functions.text import byte_trim
 from clinvar_pipeline_spark.operators.cascade import CascadeStage, cascade_lookup
 from clinvar_pipeline_spark.operators.diff_sync import (
     CHANGE_COL,
-    DELETE,
     INSERT,
     UNCHANGED,
+    apply_diff,
     diff_sync,
 )
 from clinvar_pipeline_spark.operators.guarded_delete import guarded_stale_delete
@@ -986,10 +986,11 @@ def load_run(
             run_slice(prev.xdb_ids.drop("modification_date")),
             key_cols=_xdb_key_cols,
         )
-        touched = xdb_diff.filter(F.col(CHANGE_COL) != DELETE)
         stale = guarded_stale_delete(
             prev.xdb_ids,
-            touched=touched.select(*_xdb_key_cols).unionByName(recently_modified),
+            touched=apply_diff(xdb_diff, _xdb_key_cols, []).unionByName(
+                recently_modified
+            ),
             key_cols=_xdb_key_cols,
             threshold=STALE_XDB_DELETE_THRESHOLD,
         )
@@ -1050,7 +1051,7 @@ def load_run(
     def next_table(
         diff: DataFrame, prev_df: DataFrame, key: str, cols: list[str]
     ) -> DataFrame:
-        kept = diff.filter(F.col(CHANGE_COL) != DELETE).select(*cols)
+        kept = apply_diff(diff, cols, [])
         untouched = prev_df.join(
             F.broadcast(run_ids.withColumnRenamed("rgd_id", key)), key, "left_anti"
         ).select(*cols)
@@ -1083,7 +1084,7 @@ def load_run(
     #     rows keep their prior modification_date (the signal the next
     #     run's cutoff needs).
     _xdb_cols = ["rgd_id", "xdb_key", "acc_id", "link_text", "notes"]
-    xdb_touched = xdb_diff.filter(F.col(CHANGE_COL) != DELETE)
+    xdb_touched = apply_diff(xdb_diff, _xdb_key_cols, ["link_text", "notes"])
     inc_keys = xdb_touched.select(
         *[F.col(c).alias(f"_i_{c}") for c in _xdb_key_cols]
     ).dropDuplicates()
@@ -1092,8 +1093,7 @@ def load_run(
         eq = F.col(c).eqNullSafe(F.col(f"_i_{c}"))
         _inc_cond = eq if _inc_cond is None else _inc_cond & eq
     next_xdb = (
-        xdb_touched.select(*_xdb_cols)
-        .withColumn("modification_date", ts)
+        xdb_touched.withColumn("modification_date", ts)
         .unionByName(
             stale.kept.join(inc_keys, on=_inc_cond, how="left_anti").select(
                 *_xdb_cols, "modification_date"

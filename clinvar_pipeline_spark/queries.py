@@ -56,6 +56,7 @@ def queries() -> dict[str, QueryFn]:
 # release cache blocks between repeated invocations (see caching.py).
 from clinvar_pipeline_spark.caching import (  # noqa: E402
     memo,
+    memo_path,
     register_persist as _persist,
     release_cached,
 )
@@ -78,15 +79,16 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
 
-    # The read+normalize below is memoized per (application, path):
+    # The read+normalize below is memoized on the session and the
+    # status of every file under the table's path (caching.memo_path):
     # every spark.read.parquet call pays a driver-side file listing +
-    # footer schema read (~30-70 ms), and plans re-read the same table
+    # footer schema read (~30-100 ms), and plans re-read the same table
     # many times per invocation (fk_integrity touches 7 tables 14
     # times; the ANN family reads documents 4-5x) — measured r11 as
     # the dominant share of fk_integrity's wall at sf0.1. The memo
-    # holds an UNEVALUATED plan handle (a tiny driver object, the
-    # caching.memo contract) — no row is cached, every action still
-    # computes from the parquet files.
+    # holds an UNEVALUATED plan handle — no row is cached, every action
+    # still computes from the parquet files — and a table rewritten in
+    # place gets a fresh read.
     def _read() -> DataFrame:
         df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
         # Normalize timestamp columns across testdata generations:
@@ -104,9 +106,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                 df = df.withColumn(f.name, F.col(f.name).cast("timestamp"))
         return df
 
-    return memo(
-        ("_t", spark.sparkContext.applicationId, sf_dir, name), _read
-    )
+    return memo_path(("_t",), spark, f"{sf_dir}/{name}.parquet", _read)
 
 
 DEC = "decimal(18,2)"
@@ -143,15 +143,10 @@ def qround(col, scale: int):
 
 def _scan_splits(spark: SparkSession, sf_dir: str, name: str) -> int:
     """Number of input splits the planner assigns ``name``'s scan —
-    a per-(session, corpus, table) SCALAR (driver-side split planning
-    only, no job, no rows), memoized like the other corpus scalars."""
-    from clinvar_pipeline_spark.caching import memo
-
-    app_id = spark.sparkContext.applicationId
-    return memo(
-        ("scan_splits", app_id, sf_dir, name),
-        lambda: _t(spark, sf_dir, name).rdd.getNumPartitions(),
-    )
+    a per-table SCALAR (driver-side split planning only, no job, no
+    rows), memoized like the other corpus scalars."""
+    t = _t(spark, sf_dir, name)
+    return memo(("scan_splits",), t, lambda: t.rdd.getNumPartitions())
 
 
 def _widen_small_scan(
@@ -844,7 +839,7 @@ def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     a 100x scale-up); set sizes stay uncapped, so reported Jaccard is
     the standard df-capped lower bound. The oracle f-string applies
     the identical cap (one constant drives both sides). The drop is
-    observable via tools/skew_report.py — counting it inline forced an
+    observable via ``--audit`` — counting it inline forced an
     extra eager job per run (r2 bench: +93% cold), so the query path
     stays lazy."""
     d = _spread(_t(spark, sf_dir, "documents"))
@@ -1359,7 +1354,7 @@ def q_embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     own the runtime at 100x); oversize blocks are the LSH/IVF paths'
     job (operators/similarity.py). The oracle f-string applies the
     identical cap (one constant drives both sides). The drop is
-    observable via tools/skew_report.py — counting it inline forced an
+    observable via ``--audit`` — counting it inline forced an
     extra eager job per run (r2 bench: +22% cold), so the query path
     stays lazy."""
     e = _spread(_t(spark, sf_dir, "embeddings"))

@@ -1273,11 +1273,11 @@ def q_ann_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tools/plan_baseline.py disagreed). Materializing always pins
     # the cold shape; the 5-consumer plan builds this cache anyway.
     e.count()
-    # memo_key: the quantizer (and corpus count behind the derived
-    # cell count) is corpus state — train once per sf_dir per session,
-    # not once per invocation (r5's warm-slower-than-cold bench
-    # regression was the per-invocation re-training job)
-    return ann_topk_ivf(e, e, k=5, memo_key=f"{sf_dir}:embeddings")
+    # the quantizer (and corpus count behind the derived cell count) is
+    # corpus state, memoized on e's files — trained once per corpus per
+    # session, not once per invocation (r5's warm-slower-than-cold
+    # bench regression was the per-invocation re-training job)
+    return ann_topk_ivf(e, e, k=5)
 
 
 from clinvar_pipeline_spark.functions.kmeans_oracle import (
@@ -1305,7 +1305,7 @@ def q_ann_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     from clinvar_pipeline_spark.operators.similarity import ann_topk_pq
 
     e = _persist(_spread(_t(spark, sf_dir, "embeddings"), parts=8))
-    return ann_topk_pq(e, e, k=5, memo_key=f"{sf_dir}:embeddings")
+    return ann_topk_pq(e, e, k=5)
 
 
 @register("ann_topk_ivfpq", _ivfpq_oracle(k=5, rerank=20))
@@ -1323,6 +1323,4 @@ def q_ann_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     from clinvar_pipeline_spark.operators.similarity import ann_topk_pq
 
     e = _persist(_spread(_t(spark, sf_dir, "embeddings"), parts=8))
-    return ann_topk_pq(
-        e, e, k=5, ivf=True, memo_key=f"{sf_dir}:embeddings"
-    )
+    return ann_topk_pq(e, e, k=5, ivf=True)

@@ -36,6 +36,7 @@ from clinvar_pipeline_spark.queries import (
     _persist,
     _spread,
     _t,
+    memo,
     qround,
     register,
 )
@@ -1252,14 +1253,13 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _cc_over_ngram_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(node, component) over the exact n-gram-Jaccard pair table —
     shared by dedup_clusters / cluster_dedup_apply / filter_funnel.
-    Memoized per corpus dir (caching.memo, the quantizer discipline):
-    a cluster labeling is CORPUS state, so one session running the
-    --corpusPrep chain or the correctness gate runs the iterative
-    components job once, not once per dependent query. The memoized
-    frame's persist may be released between invocations
+    Memoized on the documents read (caching.memo, the quantizer
+    discipline): a cluster labeling is CORPUS state, so one session
+    running the --corpusPrep chain or the correctness gate runs the
+    iterative components job once, not once per dependent query. The
+    memoized frame's persist may be released between invocations
     (release_cached); recompute then reads the final round's
     localCheckpointed partitions, not the whole loop."""
-    from clinvar_pipeline_spark.caching import memo
     from clinvar_pipeline_spark.operators.graph import connected_components
     from clinvar_pipeline_spark.queries import q_ngram_jaccard_pairs
 
@@ -1269,11 +1269,7 @@ def _cc_over_ngram_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return connected_components(pairs, "doc_a", "doc_b")
 
-    # session-keyed, unlike the centroid memo: numpy centroids outlive
-    # a SparkSession, a DataFrame does not — a fresh session must
-    # rebuild, never receive a frame bound to a stopped context
-    app_id = spark.sparkContext.applicationId
-    return memo(("ngram_cc", app_id, sf_dir), build)
+    return memo(("ngram_cc",), _t(spark, sf_dir, "documents"), build)
 
 
 @register(
@@ -1708,8 +1704,8 @@ def q_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _corpus_token_total(spark: SparkSession, sf_dir: str) -> int:
     """Total token occurrences of the corpus under the shared
-    tokenizer — a corpus-derived SCALAR, memoized per (application,
-    corpus) exactly like the IVF/SemDeDup quantizer centroids
+    tokenizer — a corpus-derived SCALAR, memoized on the documents
+    read exactly like the IVF/SemDeDup quantizer centroids
     (caching.memo contract): re-deriving it per plan build re-ran a
     full count job on every invocation of lm_quality / both
     perplexity banders (~1.3-1.8 s serial wall each at sf0.1). The
@@ -1723,16 +1719,14 @@ def _corpus_token_total(spark: SparkSession, sf_dir: str) -> int:
     whether an earlier query had already warmed the memo (an
     order-dependent plan-gate flake, caught by tools/plan_baseline.py
     when queries ran in non-registry order)."""
-    from clinvar_pipeline_spark.caching import memo
+    d = _t(spark, sf_dir, "documents")
 
     def _count() -> int:
-        d = _spread(_t(spark, sf_dir, "documents"))
-        return d.select(
+        return _spread(d).select(
             F.explode(normalized_tokens(F.col("text"))).alias("t")
         ).count()
 
-    app_id = spark.sparkContext.applicationId
-    return memo(("corpus_token_total", app_id, sf_dir), _count)
+    return memo(("corpus_token_total",), d, _count)
 
 
 @register(
@@ -1959,8 +1953,7 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     cluster→pair→pick path on real data."""
     e = _spread(_t(spark, sf_dir, "embeddings"), 8)
     return semantic_dedup(
-        e, id_col="vec_id", vec_col="embedding", tau=0.4,
-        memo_key=f"{sf_dir}:embeddings",
+        e, id_col="vec_id", vec_col="embedding", tau=0.4
     ).orderBy("vec_id")
 
 
@@ -2348,31 +2341,19 @@ def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     collect off the persisted explode (the lm_quality discipline).
     The top-k window partitions BY DOCUMENT — parallel at any corpus
     size, never a global sort."""
-    d = _spread(_t(spark, sf_dir, "documents"))
+    docs = _t(spark, sf_dir, "documents")
     # tf and df both read tok
-    tok = _persist(doc_tokens(d))
-    # N is a corpus-derived scalar — memoized per (application,
-    # corpus) on its own twin frame (r11, the _corpus_token_total /
+    tok = _persist(doc_tokens(_spread(docs)))
+    # N is a corpus-derived scalar — memoized on the documents read,
+    # counted on its own twin frame (r11, the _corpus_token_total /
     # pagerank-node-count discipline): counting the persisted tok
     # frame ran the full tokenize pipeline as a serial job per
     # invocation AND materialized the cache during plan build (memo-
     # warmth-dependent captured plans, the plan-gate order lesson)
-    from clinvar_pipeline_spark.caching import memo
-
     def _n_docs() -> int:
-        return (
-            doc_tokens(_spread(_t(spark, sf_dir, "documents")))
-            .select("doc_id")
-            .distinct()
-            .count()
-        )
+        return doc_tokens(_spread(docs)).select("doc_id").distinct().count()
 
-    n_docs = float(
-        memo(
-            ("tfidf_n_docs", spark.sparkContext.applicationId, sf_dir),
-            _n_docs,
-        )
-    )
+    n_docs = float(memo(("tfidf_n_docs",), docs, _n_docs))
     tf = tok.groupBy("doc_id", "t").agg(F.count(F.lit(1)).alias("tf"))
     df = tok.groupBy("t").agg(F.countDistinct("doc_id").alias("df"))
     score = F.col("tf") * F.log(
@@ -2920,8 +2901,8 @@ def langid_model(tri: DataFrame) -> tuple[DataFrame, DataFrame]:
 def _langid_model_rows(
     spark: SparkSession, sf_dir: str
 ) -> tuple[list, list]:
-    """The trained langid model as plain driver rows, memoized per
-    corpus dir (caching.memo — the quantizer discipline, r6): a
+    """The trained langid model as plain driver rows, memoized on the
+    documents read (caching.memo — the quantizer discipline, r6): a
     language model is CORPUS state, so one session serving langid +
     langid_report + the bench's repeated passes trains once instead
     of re-running the trigram groupBy + vocabulary-count job per
@@ -2929,17 +2910,16 @@ def _langid_model_rows(
     (~1.9k rows on the testdata corpus) and survives release_cached
     like the centroid memos; plain tuples, not Rows bound to a
     session."""
-    from clinvar_pipeline_spark.caching import memo
+    d = _t(spark, sf_dir, "documents")
 
     def build() -> tuple[list, list]:
-        d = _spread(_t(spark, sf_dir, "documents"))
-        lw, lwu = langid_model(_lid_trigrams(d))
+        lw, lwu = langid_model(_lid_trigrams(_spread(d)))
         return (
             [(r["cand"], r["t"], float(r["w"])) for r in lw.collect()],
             [(r["cand"], float(r["wu"])) for r in lwu.collect()],
         )
 
-    return memo(("langid_model", sf_dir), build)
+    return memo(("langid_model",), d, build)
 
 
 @register(

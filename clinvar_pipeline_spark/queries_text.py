@@ -191,7 +191,7 @@ def q_shingle_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     SHINGLE_DF_CAP stop-shingle guard on the JOIN only (denominators
     stay uncapped → reported containment is the df-capped lower
     bound, the no-silent-caps convention — drops visible via
-    tools/skew_report.py). Intersections are computed once per
+    ``--audit``). Intersections are computed once per
     unordered pair and fanned to both directions AFTER the aggregate
     (2 rows per surviving pair, not 2× the join work)."""
     d = _spread(_t(spark, sf_dir, "documents"))

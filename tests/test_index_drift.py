@@ -50,8 +50,6 @@ SCHEMA = "vec_id long, embedding array<float>, label string"
 
 
 def test_drift_monitor_trips_on_shift_and_retrain_restores(spark):
-    from clinvar_pipeline_spark.caching import clear_memo
-
     corpus_a = spark.createDataFrame(_clustered(400, seed=1), SCHEMA)
     C = _train_centroids(corpus_a, "embedding", 16, 400, 5,
                          id_col="vec_id")
@@ -69,13 +67,11 @@ def test_drift_monitor_trips_on_shift_and_retrain_restores(spark):
     r_shift = index_drift_ratio(corpus_b, C, train_stats)
     assert r_shift > DRIFT_RETRAIN_THRESHOLD, r_shift
     # retrain on the shifted corpus restores the monitor
-    clear_memo()
     C2 = _train_centroids(corpus_b, "embedding", 16, 400, 5,
                           id_col="vec_id")
     stats2 = assignment_distance_stats(corpus_b, C2)
     r_after = index_drift_ratio(corpus_b, C2, stats2)
     assert 0.9 < r_after < 1.1, r_after
-    clear_memo()
 
 
 def test_index_stats_round_trip(spark, tmp_path):
@@ -89,7 +85,7 @@ def test_cli_corpus_prep_retrains_only_on_drift(spark, tmp_path):
     over the unchanged corpus KEEPS the index (retrained=0, ratio~1);
     swapping in a shifted embedding corpus trips the monitor and the
     next build retrains; the build after that keeps the new index."""
-    from clinvar_pipeline_spark.caching import clear_memo, release_cached
+    from clinvar_pipeline_spark.caching import release_cached
     from clinvar_pipeline_spark.cli import main
 
     sf = tmp_path / "sf"
@@ -104,11 +100,9 @@ def test_cli_corpus_prep_retrains_only_on_drift(spark, tmp_path):
     out = tmp_path / "prep"
 
     def run() -> dict:
-        # each build is its own session in production; the memo is
-        # session state, so wipe it (the documented memo-temperature
-        # caveat for same-path data swaps)
+        # the builds share one session: the third rewrites the corpus
+        # at the same path, and the memo must see the new files itself
         release_cached()
-        clear_memo()
         main(["--corpusPrep", "--sf", str(sf), "--out", str(out)])
         return {
             r["stage"]: r["n_rows"]

@@ -136,7 +136,7 @@ def _ann_pq_fixed_batch(spark, sf_dir: str):
 
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet").repartition(8)
     q = e.orderBy("vec_id").limit(2500)
-    return ann_topk_pq(q, e, k=5, memo_key=f"{sf_dir}:embeddings")
+    return ann_topk_pq(q, e, k=5)
 
 
 # probe-specific stand-ins where the registry query's contract can't
@@ -163,7 +163,7 @@ def _ann_serve_fixed_batch(ivf: bool):
         e = spark.read.parquet(f"{sf_dir}/embeddings.parquet").repartition(8)
         q = e.orderBy("vec_id").limit(2500)
         if ivf:
-            return ann_topk_ivf(q, e, k=5, memo_key=f"{sf_dir}:embeddings")
+            return ann_topk_ivf(q, e, k=5)
         return ann_topk_lsh_q(q, e, k=5)
 
     return probe
