@@ -15,7 +15,8 @@ release everything after the dependent plans materialize via
 
 from __future__ import annotations
 
-from typing import Any, Callable, Hashable, Iterable
+import re
+from typing import Any, Callable, Hashable
 
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
@@ -23,69 +24,81 @@ from pyspark.sql import DataFrame, SparkSession
 _PERSISTED: list[DataFrame] = []
 
 # --------------------------------------------------------------------
-# Session-scoped memo (NOT released by release_cached).
-#
-# For derived *corpus state* — trained quantizers, corpus counts, a
-# cluster labeling, a read handle — that is a function of the input
-# data and parameters, not of the individual query invocation.
-# Re-deriving it per invocation re-runs a sort+collect training job
-# every time a plan is built (the r5 ann_topk_ivf warm regression: warm
-# passes landed slower than their own cold pass). A quantizer is
-# trained once per corpus and served to every query.
+# Session-scoped memo (NOT released by release_cached) for corpus
+# state — trained quantizers, corpus counts, a cluster labeling, a read
+# handle: a function of the input and parameters, not of the
+# invocation. Re-deriving it per plan build re-ran a training job per
+# invocation (the r5 ann_topk_ivf regression: warm slower than cold).
 #
 # An entry is keyed by the session, the caller's tag and parameters,
-# and the input's identity: every file it reads with its size and
-# modification time, as the filesystem reports them at lookup. Input
-# rewritten at the same path (the product's release lands nightly at
-# one fixed path) therefore misses; no caller ever invalidates.
-# release_cached() leaves the memo alone: its values are small driver
-# objects whose whole point is surviving invocations.
+# and every file the input reads with its size and modification time:
+# a frame's as Spark listed them when it was read, a path's
+# (memo_path, the _t read handle) as listed at lookup. Input rewritten
+# at the same path (the product's release lands nightly at one fixed
+# path) therefore misses; no caller ever invalidates.
 # --------------------------------------------------------------------
 
 _MEMO: dict[Hashable, list[tuple[DataFrame | None, Any]]] = {}
 
+# A Hadoop FileStatus.toString (unchanged since Hadoop 2)
+_STATUS = re.compile(
+    r"\{path=(.*?); isDirectory=(\w+); (?:length=(\d+); .*?)?modification_time=(\d+);"
+)
 
-def _file_identity(spark: SparkSession, paths: Iterable[str]) -> tuple | None:
-    """Sorted ``(path, size, mtime)`` of every file at or under
-    ``paths`` as of now; None when one no longer exists."""
-    hadoop_path = spark._jvm.org.apache.hadoop.fs.Path
+
+def _statuses(jseq) -> list[tuple[str, str, str, str]] | None:
+    """``(path, isDirectory, length, mtime)`` of each FileStatus in a
+    JVM sequence, fetched as ONE string however many files it holds;
+    None when one does not parse (the memo then keeps nothing)."""
+    text = jseq.mkString("\n")
+    rows = _STATUS.findall(text)
+    return rows if len(rows) == len(text.splitlines()) else None
+
+
+def _listing(spark: SparkSession, path: str) -> tuple | None:
+    """Sorted statuses of every file at or under ``path`` as listed
+    now, one listStatus per directory; None when ``path`` is gone."""
+    jvm = spark._jvm
     conf = spark.sparkContext._jsc.hadoopConfiguration()
-    todo, found = [hadoop_path(p) for p in paths], []
+    todo, found = [jvm.org.apache.hadoop.fs.Path(path)], []
     while todo:
-        path = todo.pop()
+        p = todo.pop()
         try:
-            statuses = path.getFileSystem(conf).listStatus(path)
+            listed = p.getFileSystem(conf).listStatus(p)
         except Py4JJavaError as e:
             if "FileNotFound" in e.java_exception.getClass().getName():
                 return None
             raise
-        for st in statuses:
-            if st.isDirectory():
-                todo.append(st.getPath())
-            else:
-                found.append(
-                    (st.getPath().toString(), st.getLen(), st.getModificationTime())
-                )
+        rows = _statuses(jvm.scala.collection.immutable.ArraySeq.unsafeWrapArray(listed))
+        if rows is None:
+            return None
+        todo.extend(jvm.org.apache.hadoop.fs.Path(r[0]) for r in rows if r[1] == "true")
+        found.extend(r for r in rows if r[1] != "true")
     return tuple(sorted(found))
 
 
-def _input_files(df: DataFrame) -> list[str] | None:
-    """Files the ANALYZED plan reads (a persisted frame's optimized
-    plan is an InMemoryRelation with no files), or None for an RDD
-    leaf (createDataFrame over a list, a localCheckpoint): it compares
-    by RDD id, never matches another frame, and keeping it would pin
-    the RDD for the process. Leaves holding their rows in the plan (an
-    Arrow-built LocalRelation, a Range) are left to sameSemantics."""
+def _plan_files(df: DataFrame) -> tuple | None:
+    """Sorted statuses of every file the ANALYZED plan reads (a persisted
+    frame's optimized plan has none), as each relation listed them when
+    read: the files its actions read, with no filesystem call. Leaves
+    holding their rows (LocalRelation, Range) are left to sameSemantics;
+    any other leaf gives None (an RDD leaf compares by RDD id and would
+    pin the RDD for the process)."""
     leaves = df._jdf.queryExecution().analyzed().collectLeaves()
-    files: list[str] = []
+    files = []
     for i in range(leaves.size()):
         leaf = leaves.apply(i)
         kind = leaf.getClass().getSimpleName()
-        if kind == "LogicalRelation":
-            files.extend(leaf.relation().inputFiles())
-        elif kind == "LogicalRDD":
+        if kind in ("LocalRelation", "Range", "OneRowRelation"):
+            continue
+        rel = leaf.relation() if kind == "LogicalRelation" else None
+        if rel is None or rel.getClass().getSimpleName() != "HadoopFsRelation":
             return None
-    return files
+        rows = _statuses(rel.location().allFiles())
+        if rows is None:
+            return None
+        files.extend(rows)
+    return tuple(sorted(files))
 
 
 def _lookup(key: Hashable, frame: DataFrame | None, compute: Callable[[], Any]) -> Any:
@@ -100,18 +113,15 @@ def _lookup(key: Hashable, frame: DataFrame | None, compute: Callable[[], Any]) 
 
 def memo(key: Hashable, source: DataFrame, compute: Callable[[], Any]) -> Any:
     """``compute()``, derived from ``source``, computed once per input.
-    ``key`` is a tag plus the computation's own parameters; the memo
-    adds the session, the status of every file ``source`` reads and
-    its semanticHash, and confirms a hit with ``sameSemantics``: two
-    reads of one path match, a filtered read does not. An input with
-    no confirmable identity (see :func:`_input_files`, or a listed
-    file now gone) is computed and not kept."""
-    files = _input_files(source)
-    spark = source.sparkSession
-    ident = None if files is None else _file_identity(spark, files)
+    ``key`` is a tag plus the computation's own parameters. A hit needs
+    the same files (:func:`_plan_files`) and semanticHash and is
+    confirmed by ``sameSemantics``: two reads of one path match, a
+    filtered read does not. An input with no file identity is computed
+    and not kept."""
+    ident = _plan_files(source)
     if ident is None:
         return compute()
-    app_id = spark.sparkContext.applicationId
+    app_id = source.sparkSession.sparkContext.applicationId
     return _lookup((app_id, key, ident, source.semanticHash()), source, compute)
 
 
@@ -119,8 +129,8 @@ def memo_path(
     key: Hashable, spark: SparkSession, path: str, compute: Callable[[], Any]
 ) -> Any:
     """:func:`memo` for a value read straight from ``path``, keyed on
-    the session, ``key`` and the status of every file under ``path``."""
-    ident = _file_identity(spark, [path])
+    every file under ``path`` as listed now."""
+    ident = _listing(spark, path)
     if ident is None:
         return compute()
     return _lookup((spark.sparkContext.applicationId, key, ident), None, compute)

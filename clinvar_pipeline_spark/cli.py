@@ -720,7 +720,9 @@ def cmd_corpus_prep(spark: SparkSession, args) -> None:
             save_pq_codebooks,
         )
 
-        emb = spark.read.parquet(f"{emb_sf}/embeddings.parquet")
+        # the registry's semantic_dedup corpus, so its corpus count and
+        # trained quantizer (caching.memo) serve this index too
+        emb = Q._spread(Q._t(spark, emb_sf, "embeddings"), 8)
         retrain = True
         if os.path.exists(f"{args.out}/ivf_index") and os.path.exists(
             f"{args.out}/ivf_index_stats"

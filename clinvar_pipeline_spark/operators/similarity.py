@@ -162,9 +162,8 @@ def _train_centroids_q6(
 
     Sample/memo semantics: ≤ train_sample smallest ids when id_col is
     given (TakeOrdered — partitioning-independent), memoized on the
-    corpus and these parameters (caching.memo — a quantizer is corpus
-    state; see the r5 bench regression): a second call over the same
-    files trains nothing, a rewritten corpus retrains."""
+    corpus and these parameters (caching.memo; see the r5 bench
+    regression): a rewritten corpus retrains."""
     key = ("ivf_centroids_q6", vec_col, num_cells, train_sample, lloyd_iters, id_col)
     X = lambda: _training_sample(corpus, vec_col, train_sample, id_col)
     return memo(key, corpus, lambda: _lloyd_q6(X(), num_cells, lloyd_iters))
@@ -892,13 +891,8 @@ def ann_topk_ivf(
             dots = U @ Cq.T  # integer-exact
             # stable sort on -dots: ties keep ascending cell order —
             # the numpy twin of SQL row_number (dot DESC, cell ASC);
-            # argpartition would pick arbitrarily among boundary ties.
-            # Width 1 (a corpus cell) takes argmax: first max == head.
-            order = (
-                np.argmax(dots, axis=1)[:, None]
-                if width == 1
-                else np.argsort(-dots, axis=1, kind="stable")[:, :width]
-            )
+            # argpartition would pick arbitrarily among boundary ties
+            order = np.argsort(-dots, axis=1, kind="stable")[:, :width]
             yield pd.DataFrame(
                 {
                     "_id": pdf["_id"].to_numpy()[nzm],
@@ -919,7 +913,7 @@ def ann_topk_ivf(
         # head IS the argmax cell assignment (same ordering rule)
         c_side = q_side = side(corpus, npr)
     else:
-        # the corpus side reads only its argmax cell
+        # the corpus side keeps only the head of its ranking: its cell
         c_side, q_side = side(corpus, 1), side(queries, npr)
     c_cells = c_side.select(
         F.col("_id").alias("nn_id"), F.col("_pc").getItem(0).alias("cell")

@@ -79,16 +79,13 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
 
-    # The read+normalize below is memoized on the session and the
-    # status of every file under the table's path (caching.memo_path):
-    # every spark.read.parquet call pays a driver-side file listing +
-    # footer schema read (~30-100 ms), and plans re-read the same table
-    # many times per invocation (fk_integrity touches 7 tables 14
-    # times; the ANN family reads documents 4-5x) — measured r11 as
-    # the dominant share of fk_integrity's wall at sf0.1. The memo
-    # holds an UNEVALUATED plan handle — no row is cached, every action
-    # still computes from the parquet files — and a table rewritten in
-    # place gets a fresh read.
+    # The read+normalize below is memoized on the files under the
+    # table's path (caching.memo_path): every spark.read.parquet call
+    # pays a file listing + footer schema read (~30-130 ms), and plans
+    # re-read the same table many times per invocation (fk_integrity
+    # touches 7 tables 14 times) — measured r11 as the dominant share
+    # of fk_integrity's wall at sf0.1. The memo holds an UNEVALUATED
+    # plan handle; a table rewritten in place gets a fresh read.
     def _read() -> DataFrame:
         df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
         # Normalize timestamp columns across testdata generations:

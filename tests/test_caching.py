@@ -64,6 +64,17 @@ def test_memo_hits_the_same_input_and_misses_a_rewrite(spark, tmp_path):
     assert len(calls) == 6
 
 
+def memo_entries(spark) -> Counter:
+    """Memo entries of this session, counted per tag."""
+    app_id = spark.sparkContext.applicationId
+    return Counter(
+        full[1][0]
+        for full, stored in caching._MEMO.items()
+        for _ in stored
+        if full[0] == app_id
+    )
+
+
 # memoized registry call sites, and the memo tags each one adds
 MEMO_SITES = {
     "ann_topk_ivf": {"corpus_count", "ivf_centroids_q6"},
@@ -88,25 +99,15 @@ def test_registry_memo_sites_hit_on_second_invocation(spark, tmp_path):
     shutil.copytree("/root/testdata/sf0.001", sf)
     registry = queries()
 
-    def entries() -> Counter:
-        """Memo entries of this session, counted per tag."""
-        app_id = spark.sparkContext.applicationId
-        return Counter(
-            full[1][0]
-            for full, stored in caching._MEMO.items()
-            for _ in stored
-            if full[0] == app_id
-        )
-
     added: set = set()
     for name, tags in MEMO_SITES.items():
-        before = entries()
+        before = memo_entries(spark)
         registry[name](spark, str(sf))
-        first = entries()
+        first = memo_entries(spark)
         added |= set(first - before)
         registry[name](spark, str(sf))
         release_cached()
-        assert entries() == first, f"{name}: second build missed the memo"
+        assert memo_entries(spark) == first, f"{name}: second build missed the memo"
         # every tag this site uses is present, added now or by a sibling
         assert tags <= set(first), name
     assert set().union(*MEMO_SITES.values()) <= added

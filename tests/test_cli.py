@@ -5,6 +5,8 @@ fixture release into a snapshot, --addRsIds against a dbSNP table,
 cli.main builds its own session via get_spark (getOrCreate reuses the
 test session), so this drives the exact user entry path."""
 
+import shutil
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -384,13 +386,17 @@ def test_cli_annotate(spark, cli_dirs):
 
 
 def test_cli_corpus_prep(spark, tmp_path):
-    main(
-        [
-            "--corpusPrep",
-            "--sf", "/root/testdata/sf0.001",
-            "--out", str(tmp_path / "prep"),
-        ]
-    )
+    from tests.test_caching import memo_entries
+
+    sf = tmp_path / "sf"  # fresh files: no memo entry from an earlier test
+    shutil.copytree("/root/testdata/sf0.001", sf)
+    before = memo_entries(spark)
+    main(["--corpusPrep", "--sf", str(sf), "--out", str(tmp_path / "prep")])
+    # the landed IVF index reuses the semantic_dedup stage's corpus
+    # count and quantizer: one of each per run
+    added = memo_entries(spark) - before
+    assert added["corpus_count"] == 1
+    assert added["ivf_centroids_q6"] == 1
     from clinvar_pipeline_spark.cli import CORPUS_PREP_STAGES
 
     counters = {
