@@ -55,9 +55,17 @@ def _statuses(jseq) -> list[tuple[str, str, str, str]] | None:
     return rows if len(rows) == len(text.splitlines()) else None
 
 
+def _hidden(status_path: str) -> bool:
+    """A name Spark's file index skips: ``_SUCCESS``, ``.crc`` sidecars
+    and the like, but not a ``key=value`` partition directory."""
+    name = status_path.rsplit("/", 1)[-1]
+    return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+
 def _listing(spark: SparkSession, path: str) -> tuple | None:
-    """Sorted statuses of every file at or under ``path`` as listed
-    now, one listStatus per directory; None when ``path`` is gone."""
+    """Sorted statuses of every file at or under ``path`` that a read of
+    ``path`` would scan, as listed now, one listStatus per directory;
+    None when ``path`` is gone."""
     jvm = spark._jvm
     conf = spark.sparkContext._jsc.hadoopConfiguration()
     todo, found = [jvm.org.apache.hadoop.fs.Path(path)], []
@@ -72,6 +80,7 @@ def _listing(spark: SparkSession, path: str) -> tuple | None:
         rows = _statuses(jvm.scala.collection.immutable.ArraySeq.unsafeWrapArray(listed))
         if rows is None:
             return None
+        rows = [r for r in rows if not _hidden(r[0])]
         todo.extend(jvm.org.apache.hadoop.fs.Path(r[0]) for r in rows if r[1] == "true")
         found.extend(r for r in rows if r[1] != "true")
     return tuple(sorted(found))

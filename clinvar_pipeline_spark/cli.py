@@ -1441,7 +1441,8 @@ def cmd_optimize(spark: SparkSession, args) -> None:
     - layout_report/   per-file (min, max) spans of the clustered
       columns read back from the real parquet footers, for the
       Z-ordered layout vs a time-sorted strawman — the data-skipping
-      evidence as a table (files_containing's pruning rule).
+      evidence as a table (a point probe scans each file whose
+      [min, max] span holds it).
     """
     from clinvar_pipeline_spark.operators import layout
     from clinvar_pipeline_spark.queries import _t

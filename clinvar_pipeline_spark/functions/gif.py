@@ -1,4 +1,4 @@
-"""GIF decoder (LZW) + minimal encoder in pure Python (stdlib only).
+"""GIF decoder (LZW) in pure Python (stdlib only).
 
 Completes the multimodal decode ladder for the third advertised image
 format: GIF payloads — including animated, multi-frame GIFs — now get
@@ -15,10 +15,7 @@ canvas state after that frame is drawn (what a viewer displays), as
 RGB. Malformed input raises ValueError only (the kernels'
 never-crash-a-task contract).
 
-The encoder writes valid single- or multi-frame GIF89a using the
-classic clear-code-refresh LZW strategy (literal codes at 9 bits,
-CLEAR emitted before the decoder's table would force a width bump) —
-enough to test the decoder honestly in a codec-less container.
+The matching test-side encoder is functions/codec_oracle.gif_encode.
 
 All from public knowledge: the GIF89a specification and the standard
 LZW variable-code algorithm.
@@ -263,93 +260,3 @@ def gif_decode(raw: bytes) -> tuple[int, int, int, bytes]:
     still-image view of a (possibly animated) GIF."""
     w, h, frames = gif_frames(raw, max_frames=1)
     return w, h, 3, frames[0]
-
-
-# ---------------------------------------------------------------------------
-# Encoder (for tests: valid GIF89a, clear-code-refresh LZW)
-# ---------------------------------------------------------------------------
-
-
-def _lzw_encode_literals(indices: bytes, min_code_size: int) -> bytes:
-    """LZW stream of pure literal codes at ``min_code_size + 1`` bits,
-    emitting CLEAR whenever the decoder's table is about to force a
-    width bump — the classic 'uncompressed GIF' strategy. Valid input
-    for any conforming decoder."""
-    clear = 1 << min_code_size
-    eoi = clear + 1
-    width = min_code_size + 1
-    out = bytearray()
-    acc = 0
-    nbits = 0
-
-    def emit(code: int) -> None:
-        nonlocal acc, nbits
-        acc |= code << nbits
-        nbits += width
-        while nbits >= 8:
-            out.append(acc & 0xFF)
-            acc >>= 8
-            nbits -= 8
-
-    emit(clear)
-    # decoder table after CLEAR: eoi+1 entries; grows by 1 per code
-    # after the first. Stay below 2**width - 1 so width never bumps.
-    budget = (1 << width) - (eoi + 1) - 1
-    count = 0
-    for ci in indices:
-        if count == budget:
-            emit(clear)
-            count = 0
-        emit(ci)
-        count += 1
-    emit(eoi)
-    if nbits:
-        out.append(acc & 0xFF)
-    return bytes(out)
-
-
-def gif_encode(
-    w: int,
-    h: int,
-    frames: list[bytes],
-    palette: bytes | None = None,
-    interlace_first: bool = False,
-) -> bytes:
-    """Encode one or more w*h index-byte frames as GIF89a with a
-    256-entry color table (default: grayscale identity palette, so
-    index i renders as RGB(i,i,i))."""
-    if palette is None:
-        palette = bytes(v for i in range(256) for v in (i, i, i))
-    if len(palette) != 768:
-        raise ValueError("palette must be 256 RGB entries")
-    out = bytearray(b"GIF89a")
-    out += struct.pack("<HHBBB", w, h, 0xF7, 0, 0)  # GCT, 256 entries
-    out += palette
-    if len(frames) > 1:  # NETSCAPE looping block, the animation marker
-        out += b"\x21\xff\x0bNETSCAPE2.0\x03\x01\x00\x00\x00"
-    for fi, frame in enumerate(frames):
-        if len(frame) != w * h:
-            raise ValueError("frame size does not match dimensions")
-        if len(frames) > 1:
-            # graphic control: 10cs delay, no transparency, disposal 1
-            out += b"\x21\xf9\x04\x04\x0a\x00\x00\x00"
-        interlaced = interlace_first and fi == 0
-        out += struct.pack(
-            "<BHHHHB", 0x2C, 0, 0, w, h, 0x40 if interlaced else 0
-        )
-        idx = bytes(frame)
-        if interlaced:
-            rows = []
-            for off, step in _INTERLACE_PASSES:
-                for y in range(off, h, step):
-                    rows.append(idx[y * w : (y + 1) * w])
-            idx = b"".join(rows)
-        out.append(8)  # min LZW code size
-        stream = _lzw_encode_literals(idx, 8)
-        for i in range(0, len(stream), 255):
-            chunk = stream[i : i + 255]
-            out.append(len(chunk))
-            out += chunk
-        out.append(0)
-    out.append(0x3B)
-    return bytes(out)

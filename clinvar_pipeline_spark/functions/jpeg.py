@@ -12,13 +12,10 @@ restart markers, 8- and 16-bit quantization tables. Progressive
 (SOF2), arithmetic coding, and 12-bit precision raise ValueError and
 the caller's ladder decides (metadata still comes from jpeg_info).
 
-The encoder exists so the codec is testable in this codec-less
-container: it emits valid baseline 4:4:4 JFIF with self-declared flat
-Huffman tables (every symbol at one code length — canonically valid,
-trivially correct) and uniform quantization. decode(encode(x)) is
-lossy but pixel-close; tests pin both the round trip and a
-handcrafted known-bytes stream, so a shared transform bug cannot
-cancel out.
+The matching test-side encoder is functions/codec_oracle.jpeg_encode.
+decode(encode(x)) is lossy but pixel-close; tests pin both the round
+trip and a handcrafted known-bytes stream, so a shared transform bug
+cannot cancel out.
 
 Everything here is public knowledge: ITU-T T.81 (the JPEG spec),
 the JFIF spec, and the BT.601 YCbCr matrix.
@@ -349,172 +346,3 @@ def jpeg_decode(raw: bytes) -> tuple[int, int, int, bytes]:
     rgb = np.stack([r, g, b], axis=-1)
     out = np.clip(np.round(rgb), 0, 255).astype(np.uint8)
     return w, h, 3, out.tobytes()
-
-
-# ---------------------------------------------------------------------------
-# Encoder (baseline 4:4:4, flat Huffman tables, uniform quantization)
-# ---------------------------------------------------------------------------
-
-# flat canonical tables: all DC symbols (sizes 0..11) at length 4,
-# all 162 AC symbols at length 8 — valid Huffman (Kraft holds, the
-# all-ones code stays unassigned), trivially canonical
-_DC_SYMBOLS = bytes(range(12))
-_DC_BITS = [0, 0, 0, 12] + [0] * 12
-_AC_SYMBOLS = bytes(
-    [0x00, 0xF0]
-    + [(r << 4) | s for r in range(16) for s in range(1, 11)]
-)
-_AC_BITS = [0, 0, 0, 0, 0, 0, 0, 162] + [0] * 8
-_QUANT = 16  # uniform quantizer step
-
-
-def _encode_tables() -> tuple[dict, dict]:
-    """symbol -> (length, code) for the flat tables above."""
-    def enc(bits, values):
-        table = {}
-        code = 0
-        k = 0
-        for length in range(1, 17):
-            for _ in range(bits[length - 1]):
-                table[values[k]] = (length, code)
-                k += 1
-                code += 1
-            code <<= 1
-        return table
-
-    return enc(_DC_BITS, _DC_SYMBOLS), enc(_AC_BITS, _AC_SYMBOLS)
-
-
-class _BitWriter:
-    def __init__(self):
-        self.out = bytearray()
-        self.acc = 0
-        self.n = 0
-
-    def write(self, code: int, length: int) -> None:
-        for i in range(length - 1, -1, -1):
-            self.acc = (self.acc << 1) | ((code >> i) & 1)
-            self.n += 1
-            if self.n == 8:
-                self.out.append(self.acc)
-                if self.acc == 0xFF:  # byte stuffing
-                    self.out.append(0x00)
-                self.acc = 0
-                self.n = 0
-
-    def flush(self) -> bytes:
-        if self.n:
-            self.acc <<= 8 - self.n
-            self.acc |= (1 << (8 - self.n)) - 1  # pad with 1s per T.81
-            self.out.append(self.acc)
-            if self.acc == 0xFF:
-                self.out.append(0x00)
-            self.acc = 0
-            self.n = 0
-        return bytes(self.out)
-
-
-def _csize(v: int) -> int:
-    """Magnitude category (number of bits) of a coefficient value."""
-    return int(abs(v)).bit_length()
-
-
-def jpeg_encode(w: int, h: int, channels: int, pixels: bytes) -> bytes:
-    """Encode raw 8-bit pixels (1=gray, 3=RGB interleaved) as a real
-    baseline JFIF JPEG (4:4:4, uniform quantization step 16)."""
-    if channels not in (1, 3):
-        raise ValueError("jpeg_encode supports 1 or 3 channels")
-    if len(pixels) != w * h * channels:
-        raise ValueError("pixel buffer does not match dimensions")
-    img = np.frombuffer(pixels, dtype=np.uint8).reshape(h, w, channels)
-
-    if channels == 3:
-        rf = img[..., 0].astype(np.float64)
-        gf = img[..., 1].astype(np.float64)
-        bf = img[..., 2].astype(np.float64)
-        yy = 0.299 * rf + 0.587 * gf + 0.114 * bf
-        cb = -0.168736 * rf - 0.331264 * gf + 0.5 * bf + 128.0
-        cr = 0.5 * rf - 0.418688 * gf - 0.081312 * bf + 128.0
-        comps = [yy, cb, cr]
-    else:
-        comps = [img[..., 0].astype(np.float64)]
-
-    # pad each plane to 8x8 blocks by edge replication
-    bw, bh = (w + 7) // 8 * 8, (h + 7) // 8 * 8
-    padded = []
-    for p in comps:
-        pp = np.empty((bh, bw), dtype=np.float64)
-        pp[:h, :w] = p
-        pp[:h, w:] = p[:, -1:]
-        pp[h:, :] = pp[h - 1 : h, :]
-        padded.append(pp)
-
-    dc_tab, ac_tab = _encode_tables()
-    writer = _BitWriter()
-    dc_pred = [0] * len(comps)
-    inv_zz = ZIGZAG  # coeff order: flat[ZIGZAG[i]] is i-th zigzag coeff
-    for my in range(bh // 8):
-        for mx in range(bw // 8):
-            for ci, p in enumerate(padded):
-                block = p[my * 8 : my * 8 + 8, mx * 8 : mx * 8 + 8] - 128.0
-                coeffs = _A @ block @ _A.T
-                q = np.round(coeffs / _QUANT).astype(np.int64)
-                zz = q.reshape(-1)[inv_zz]
-                diff = int(zz[0]) - dc_pred[ci]
-                dc_pred[ci] = int(zz[0])
-                size = _csize(diff)
-                length, code = dc_tab[size]
-                writer.write(code, length)
-                if size:
-                    v = diff if diff >= 0 else diff + (1 << size) - 1
-                    writer.write(v & ((1 << size) - 1), size)
-                run = 0
-                last_nz = max(
-                    (i for i in range(1, 64) if zz[i]), default=0
-                )
-                for k in range(1, last_nz + 1):
-                    v = int(zz[k])
-                    if v == 0:
-                        run += 1
-                        continue
-                    while run > 15:
-                        length, code = ac_tab[0xF0]
-                        writer.write(code, length)
-                        run -= 16
-                    size = _csize(v)
-                    length, code = ac_tab[(run << 4) | size]
-                    writer.write(code, length)
-                    ev = v if v >= 0 else v + (1 << size) - 1
-                    writer.write(ev & ((1 << size) - 1), size)
-                    run = 0
-                if last_nz < 63:
-                    length, code = ac_tab[0x00]  # EOB
-                    writer.write(code, length)
-    data = writer.flush()
-
-    def seg(marker: int, payload: bytes) -> bytes:
-        return struct.pack(">BBH", 0xFF, marker, len(payload) + 2) + payload
-
-    zz_q = bytes([_QUANT] * 64)
-    out = bytearray(b"\xff\xd8")
-    out += seg(0xE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
-    out += seg(0xDB, b"\x00" + zz_q)
-    if channels == 3:
-        out += seg(0xDB, b"\x01" + zz_q)
-    sof = struct.pack(">BHHB", 8, h, w, channels)
-    for c in range(channels):
-        sof += struct.pack(">BBB", c + 1, 0x11, 0 if c == 0 else 1)
-    out += seg(0xC0, sof)
-    out += seg(0xC4, b"\x00" + bytes(_DC_BITS) + _DC_SYMBOLS)
-    out += seg(0xC4, b"\x10" + bytes(_AC_BITS) + _AC_SYMBOLS)
-    if channels == 3:
-        out += seg(0xC4, b"\x01" + bytes(_DC_BITS) + _DC_SYMBOLS)
-        out += seg(0xC4, b"\x11" + bytes(_AC_BITS) + _AC_SYMBOLS)
-    sos = bytes([channels])
-    for c in range(channels):
-        sos += struct.pack(">BB", c + 1, 0x00 if c == 0 else 0x11)
-    sos += b"\x00\x3f\x00"
-    out += seg(0xDA, sos)
-    out += data
-    out += b"\xff\xd9"
-    return bytes(out)

@@ -7,7 +7,8 @@ unfiltering (all five filter types), palette expansion, and a matching
 encoder. JPEG and GIF additionally get fast *header* parsers here
 (dimensions + format, used by the metadata path); their full pixel
 codecs live in the sibling modules functions/jpeg.py (baseline DCT
-decode + encode) and functions/gif.py (LZW decode + encode).
+decode) and functions/gif.py (LZW decode); their encoders live in
+functions/codec_oracle.py.
 
 Used by operators/multimodal.py as the middle tier of its decode
 ladder (PIL when importable -> these -> deterministic fake for
@@ -196,22 +197,6 @@ def png_encode(w: int, h: int, channels: int, pixels: bytes) -> bytes:
         + chunk(b"IDAT", zlib.compress(scan))
         + chunk(b"IEND", b"")
     )
-
-
-def resize_nearest(
-    w: int, h: int, channels: int, pixels: bytes, out_w: int, out_h: int
-) -> bytes:
-    """Nearest-neighbor resample of raw pixel rows (real resize math,
-    no codec needed)."""
-    out = bytearray(out_w * out_h * channels)
-    for oy in range(out_h):
-        sy = min(oy * h // out_h, h - 1)
-        for ox in range(out_w):
-            sx = min(ox * w // out_w, w - 1)
-            src = (sy * w + sx) * channels
-            dst = (oy * out_w + ox) * channels
-            out[dst : dst + channels] = pixels[src : src + channels]
-    return bytes(out)
 
 
 @_valueerror_boundary

@@ -3,12 +3,10 @@ truncation and width-bucketed packing. All three are plain Catalyst
 expressions (SURVEY §2.8): the trim cuts the UTF-8 encoding with a
 binary ``substring`` and backs off to the last whole character with
 ``is_valid_utf8``; the packer is one ``aggregate`` fold over the sorted
-elements. ``byte_trim_py`` and ``pack_py`` are their Python reference
-implementations, which the tests compare them against."""
+elements. Their Python reference implementations, which the tests
+compare them against, live in functions/text_oracle.py."""
 
 from __future__ import annotations
-
-from typing import List, Optional
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -76,19 +74,6 @@ def byte_trim(col: Column | str, budget: int) -> Column:
     )
 
 
-def byte_trim_py(s: Optional[str], budget: int) -> Optional[str]:
-    """Python reference implementation of :func:`byte_trim`."""
-    keep = _keep_bytes(budget)
-    if s is None:
-        return None
-    raw = s.encode("utf-8")
-    if len(raw) <= budget:
-        return s
-    # cut at the byte budget, dropping any trailing incomplete multibyte
-    # sequence (input is valid UTF-8, so 'ignore' only ever drops that)
-    return raw[:keep].decode("utf-8", errors="ignore") + TRIM_SUFFIX
-
-
 # ---------------------------------------------------------------------------
 # Width-bucketed packing (A3, AnnotCache.java:136-167,213-244).
 #
@@ -140,21 +125,3 @@ def pack_width_buckets(col: Column | str, width: int) -> Column:
         F.length(F.array_join(elems, _JOINER)) <= width, F.array(elems)
     ).otherwise(packed)
 
-
-def pack_py(items: Optional[List[str]], width: int) -> Optional[List[List[str]]]:
-    """Python reference implementation of :func:`pack_width_buckets`."""
-    if items is None:
-        return None
-    buckets: List[List[str]] = []
-    cur: List[str] = []
-    cur_len = 0
-    for e in sorted(set(items)):
-        add = len(e) if not cur else cur_len + len(_JOINER) + len(e)
-        if cur and add > width:
-            buckets.append(cur)
-            cur, cur_len = [e], len(e)
-        else:
-            cur, cur_len = cur + [e], add
-    if cur or not buckets:
-        buckets.append(cur)
-    return buckets

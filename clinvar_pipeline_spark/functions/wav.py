@@ -4,10 +4,10 @@ multimodal ladder.
 PCM WAV needs no entropy codec, so — like Y4M for video — the real
 thing is implementable in-container: parse the RIFF chunk list for
 ``fmt `` (sample rate / channels / bit depth) and ``data`` (sample
-payload), and window the PCM stream by *time*, not bytes
-(``operators/multimodal.sample_frames`` uses :func:`wav_window` to
-emit evenly spaced fixed-duration windows — the seek+slice semantics
-an audio feature extractor has). MP3 parses at the header tier
+payload). ``operators/multimodal.sample_frames`` windows the PCM
+stream by *time*, not bytes, slicing evenly spaced fixed-duration
+windows from the ``data_off`` layout :func:`wav_info` reports (the
+seek+slice semantics an audio feature extractor has). MP3 parses at the header tier
 (functions/mp3.py frame walk); remaining compressed audio (AAC)
 stays at the documented fake tier.
 
@@ -65,37 +65,3 @@ def wav_info(raw: bytes) -> dict:
         "data_off": data_off,
         "data_len": data_len,
     }
-
-
-def wav_window(raw: bytes, at_sample: int, n_samples: int) -> bytes:
-    """Seek+slice: the PCM bytes for ``n_samples`` sample-frames
-    starting at ``at_sample`` (clamped to the stream end) — real audio
-    windowing, no decode needed for integer PCM."""
-    info = wav_info(raw)
-    frame = info["channels"] * info["bits"] // 8
-    lo = min(at_sample, info["n_samples"]) * frame
-    hi = min(at_sample + n_samples, info["n_samples"]) * frame
-    return raw[info["data_off"] + lo: info["data_off"] + hi]
-
-
-def wav_encode(
-    samples: list[int], sample_rate: int = 8000, channels: int = 1,
-    bits: int = 16,
-) -> bytes:
-    """Minimal PCM encoder (tests + fixtures). ``samples`` are
-    interleaved integer sample values."""
-    if bits == 16:
-        data = b"".join(struct.pack("<h", s) for s in samples)
-    elif bits == 8:
-        data = bytes((s + 128) & 0xFF for s in samples)
-    else:
-        raise ValueError("wav_encode: 8/16-bit only")
-    fmt = struct.pack(
-        "<HHIIHH", 1, channels, sample_rate,
-        sample_rate * channels * bits // 8, channels * bits // 8, bits,
-    )
-    chunks = b"fmt " + struct.pack("<I", len(fmt)) + fmt
-    chunks += b"data" + struct.pack("<I", len(data)) + data
-    if len(data) & 1:
-        chunks += b"\x00"
-    return b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks

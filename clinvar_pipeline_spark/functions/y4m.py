@@ -13,7 +13,8 @@ decode is out of honest scope for a codec-less container.
 Supported chroma: C444, C420 (+jpeg/paldv/mpeg2 siting variants —
 siting only affects filtering, not plane sizes), Cmono. Color math is
 BT.601 limited-range (the Y4M default), integer-exact and clamped so
-encode→decode round-trips within ±2/255 per channel.
+encode→decode round-trips within ±2/255 per channel (the encoder is
+functions/codec_oracle.y4m_encode).
 
 All reads are bounded by the buffer length; malformed input raises
 ValueError (the ladder's uniform failure boundary — never a task
@@ -168,49 +169,4 @@ def _decode_frame(
         urow = raw[u_at + cy * cw: u_at + (cy + 1) * cw]
         vrow = raw[v_at + cy * cw: v_at + (cy + 1) * cw]
         out += _yuv_to_rgb_row(yrow, urow, vrow, w, xdiv)
-    return bytes(out)
-
-
-def y4m_encode(
-    w: int,
-    h: int,
-    rgb_frames: list[bytes],
-    fps: tuple[int, int] = (25, 1),
-    chroma: str = "444",
-) -> bytes:
-    """Minimal encoder (tests + fixtures): RGB888 frames → BT.601
-    limited-range planar YUV in a spec-conformant stream."""
-    if chroma not in _PLANE_DIVS or _PLANE_DIVS[chroma] is None:
-        raise ValueError("y4m_encode: supported chroma are 444/420*")
-    xdiv, ydiv = _PLANE_DIVS[chroma]
-    head = (
-        f"YUV4MPEG2 W{w} H{h} F{fps[0]}:{fps[1]} Ip A1:1 C{chroma}\n"
-    ).encode()
-    out = bytearray(head)
-    cw, ch_ = -(-w // xdiv), -(-h // ydiv)
-    for fr in rgb_frames:
-        if len(fr) != w * h * 3:
-            raise ValueError("y4m_encode: frame size mismatch")
-        yp = bytearray(w * h)
-        up = bytearray(cw * ch_)
-        vp = bytearray(cw * ch_)
-        usum = [[0, 0] for _ in range(cw * ch_)]  # (sum, n)
-        vsum = [[0, 0] for _ in range(cw * ch_)]
-        for yy in range(h):
-            for xx in range(w):
-                o = (yy * w + xx) * 3
-                r, g, b = fr[o], fr[o + 1], fr[o + 2]
-                yv = (66 * r + 129 * g + 25 * b + 128 >> 8) + 16
-                uv = (-38 * r - 74 * g + 112 * b + 128 >> 8) + 128
-                vv = (112 * r - 94 * g - 18 * b + 128 >> 8) + 128
-                yp[yy * w + xx] = max(16, min(235, yv))
-                ci = (yy // ydiv) * cw + (xx // xdiv)
-                usum[ci][0] += max(16, min(240, uv))
-                usum[ci][1] += 1
-                vsum[ci][0] += max(16, min(240, vv))
-                vsum[ci][1] += 1
-        for ci in range(cw * ch_):
-            up[ci] = usum[ci][0] // max(usum[ci][1], 1)
-            vp[ci] = vsum[ci][0] // max(vsum[ci][1], 1)
-        out += b"FRAME\n" + bytes(yp) + bytes(up) + bytes(vp)
     return bytes(out)

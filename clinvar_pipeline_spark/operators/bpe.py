@@ -197,53 +197,3 @@ def train_bpe_merges(
     syms.unpersist()
     return merges
 
-
-def bpe_tokenize(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    merges: list[tuple[str, str, int]],
-) -> DataFrame:
-    """Apply learned merges: (id, text) -> (id, bpe_tokens
-    array<string>, n_bpe_tokens). One Arrow kernel applies the merge
-    list in learned order to every word (the standard greedy BPE
-    encoder); merges ride to executors via closure capture (they are
-    tokenizer-sized — tens of thousands of pairs — the same broadcast
-    budget as any dim). Map-only, no shuffle: the 100 TB tokenize
-    pass."""
-    from pyspark.sql.functions import pandas_udf
-
-    ranked = {(left, right): i for i, (left, right, _) in enumerate(merges)}
-
-    def encode_word(word: str) -> list[str]:
-        s = [c for c in word]
-        while len(s) >= 2:
-            # lowest-rank applicable merge first (learned order)
-            best_i, best_rank = -1, len(ranked)
-            for i in range(len(s) - 1):
-                r = ranked.get((s[i], s[i + 1]), None)
-                if r is not None and r < best_rank:
-                    best_i, best_rank = i, r
-            if best_i < 0:
-                break
-            s[best_i: best_i + 2] = [s[best_i] + s[best_i + 1]]
-        return s
-
-    @pandas_udf("array<string>")
-    def encode(texts: pd.Series) -> pd.Series:
-        import re
-
-        tok_re = re.compile(r"[a-z0-9]+")
-        out = []
-        for t in texts:
-            toks = tok_re.findall((t or "").lower())
-            pieces: list[str] = []
-            for w in toks:
-                pieces.extend(encode_word(w))
-            out.append(pieces)
-        return pd.Series(out)
-
-    return df.select(
-        F.col(id_col).alias("id"),
-        encode(F.col(text_col)).alias("bpe_tokens"),
-    ).withColumn("n_bpe_tokens", F.size("bpe_tokens"))

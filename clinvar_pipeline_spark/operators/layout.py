@@ -127,17 +127,6 @@ def file_stats(path: str, columns: list[str]) -> list[dict[str, tuple]]:
     return out
 
 
-def files_containing(stats: list[dict[str, tuple]], column: str, value) -> int:
-    """How many files a point predicate on ``column`` must scan, by
-    the min/max pruning rule."""
-    n = 0
-    for st in stats:
-        lo, hi = st[column]
-        if lo is None or (lo <= value <= hi):
-            n += 1
-    return n
-
-
 def partitioned_write(df: DataFrame, partition_col: str, path: str) -> None:
     """Hive-style directory partitioning — the coarse-grained
     complement to Z-order clustering: equality/IN predicates on the
@@ -149,26 +138,3 @@ def partitioned_write(df: DataFrame, partition_col: str, path: str) -> None:
     Z-order for high-cardinality multi-dim ranges."""
     df.write.mode("overwrite").partitionBy(partition_col).parquet(path)
 
-
-def bucketed_write(
-    df: DataFrame,
-    table: str,
-    bucket_col: str,
-    n_buckets: int,
-    path: str,
-) -> None:
-    """Bucketed table layout: rows hash-distributed into ``n_buckets``
-    files by ``bucket_col`` and sorted within each, registered in the
-    session catalog. Two tables bucketed the same way join WITHOUT any
-    Exchange — the shuffle is paid once at write time and amortized
-    over every subsequent join/aggregate on the bucket key (the
-    co-located-join strategy SURVEY §2's 100 TB notes call for; tests
-    assert the exchange-free SortMergeJoin plan)."""
-    (
-        df.write.mode("overwrite")
-        .bucketBy(n_buckets, bucket_col)
-        .sortBy(bucket_col)
-        .option("path", path)
-        .format("parquet")
-        .saveAsTable(table)
-    )

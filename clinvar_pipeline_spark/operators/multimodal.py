@@ -45,7 +45,7 @@ FRAME_SCHEMA = "id long, frame_idx int, frame_bytes binary"
 # decode_tier values — which rung of the ladder actually produced the
 # result, surfaced as a column so a production corpus can report how
 # much of it decoded for real (the same observability discipline as
-# the VCF drop counters, plans/vcf.py clinvar2vcf_drop_counters)
+# the VCF drop counters of plans/vcf.py)
 TIER_PIL = "pil"
 TIER_PURE = "pure"  # pure-Python codecs in functions/{png,jpeg,gif}.py
 TIER_FAKE = "fake"  # unrecognizable/malformed bytes, deterministic fake
@@ -101,7 +101,7 @@ def _decode_image(raw: bytes) -> tuple[int, int, str, str]:
     """(width, height, format, decode_tier) via the decode ladder:
     PIL -> pure PNG/JPEG/GIF header parsers (functions/png.py; the
     metadata path needs dimensions, not pixels, so it uses the cheap
-    parsers while resize/frames use the full codecs) -> deterministic
+    parsers while features/frames use the full codecs) -> deterministic
     fake for unrecognizable bytes. Each tier
     falls through to the next on failure, so a PIL build missing a
     plugin still gets the stdlib parse, and only unrecognizable/
@@ -331,18 +331,6 @@ def extract_audio_meta(binaries: DataFrame) -> DataFrame:
     return binaries.mapInPandas(kernel, AUDIO_META_SCHEMA)
 
 
-def decode_tier_counters(binaries: DataFrame) -> DataFrame:
-    """(decode_tier, n) — how many payloads decoded via PIL, the pure
-    stdlib codecs, or fell to the deterministic fake. The run-report
-    twin of the VCF drop counters: a production corpus asserts its
-    real-decode fraction instead of trusting it."""
-    return (
-        extract_image_meta(binaries)
-        .groupBy("decode_tier")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-
 def sample_frames(
     binaries: DataFrame, n_frames: int = 4, frame_size: int = 16
 ) -> DataFrame:
@@ -519,227 +507,6 @@ def sample_frames(
     return binaries.mapInPandas(kernel, FRAME_SCHEMA)
 
 
-RESIZE_SCHEMA = (
-    "id long, out_width int, out_height int, resized binary,"
-    " decode_tier string"
-)
-
-
-def resize_images(
-    binaries: DataFrame, out_width: int = 32, out_height: int = 32
-) -> DataFrame:
-    """(id, content) -> (id, out_width, out_height, resized): the
-    image-resize stage. PNG, baseline JPEG, and GIF payloads are
-    REALLY resized — full decode (functions/{png,jpeg,gif}.py or
-    PIL), nearest-neighbor resample, PNG re-encode — so ``resized``
-    is itself a decodable PNG at the target dimensions. Non-image
-    bytes fall to the DETERMINISTIC FAKE tier: a payload of exactly
-    w*h bytes tiled from the source (downstream stages still see
-    fixed-size payloads and the 1:1 row contract).
-
-    Scale: mapInPandas, batch-streamed; output size is bounded
-    (~w*h*channels bytes/row) regardless of input payload size — the
-    shrink happens inside the task, nothing oversized is shuffled."""
-    from clinvar_pipeline_spark.functions import png as _codec
-
-    target = out_width * out_height
-
-    def one(raw: bytes) -> tuple[bytes, str]:
-        raw = raw or b"\0"
-        if _HAS_PIL:  # pragma: no cover - PIL absent in this container
-            import io
-
-            from PIL import Image
-
-            try:
-                with Image.open(io.BytesIO(raw)) as im:
-                    buf = io.BytesIO()
-                    im.resize((out_width, out_height)).save(buf, "PNG")
-                    return buf.getvalue(), TIER_PIL
-            except Exception:
-                pass  # tier 2 below still gets its chance
-        decoded = _decode_pixels(raw)
-        if decoded is not None:
-            w, h, ch, px = decoded
-            rs = _codec.resize_nearest(w, h, ch, px, out_width, out_height)
-            return _codec.png_encode(out_width, out_height, ch, rs), TIER_PURE
-        return (raw * (target // max(len(raw), 1) + 1))[:target], TIER_FAKE
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            done = pdf["content"].map(one)
-            yield pd.DataFrame(
-                {
-                    "id": pdf["id"],
-                    "out_width": out_width,
-                    "out_height": out_height,
-                    "resized": done.map(lambda d: d[0]),
-                    "decode_tier": done.map(lambda d: d[1]),
-                }
-            )
-
-    return binaries.mapInPandas(kernel, RESIZE_SCHEMA)
-
-
-VIDEO_RESIZE_SCHEMA = (
-    "id long, out_width int, out_height int, n_frames int,"
-    " resized binary, decode_tier string"
-)
-
-
-def resize_video(
-    binaries: DataFrame, out_width: int = 32, out_height: int = 32
-) -> DataFrame:
-    """(id, content) -> (id, out_width, out_height, n_frames,
-    resized): the video-resize rung (thumbnails / training-res
-    normalization), completing decode -> features -> RESIZE ->
-    frame-sample for the video modality. Y4M payloads are REALLY
-    resized — every frame decodes to RGB (functions/y4m.py),
-    nearest-neighbor resamples (the image rung's resize_nearest
-    math), and the stream re-encodes as a spec-conformant Y4M at the
-    target dimensions with the ORIGINAL fps (4:4:4 output, so the
-    resize is the only loss beyond the YUV roundtrip) — ``resized``
-    is itself a decodable Y4M. Anything else falls to the
-    DETERMINISTIC FAKE tier: exactly out_w*out_h bytes tiled from
-    the source, n_frames 0 (the resize_images contract).
-
-    Scale: mapInPandas, 1:1 rows, output bounded by
-    frames x out_w x out_h x 3 regardless of input resolution — the
-    shrink happens inside the task."""
-    from clinvar_pipeline_spark.functions import png as _png
-    from clinvar_pipeline_spark.functions import y4m as _y4m
-
-    target = out_width * out_height
-
-    def one(raw: bytes) -> tuple[int, bytes, str]:
-        raw = bytes(raw or b"\0")
-        if raw.startswith(_y4m.Y4M_MAGIC):
-            try:
-                w, h, fn, fd, _chroma, n = _y4m.y4m_info(raw)
-                _w, _h, frames = _y4m.y4m_frames(raw)
-                rs = [
-                    _png.resize_nearest(
-                        w, h, 3, fr, out_width, out_height
-                    )
-                    for fr in frames
-                ]
-                return (
-                    n,
-                    _y4m.y4m_encode(
-                        out_width, out_height, rs, fps=(fn, fd),
-                        chroma="444",
-                    ),
-                    TIER_PURE,
-                )
-            except ValueError:
-                pass  # malformed stream -> fake tier, never a crash
-        return (
-            0,
-            (raw * (target // max(len(raw), 1) + 1))[:target],
-            TIER_FAKE,
-        )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            done = pdf["content"].map(one)
-            yield pd.DataFrame(
-                {
-                    "id": pdf["id"],
-                    "out_width": out_width,
-                    "out_height": out_height,
-                    "n_frames": done.map(lambda d: d[0]),
-                    "resized": done.map(lambda d: d[1]),
-                    "decode_tier": done.map(lambda d: d[2]),
-                }
-            )
-
-    return binaries.mapInPandas(kernel, VIDEO_RESIZE_SCHEMA)
-
-
-AUDIO_RESAMPLE_SCHEMA = (
-    "id long, out_rate int, n_samples int, resampled binary,"
-    " decode_tier string"
-)
-
-
-def resample_audio(binaries: DataFrame, out_rate: int = 16000) -> DataFrame:
-    """(id, content) -> (id, out_rate, n_samples, resampled): the
-    audio rate-normalization rung (the resize analogue for the audio
-    modality — every trainer wants one sample rate). RIFF/PCM WAV
-    payloads are REALLY resampled: nearest-sample pick at exact
-    integer indices (out sample i reads input sample
-    i * in_rate // out_rate — deterministic, engine-portable, no
-    float phase), preserving channels and bit width, re-encoded as a
-    decodable WAV at ``out_rate``; duration is preserved up to one
-    sample (n_out = n_in * out_rate // in_rate). Non-PCM payloads
-    fall to the DETERMINISTIC FAKE tier: 1024 bytes tiled from the
-    source, n_samples 0.
-
-    Nearest-pick (not windowed-sinc) is the honest tier here for the
-    same reason the image rung is nearest-neighbor: real resample
-    math with zero hidden dependencies; a proper low-pass resampler
-    would slot in as a higher tier.
-
-    Scale: mapInPandas, 1:1 rows, output bounded by
-    duration x out_rate x frame bytes."""
-    import struct as _struct
-
-    from clinvar_pipeline_spark.functions import wav as _wav
-
-    def one(raw: bytes) -> tuple[int, bytes, str]:
-        raw = bytes(raw or b"\0")
-        if raw.startswith(_wav.WAV_MAGIC):
-            try:
-                info = _wav.wav_info(raw)
-                in_rate = info["sample_rate"]
-                n_in = info["n_samples"]
-                frame = info["channels"] * info["bits"] // 8
-                n_out = n_in * out_rate // in_rate
-                data = raw[
-                    info["data_off"]: info["data_off"] + n_in * frame
-                ]
-                picks = b"".join(
-                    data[
-                        (i * in_rate // out_rate) * frame:
-                        (i * in_rate // out_rate) * frame + frame
-                    ]
-                    for i in range(n_out)
-                )
-                fmt = _struct.pack(
-                    "<HHIIHH", 1, info["channels"], out_rate,
-                    out_rate * frame, frame, info["bits"],
-                )
-                chunks = b"fmt " + _struct.pack("<I", len(fmt)) + fmt
-                chunks += b"data" + _struct.pack("<I", len(picks)) + picks
-                if len(picks) & 1:
-                    chunks += b"\x00"
-                out = (
-                    b"RIFF"
-                    + _struct.pack("<I", 4 + len(chunks))
-                    + b"WAVE"
-                    + chunks
-                )
-                return n_out, out, TIER_PURE
-            except ValueError:
-                pass  # malformed/non-PCM -> fake tier, never a crash
-        return 0, (raw * (1024 // max(len(raw), 1) + 1))[:1024], TIER_FAKE
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            done = pdf["content"].map(one)
-            yield pd.DataFrame(
-                {
-                    "id": pdf["id"],
-                    "out_rate": out_rate,
-                    "n_samples": done.map(lambda d: d[0]),
-                    "resampled": done.map(lambda d: d[1]),
-                    "decode_tier": done.map(lambda d: d[2]),
-                }
-            )
-
-    return binaries.mapInPandas(kernel, AUDIO_RESAMPLE_SCHEMA)
-
-
 FEATURE_SCHEMA = "id long, dim int, value double, feature_tier string"
 FEATURE_DIMS = 14  # [mean x3, std x3, 8-bin histogram]
 FEATURE_BINS = 8
@@ -913,7 +680,7 @@ def _audio_feature_slots(raw: bytes) -> list | None:
 def extract_image_features(binaries: DataFrame) -> DataFrame:
     """(id, content) -> FEATURE_DIMS rows of (id, dim, value,
     feature_tier): the feature-extraction rung of the multimodal
-    ladder (decode -> features -> resize -> frame-sample), a
+    ladder (decode -> features -> frame-sample), a
     fixed-width hand-crafted visual descriptor a curation pipeline
     can cluster / near-dup / outlier-screen like any embedding.
 

@@ -97,8 +97,8 @@ def _flagged_rows(
     # malformed. The reference flags hasBadRef for the first two and
     # RAISES on the deletion case; this plan deliberately drops all
     # three row classes instead of failing the 100 TB job on one
-    # corrupt record — the deviation is observable via
-    # ``clinvar2vcf_drop_counters`` (never silent).
+    # corrupt record — the deviation is observable via the drop
+    # counters clinvar2vcf_export returns (never silent).
     snv_mismatch = (
         (F.col("vt") == "single nucleotide variant")
         & F.col("_pad").isNotNull()
@@ -235,19 +235,6 @@ def assign_rs_from_xdb(variants: DataFrame, xdb_ids: DataFrame) -> DataFrame:
     ).drop("_rs_new")
 
 
-def clinvar2vcf_drop_counters(
-    variants: DataFrame,
-    map_positions: DataFrame,
-    db_snp: DataFrame | None = None,
-    ref_bases: DataFrame | None = None,
-) -> DataFrame:
-    """(counter, value) rows counting the bad-ref / ref-mismatch drops
-    the export applies — the observable twin of the reference's
-    hasBadRef flags and the Clinvar2Vcf.java:251 RuntimeException."""
-    flagged = _flagged_rows(variants, map_positions, db_snp, ref_bases)
-    return _drop_counters_of(flagged)
-
-
 def _drop_counters_of(flagged: DataFrame) -> DataFrame:
     return (
         flagged.filter(F.col("_drop_reason").isNotNull())
@@ -262,11 +249,19 @@ def clinvar2vcf_export(
     db_snp: DataFrame | None = None,
     ref_bases: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame]:
-    """(lines, drop_counters) sharing ONE persisted flagged-rows frame
-    — the CLI path. Calling clinvar2vcf_lines and
-    clinvar2vcf_drop_counters separately runs the join/check pipeline
-    twice; at production scale that is two full passes over the
-    variant-position join. The persist is registered with
+    """(lines, drop_counters) sharing ONE persisted flagged-rows frame,
+    so the join/check pipeline runs once for both outputs. ``lines``
+    holds (chr, pos, line) data lines ready for ``write_vcf``;
+    ``drop_counters`` holds (counter, value) rows counting the bad-ref
+    / ref-mismatch drops, the observable twin of the reference's
+    hasBadRef flags and the Clinvar2Vcf.java:251 RuntimeException.
+
+    ``variants`` needs (rgd_id, object_type, ref_nuc, var_nuc);
+    ``map_positions`` (rgd_id, map_key, chromosome, start_pos,
+    stop_pos); ``db_snp`` (chromosome, position, ref_allele, allele,
+    snp_name) optional rs-id source; ``ref_bases`` (chromosome,
+    position, base) optional reference-base table for the F18 check
+    and W6 padding. The persist is registered with
     caching.register_persist; the caller releases after both outputs
     materialize (cli.cmd_clinvar2vcf does)."""
     from clinvar_pipeline_spark.caching import register_persist
@@ -275,23 +270,6 @@ def clinvar2vcf_export(
         _flagged_rows(variants, map_positions, db_snp, ref_bases)
     )
     return _lines_of(flagged), _drop_counters_of(flagged)
-
-
-def clinvar2vcf_lines(
-    variants: DataFrame,
-    map_positions: DataFrame,
-    db_snp: DataFrame | None = None,
-    ref_bases: DataFrame | None = None,
-) -> DataFrame:
-    """(chr, pos, line) data lines ready for ``write_vcf``.
-
-    ``variants`` needs (rgd_id, object_type, ref_nuc, var_nuc);
-    ``map_positions`` (rgd_id, map_key, chromosome, start_pos,
-    stop_pos); ``db_snp`` (chromosome, position, ref_allele, allele,
-    snp_name) optional rs-id source; ``ref_bases`` (chromosome,
-    position, base) optional reference-base table for the F18 check
-    and W6 padding."""
-    return _lines_of(_flagged_rows(variants, map_positions, db_snp, ref_bases))
 
 
 def _lines_of(flagged: DataFrame) -> DataFrame:

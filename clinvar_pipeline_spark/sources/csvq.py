@@ -1,6 +1,5 @@
 """CSV source with a quarantine lane — the generic delimited-file
-front door next to the reference's TSV source (sources/tsv.py, S8)
-and the JSONL/WARC corpus ingests.
+front door next to the JSONL/WARC corpus ingests.
 
 Same discipline as sources/jsonl.py: schema ENFORCED (never inferred
 — inference is a second full scan at 100 TB), PERMISSIVE mode with

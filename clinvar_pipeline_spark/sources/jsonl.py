@@ -1,6 +1,5 @@
 """JSONL document source/sink — the interchange format pretraining
-corpora actually ship in (one JSON object per line), next to the
-reference's TSV source (sources/tsv.py, S8).
+corpora actually ship in (one JSON object per line).
 
 Read path: schema-enforced (never inferred — a 100 TB inference pass
 is a second full scan), PERMISSIVE mode with the corrupt-record

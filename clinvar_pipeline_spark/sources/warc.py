@@ -298,54 +298,6 @@ def read_warc(
     return records, counters
 
 
-def normalize_url(col) -> "F.Column":
-    """Canonical URL form for crawl-level dedup — the first dedup
-    every web-corpus pipeline runs (two crawls of one page should
-    collide BEFORE any content hashing): lowercase scheme+host, strip
-    the fragment, strip explicit default ports (:80 http / :443
-    https), strip one trailing slash from a non-root path, and treat
-    an empty path as '/'. Pure column expressions (JVM-side regexes,
-    no UDF), so the key computes inside the scan."""
-    u = F.trim(col)
-    u = F.regexp_replace(u, r"#.*$", "")  # fragment never reaches servers
-    # lowercase scheme://host (userinfo-free crawl URLs) — keep path
-    # case, which IS significant
-    u = F.concat(
-        F.lower(F.regexp_extract(u, r"^([^/]+//[^/]+)", 1)),
-        F.regexp_replace(u, r"^[^/]+//[^/]+", ""),
-    )
-    u = F.regexp_replace(u, r"^(http://[^/]*):80(/|$)", r"$1$2")
-    u = F.regexp_replace(u, r"^(https://[^/]*):443(/|$)", r"$1$2")
-    # one trailing slash off the path FIRST, then the root rule last —
-    # the other order would strip the '/' the root rule just added
-    u = F.regexp_replace(u, r"([^/])/$", r"$1")
-    u = F.when(
-        u.rlike(r"^[a-z]+://[^/]+$"), F.concat(u, F.lit("/"))
-    ).otherwise(u)
-    return u
-
-
-def url_dedup(records: DataFrame) -> DataFrame:
-    """Keep ONE record per normalized URL — the newest capture wins
-    (max WARC-Date, ties broken by record_id so the pick is total),
-    the CC-Net/RefinedWeb 'latest snapshot' convention. One
-    url-keyed min/max-struct aggregate + self-join-free semantics:
-    the winner is picked with a single groupBy carrying the full row
-    as a struct — no window over the corpus, no join back."""
-    key = normalize_url(F.col("url")).alias("url_norm")
-    withk = records.select(F.struct(*records.columns).alias("_r"), key)
-    picked = withk.groupBy("url_norm").agg(
-        F.max(
-            F.struct(
-                F.col("_r.warc_date").alias("d"),
-                F.col("_r.record_id").alias("i"),
-                F.col("_r").alias("r"),
-            )
-        ).alias("w")
-    )
-    return picked.select("url_norm", "w.r.*")
-
-
 def warc_documents(records: DataFrame) -> DataFrame:
     """Kept WARC records -> the corpus-prep ``documents`` shape
     (doc_id, text, lang, source, n_chars): doc_id is a deterministic

@@ -197,195 +197,6 @@ def asof_snapshot(spark, out_path: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------
-# TRUE streaming as-of: both sides live, watermark-correct
-# ---------------------------------------------------------------------
-
-_ASOF_STATE_SCHEMA = (
-    "v_ts array<bigint>, v_id array<bigint>, "
-    "p_ts array<bigint>, p_id array<bigint>"
-)
-
-
-def asof_live_stream(
-    events: DataFrame,
-    watermark_delay: str = "10 seconds",
-    by: str = "user_id",
-    on: str = "ts",
-    side_col: str = "event_type",
-    left_side: str = "purchase",
-    right_side: str = "view",
-    id_col: str = "event_id",
-) -> DataFrame:
-    """As-of join where BOTH sides arrive on the live stream (the
-    stream-stream case streaming/temporal.asof_stream deliberately
-    excludes): one keyed event log carries left rows (e.g. purchases)
-    and right rows (e.g. views), and each left row must match the
-    latest right row at-or-before its event time — including right
-    rows that arrive LATER in processing time (out-of-order delivery
-    up to the watermark delay).
-
-    This cannot be a per-batch map: a left row seen now may still
-    gain a better match from a not-yet-arrived right row. So it is a
-    custom stateful operator (applyInPandasWithState, event-time
-    timeout):
-
-    - per key, state buffers right rows and PENDING left rows as
-      four primitive bigint arrays (micros + ids — 32 bytes/row, no
-      payload: the id is the handle downstream re-joins on);
-    - a left row finalizes exactly when the watermark passes its
-      event time — at that point no right row at-or-before it can
-      still arrive, so emitting (left_id, matched right_id) is
-      CORRECT, not best-effort;
-    - right rows at-or-before the watermark compress to their
-      latest survivor (only the max-ts one can ever win for a future
-      left row, which must carry a later event time), so per-key
-      state is O(in-flight rows inside the watermark horizon), not
-      O(history);
-    - keys with pending left rows but no new arrivals flush via
-      EventTimeTimeout set to the earliest pending event time — the
-      watermark advancing is itself the flush signal, no poll loop.
-
-    Ties on (key, ts): the larger right id wins (a total order both
-    the live and batch formulations share; the batch asof_join's
-    input-order tie rule is not observable under retries, so the id
-    order is pinned here and in the test's batch twin).
-
-    Emits one row per FINALIZED left row: (left id, key, left micros,
-    matched right id or null, matched right micros or null). Rows
-    still inside the watermark horizon when the stream drains remain
-    pending — correct streaming behavior (they could still gain a
-    match); the nightly batch asof_join is the verdict of record for
-    the tail, the neardup_stream discipline."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    out_schema = (
-        f"{id_col} long, {by} long, ts_us long, "
-        "right_id long, right_ts_us long"
-    )
-
-    def _fn(key, pdfs, state: GroupState):
-        v_ts: list[int] = []
-        v_id: list[int] = []
-        p_ts: list[int] = []
-        p_id: list[int] = []
-        if state.exists:
-            sv_ts, sv_id, sp_ts, sp_id = state.get
-            v_ts, v_id = list(sv_ts), list(sv_id)
-            p_ts, p_id = list(sp_ts), list(sp_id)
-        for pdf in pdfs:
-            if pdf.empty:
-                continue
-            us = (pdf["_us"]).astype("int64")
-            ids = pdf[id_col].astype("int64")
-            sides = pdf[side_col]
-            for t, i, s in zip(us, ids, sides):
-                if s == right_side:
-                    v_ts.append(int(t))
-                    v_id.append(int(i))
-                elif s == left_side:
-                    p_ts.append(int(t))
-                    p_id.append(int(i))
-
-        wm_us = state.getCurrentWatermarkMs() * 1000
-
-        # finalize left rows the watermark has passed: the latest
-        # right row at-or-before each, larger id breaking ts ties
-        done_rows = []
-        keep_ts, keep_id = [], []
-        for t, i in zip(p_ts, p_id):
-            if t <= wm_us:
-                best = max(
-                    (
-                        (vt, vi)
-                        for vt, vi in zip(v_ts, v_id)
-                        if vt <= t
-                    ),
-                    default=None,
-                )
-                done_rows.append(
-                    (
-                        i,
-                        key[0],
-                        t,
-                        best[1] if best else None,
-                        best[0] if best else None,
-                    )
-                )
-            else:
-                keep_ts.append(t)
-                keep_id.append(i)
-
-        # compress right history: at-or-before the watermark only the
-        # latest (ts, id) survivor can ever win again
-        old = max(
-            ((vt, vi) for vt, vi in zip(v_ts, v_id) if vt <= wm_us),
-            default=None,
-        )
-        nv = [(vt, vi) for vt, vi in zip(v_ts, v_id) if vt > wm_us]
-        if old:
-            nv.append(old)
-        nv.sort()
-
-        if keep_ts or nv:
-            state.update(
-                (
-                    [t for t, _ in nv],
-                    [i for _, i in nv],
-                    keep_ts,
-                    keep_id,
-                )
-            )
-            if keep_ts:
-                # flush signal: the watermark passing the earliest
-                # pending left row must invoke this key again even
-                # with no new arrivals
-                state.setTimeoutTimestamp(min(keep_ts) // 1000 + 1)
-        else:
-            state.remove()
-
-        if done_rows:
-            yield pd.DataFrame(
-                {
-                    id_col: pd.array(
-                        [r[0] for r in done_rows], dtype="Int64"
-                    ),
-                    by: pd.array([r[1] for r in done_rows], dtype="Int64"),
-                    "ts_us": pd.array(
-                        [r[2] for r in done_rows], dtype="Int64"
-                    ),
-                    "right_id": pd.array(
-                        [r[3] for r in done_rows], dtype="Int64"
-                    ),
-                    "right_ts_us": pd.array(
-                        [r[4] for r in done_rows], dtype="Int64"
-                    ),
-                }
-            )
-
-    # the watermark is declared AFTER the side filter on purpose:
-    # only participating (left/right) rows define the join's event
-    # time. Declaring it before would not survive Catalyst anyway —
-    # the deterministic filter gets pushed below the watermark node,
-    # so batches of non-participating types would silently stop the
-    # clock (observed: timeouts never fired across a restart whose
-    # batches were all filtered out).
-    keyed = (
-        events.filter(F.col(side_col).isin(left_side, right_side))
-        .withWatermark(on, watermark_delay)
-        .withColumn("_us", F.unix_micros(F.col(on).cast("timestamp_ltz")))
-    )
-    return keyed.groupBy(by).applyInPandasWithState(
-        _fn,
-        outputStructType=out_schema,
-        stateStructType=_ASOF_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-
-
-# ---------------------------------------------------------------------
 # Native stream-stream interval join (both sides live)
 # ---------------------------------------------------------------------
 
@@ -399,12 +210,9 @@ def range_live_stream(
 ):
     """The click→purchase interval join with BOTH sides arriving live,
     as Spark's NATIVE stream-stream inner join — the built-in
-    Structured Streaming capability, complementing the custom
-    applyInPandasWithState tier (asof_live_stream): where the as-of
-    needed per-key ordered state no built-in join expresses, the
-    interval pair join is exactly what the engine's own join +
-    watermark machinery is for, so the engine does the state
-    management (buffering both sides, evicting rows the join-range
+    Structured Streaming capability: the interval pair join is exactly
+    what the engine's own join + watermark machinery is for, so the
+    engine does the state management (buffering both sides, evicting rows the join-range
     watermark proves unmatchable).
 
     The join condition is spelled as timestamp arithmetic

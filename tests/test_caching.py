@@ -5,6 +5,7 @@ registry call site hits on its second invocation in one session."""
 
 from __future__ import annotations
 
+import re
 import shutil
 from collections import Counter
 
@@ -111,3 +112,42 @@ def test_registry_memo_sites_hit_on_second_invocation(spark, tmp_path):
         # every tag this site uses is present, added now or by a sibling
         assert tags <= set(first), name
     assert set().union(*MEMO_SITES.values()) <= added
+
+
+def test_t_handle_lists_what_spark_reads_and_hits_until_a_rewrite(
+    spark, sf_dir, tmp_path
+):
+    """The `_t` read handle is keyed on caching._listing, which parses
+    Hadoop's FileStatus text (caching._STATUS): a listing that stopped
+    parsing, or one that held files Spark skips, would silently turn
+    every `_t` hit into a miss."""
+    from clinvar_pipeline_spark.queries import _t
+
+    def paths(files):
+        return sorted(re.sub(r"^file:/+", "/", f) for f in files)
+
+    # Spark-written and partitioned: part files, .crc sidecars,
+    # _SUCCESS and key=value directories
+    part = str(tmp_path / "part.parquet")
+    spark.range(40).withColumn("k", F.col("id") % 3).write.partitionBy("k").parquet(
+        part
+    )
+    listed = caching._listing(spark, part)
+    assert listed is not None
+    assert paths(r[0] for r in listed) == paths(spark.read.parquet(part).inputFiles())
+
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    shutil.copy(f"{sf_dir}/orders.parquet", sf / "orders.parquet")
+    first = _t(spark, str(sf), "orders")
+    assert _t(spark, str(sf), "orders") is first
+    n = first.count()
+
+    # rewritten at the same path: a new handle that reads the new rows
+    five = str(tmp_path / "five.parquet")
+    spark.read.parquet(str(sf / "orders.parquet")).limit(5).write.parquet(five)
+    (sf / "orders.parquet").unlink()
+    shutil.move(five, sf / "orders.parquet")
+    fresh = _t(spark, str(sf), "orders")
+    assert fresh is not first
+    assert fresh.count() == 5 < n

@@ -366,7 +366,8 @@ def test_media_features_frame_tier_matches_numpy(spark):
     numpy computed on the frames y4m_frames itself decodes (the
     YUV roundtrip is lossy, so the pin is against the decoded RGB,
     an independent slot computation)."""
-    from clinvar_pipeline_spark.functions.y4m import y4m_encode, y4m_frames
+    from clinvar_pipeline_spark.functions.codec_oracle import y4m_encode
+    from clinvar_pipeline_spark.functions.y4m import y4m_frames
     from clinvar_pipeline_spark.operators.multimodal import (
         FEATURE_DIMS,
         FEATURE_FRAME_SAMPLE,
@@ -407,7 +408,7 @@ def test_media_features_pcm_tier_matches_numpy(spark):
     zero-crossing slots must match numpy on the known sample values
     (16-bit mono and 8-bit stereo both pinned — the stereo path
     averages to mono before the stats)."""
-    from clinvar_pipeline_spark.functions.wav import wav_encode
+    from clinvar_pipeline_spark.functions.codec_oracle import wav_encode
     from clinvar_pipeline_spark.operators.multimodal import (
         FEATURE_DIMS,
         FEATURE_PCM_WINDOWS,
@@ -457,9 +458,8 @@ def test_media_features_ladder_dispatch_and_curation_contract(spark):
     the resulting vectors per tier — flagging the planted outlier,
     passing the consistent members — which is the 'curation screens
     accept the new tiers' contract."""
+    from clinvar_pipeline_spark.functions.codec_oracle import wav_encode, y4m_encode
     from clinvar_pipeline_spark.functions.png import png_encode
-    from clinvar_pipeline_spark.functions.wav import wav_encode
-    from clinvar_pipeline_spark.functions.y4m import y4m_encode
     from clinvar_pipeline_spark.operators.multimodal import (
         extract_media_features,
     )
@@ -567,7 +567,8 @@ def test_media_features_animated_gif_frame_tier(spark):
     slots over strided composited canvas states (numpy-pinned on the
     states gif_frames itself composites), while a single-frame GIF
     stays on the pixel tier like any still image."""
-    from clinvar_pipeline_spark.functions.gif import gif_encode, gif_frames
+    from clinvar_pipeline_spark.functions.codec_oracle import gif_encode
+    from clinvar_pipeline_spark.functions.gif import gif_frames
     from clinvar_pipeline_spark.operators.multimodal import (
         FEATURE_DIMS,
         FEATURE_FRAME_SAMPLE,

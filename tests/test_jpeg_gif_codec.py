@@ -2,23 +2,20 @@
 (functions/gif.py): round trips, handcrafted known-bytes streams
 (so a shared encoder/decoder transform bug cannot cancel), malformed
 input boundaries, and the multimodal-ladder integration that makes
-JPEG/GIF payloads first-class in resize/frame-sampling."""
+JPEG/GIF payloads first-class in frame sampling."""
 
 import struct
 
 import numpy as np
 import pytest
 
+from clinvar_pipeline_spark.functions.codec_oracle import gif_encode, jpeg_encode
 from clinvar_pipeline_spark.functions.gif import (
     _lzw_decode,
     gif_decode,
-    gif_encode,
     gif_frames,
 )
-from clinvar_pipeline_spark.functions.jpeg import (
-    jpeg_decode,
-    jpeg_encode,
-)
+from clinvar_pipeline_spark.functions.jpeg import jpeg_decode
 from clinvar_pipeline_spark.functions.png import gif_info, jpeg_info, png_decode
 
 
@@ -210,7 +207,7 @@ def test_gif_partial_frame_overlays_previous_canvas():
     """Hand-built animation: full 4x4 frame of index 50, then a 2x2
     frame of index 200 at offset (1,1) — the composited second state
     keeps 50 outside the sub-rectangle (disposal 1 = leave in place)."""
-    from clinvar_pipeline_spark.functions.gif import _lzw_encode_literals
+    from clinvar_pipeline_spark.functions.codec_oracle import _lzw_encode_literals
 
     w, h = 4, 4
     out = bytearray(b"GIF89a")
@@ -244,7 +241,7 @@ def test_gif_partial_frame_overlays_previous_canvas():
 
 
 def test_gif_transparency_keeps_previous_pixels():
-    from clinvar_pipeline_spark.functions.gif import _lzw_encode_literals
+    from clinvar_pipeline_spark.functions.codec_oracle import _lzw_encode_literals
 
     w, h = 3, 1
     out = bytearray(b"GIF89a")
@@ -299,24 +296,6 @@ def test_gif_malformed_raises_valueerror_only():
 # ---------------------------------------------------------------------------
 
 
-def test_resize_ladder_covers_jpeg_and_gif(spark):
-    from clinvar_pipeline_spark.operators.multimodal import resize_images
-
-    img = _gradient_rgb(20, 12)
-    jpg = jpeg_encode(20, 12, 3, img.tobytes())
-    gif = gif_encode(5, 5, [bytes(range(25))])
-    df = spark.createDataFrame(
-        [(1, jpg), (2, gif), (3, b"not an image")], "id long, content binary"
-    )
-    rows = {r["id"]: r for r in resize_images(df, 8, 6).collect()}
-    assert rows[1]["decode_tier"] == "pure"
-    assert rows[2]["decode_tier"] == "pure"
-    assert rows[3]["decode_tier"] == "fake"
-    for i in (1, 2):
-        w, h, ch, _px = png_decode(bytes(rows[i]["resized"]))
-        assert (w, h) == (8, 6)  # resized payload is a real PNG
-
-
 def test_sample_frames_animated_gif_temporal(spark):
     from clinvar_pipeline_spark.operators.multimodal import sample_frames
 
@@ -356,10 +335,8 @@ def test_gif_disposal2_local_table_uses_global_background():
     frame."""
     import struct as _s
 
-    from clinvar_pipeline_spark.functions.gif import (
-        _lzw_encode_literals,
-        gif_frames,
-    )
+    from clinvar_pipeline_spark.functions.codec_oracle import _lzw_encode_literals
+    from clinvar_pipeline_spark.functions.gif import gif_frames
 
     w = h = 2
     # global table: 4 entries, background index 3 = blue

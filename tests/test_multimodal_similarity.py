@@ -316,24 +316,6 @@ def test_ivf_tiny_corpus_fewer_cells_than_probes(spark):
     assert out.count() > 0
 
 
-def test_resize_images_contract(spark, docs):
-    from clinvar_pipeline_spark.operators.multimodal import (
-        attach_binary,
-        resize_images,
-    )
-
-    out = resize_images(attach_binary(docs, "doc_id", "text"), 8, 4).collect()
-    assert len(out) == docs.count()  # 1:1 row contract
-    for r in out:
-        assert r["out_width"] == 8 and r["out_height"] == 4
-        assert len(r["resized"]) == 32  # fixed-size payload
-    # deterministic
-    again = resize_images(attach_binary(docs, "doc_id", "text"), 8, 4).collect()
-    assert {(r["id"], bytes(r["resized"])) for r in out} == {
-        (r["id"], bytes(r["resized"])) for r in again
-    }
-
-
 def test_pq_subspaces_for_dim():
     """The CLI's adaptive PQ split: largest divisor of dim <= 8, so
     any corpus dim trains a valid codebook (a dim-4 fixture crashed

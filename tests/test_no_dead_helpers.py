@@ -1,11 +1,23 @@
-"""Every undecorated top-level function or class in the package has a
-caller: a reference from the package, the tests, the tools, the
-benchmark or bench.py, outside its own definition.
+"""Every top-level function or class in the package is reached from the
+product: a registry query, the CLI, a tool or the benchmark. A test is
+not a caller.
 
-A helper reached only from other unreferenced helpers counts as
-unreferenced too, so deleting a function surfaces the helpers that only
-it used. Registry queries carry ``@register`` and are exempt. Pure
-``ast``: nothing is imported."""
+Roots of the walk:
+
+- every ``@register`` registry query;
+- module-level statements of package modules (``__main__.py`` calls
+  the CLI, dispatch tables, constants); imports count only in an
+  ``__init__.py``, where they declare the package surface;
+- all of ``tools/``, ``perfbench/`` (its own tests excepted),
+  ``bench.py`` and ``__spark_entry__.py``.
+
+A name used by reached code reaches every top-level package definition
+of that name, and their bodies are walked in turn. The walk is by name,
+not by import resolution, so it over-approximates. A definition the
+walk never reaches fails the check unless it lives in an
+``*_oracle.py`` module: those hold the references and fixture encoders
+that tests compare product code with. Pure ``ast``: nothing is
+imported."""
 
 from __future__ import annotations
 
@@ -14,8 +26,10 @@ from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
 PACKAGE = ROOT / "clinvar_pipeline_spark"
-CALLER_DIRS = (PACKAGE, ROOT / "tests", ROOT / "tools", ROOT / "perfbench")
+CALLER_DIRS = (ROOT / "tools", ROOT / "perfbench")
+CALLER_FILES = (ROOT / "bench.py", ROOT / "__spark_entry__.py")
 DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+IMPORTS = (ast.Import, ast.ImportFrom)
 
 
 def _names(node: ast.AST):
@@ -28,31 +42,55 @@ def _names(node: ast.AST):
             yield n.name.rsplit(".", 1)[-1]
 
 
-def unreferenced_definitions() -> list[str]:
-    files = [p for d in CALLER_DIRS for p in sorted(d.rglob("*.py"))]
-    files.append(ROOT / "bench.py")
+def _is_query(top: ast.AST) -> bool:
+    return any(
+        isinstance(d, ast.Call) and getattr(d.func, "id", None) == "register"
+        for d in top.decorator_list
+    )
+
+
+def unreached_definitions() -> list[str]:
+    callers = [
+        p
+        for d in CALLER_DIRS
+        for p in sorted(d.rglob("*.py"))
+        if "tests" not in p.relative_to(d).parts
+    ]
+    roots: set[str] = set()
+    for path in [*callers, *CALLER_FILES]:
+        roots.update(_names(ast.parse(path.read_text(), str(path))))
+
+    bodies: dict[str, list[ast.AST]] = {}
     candidates: dict[tuple[Path, str], int] = {}
-    refs: list[tuple[tuple[Path, str] | None, str]] = []  # (enclosing def, name)
-    for path in files:
+    for path in sorted(PACKAGE.rglob("*.py")):
         for top in ast.parse(path.read_text(), str(path)).body:
-            owner = (path, top.name) if isinstance(top, DEFS) else None
-            if owner and PACKAGE in path.parents and not top.decorator_list:
-                candidates[owner] = top.lineno
-            refs.extend((owner, name) for name in _names(top))
-    dead: set[tuple[Path, str]] = set()
-    while True:
-        users: dict[str, set] = {}
-        for owner, name in refs:
-            if owner not in dead:
-                users.setdefault(name, set()).add(owner)
-        now = {d for d in candidates if not users.get(d[1], set()) - {d}}
-        if now == dead:
-            return sorted(
-                f"{p.relative_to(ROOT)}:{candidates[(p, n)]} {n}" for p, n in dead
-            )
-        dead = now
+            if isinstance(top, DEFS):
+                bodies.setdefault(top.name, []).append(top)
+                if _is_query(top):
+                    roots.update(_names(top))
+                elif not path.name.endswith("_oracle.py"):
+                    candidates[(path, top.name)] = top.lineno
+            elif path.name == "__init__.py" or not isinstance(top, IMPORTS):
+                roots.update(_names(top))
+
+    reached: set[str] = set()
+    todo = list(roots)
+    while todo:
+        name = todo.pop()
+        if name not in reached:
+            reached.add(name)
+            for top in bodies.get(name, ()):
+                todo.extend(_names(top))
+    return sorted(
+        f"{p.relative_to(ROOT)}:{line} {n}"
+        for (p, n), line in candidates.items()
+        if n not in reached
+    )
 
 
 def test_every_package_helper_has_a_caller():
-    dead = unreferenced_definitions()
-    assert not dead, "referenced only at their own definition:\n" + "\n".join(dead)
+    unreached = unreached_definitions()
+    assert not unreached, (
+        "reached only from tests (delete it, or move a test reference "
+        "into an *_oracle.py module):\n" + "\n".join(unreached)
+    )

@@ -15,7 +15,6 @@ from clinvar_pipeline_spark.functions.png import (
     png_decode,
     png_encode,
     png_info,
-    resize_nearest,
 )
 
 
@@ -124,17 +123,6 @@ def test_png_palette_expansion():
     w, h, ch, px = png_decode(raw)
     assert (w, h, ch) == (2, 2, 3)
     assert px == bytes([255, 0, 0, 0, 255, 0, 0, 0, 255, 9, 9, 9])
-
-
-def test_resize_nearest_downsample():
-    # 4x4 -> 2x2 picks pixels (0,0),(2,0),(0,2),(2,2)
-    px = _gradient(4, 4, 3)
-    out = resize_nearest(4, 4, 3, px, 2, 2)
-
-    def pick(x, y):
-        return px[(y * 4 + x) * 3 : (y * 4 + x) * 3 + 3]
-
-    assert out == pick(0, 0) + pick(2, 0) + pick(0, 2) + pick(2, 2)
 
 
 def test_jpeg_header_parse():
@@ -320,11 +308,8 @@ def test_palette_out_of_range_raises():
 
 def test_operators_survive_malformed_image_bytes(spark):
     # end-to-end: truncated GIF/JPEG prefixes and a corrupt PNG flow
-    # through both operators into the fake tier, never a task crash
-    from clinvar_pipeline_spark.operators.multimodal import (
-        extract_image_meta,
-        resize_images,
-    )
+    # through the operator into the fake tier, never a task crash
+    from clinvar_pipeline_spark.operators.multimodal import extract_image_meta
 
     corrupt_png = bytearray(png_encode(4, 4, 3, _gradient(4, 4, 3)))
     corrupt_png[20] ^= 0xFF
@@ -338,8 +323,6 @@ def test_operators_survive_malformed_image_bytes(spark):
     )
     meta = {r["id"]: r["format"] for r in extract_image_meta(df).collect()}
     assert all(fmt.startswith("fake/") for fmt in meta.values()), meta
-    out = resize_images(df, out_width=3, out_height=3).collect()
-    assert all(len(r["resized"]) == 9 for r in out)  # fake tier payload
 
 
 def test_band_bucket_kernel_rejects_degenerate_banding():
@@ -363,14 +346,10 @@ def test_extract_image_meta_real_png(spark):
 
 
 def test_decode_tier_observability(spark):
-    # the tier column + counter frame report how much of a corpus
-    # decoded for real: PNG/JPEG/GIF -> 'pure' (stdlib codecs), text
-    # bytes -> 'fake'; PIL would report 'pil' where installed
-    from clinvar_pipeline_spark.operators.multimodal import (
-        decode_tier_counters,
-        extract_image_meta,
-        resize_images,
-    )
+    # the tier column reports how much of a corpus decoded for real:
+    # PNG/JPEG/GIF -> 'pure' (stdlib codecs), text bytes -> 'fake';
+    # PIL would report 'pil' where installed
+    from clinvar_pipeline_spark.operators.multimodal import extract_image_meta
 
     png = png_encode(5, 4, 3, _gradient(5, 4, 3))
     jpeg = (
@@ -382,13 +361,14 @@ def test_decode_tier_observability(spark):
         [(1, png), (2, jpeg), (3, gif), (4, b"plain text")],
         "id long, content binary",
     )
-    tiers = {r["id"]: r["decode_tier"] for r in extract_image_meta(df).collect()}
+    meta = extract_image_meta(df)
+    tiers = {r["id"]: r["decode_tier"] for r in meta.collect()}
     assert tiers == {1: "pure", 2: "pure", 3: "pure", 4: "fake"}, tiers
-    counts = {r["decode_tier"]: r["n"] for r in decode_tier_counters(df).collect()}
+    counts = {
+        r["decode_tier"]: r["count"]
+        for r in meta.groupBy("decode_tier").count().collect()
+    }
     assert counts == {"pure": 3, "fake": 1}, counts
-    # resize reports its own tier: only PNG has a pixel decode path
-    rtiers = {r["id"]: r["decode_tier"] for r in resize_images(df, 3, 3).collect()}
-    assert rtiers == {1: "pure", 2: "fake", 3: "fake", 4: "fake"}, rtiers
 
 
 def test_sample_frames_real_png_pixel_regions(spark):
@@ -427,19 +407,3 @@ def test_sample_frames_png_shorter_than_n_frames(spark):
     for r in rows:
         fw, fh, _fch, _fpx = png_decode(bytes(r["frame_bytes"]))
         assert (fw, fh) == (4, 1)
-
-
-def test_resize_images_real_png_roundtrip(spark):
-    from clinvar_pipeline_spark.operators.multimodal import (
-        attach_binary,
-        resize_images,
-    )
-
-    px = _gradient(8, 8, 3)
-    png = png_encode(8, 8, 3, px)
-    df = spark.createDataFrame([(1, png)], "id long, content binary")
-    out = resize_images(df, out_width=4, out_height=4).collect()[0]
-    # the resized payload is itself a real, decodable PNG
-    w, h, ch, rs = png_decode(bytes(out["resized"]))
-    assert (w, h, ch) == (4, 4, 3)
-    assert rs == resize_nearest(8, 8, 3, px, 4, 4)

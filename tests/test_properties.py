@@ -17,12 +17,8 @@ from clinvar_pipeline_spark.functions.sets import (
     merge_pipe_sets,
     merge_pipe_sets_ci,
 )
-from clinvar_pipeline_spark.functions.text import (
-    byte_trim,
-    byte_trim_py,
-    pack_py,
-    pack_width_buckets,
-)
+from clinvar_pipeline_spark.functions.text import byte_trim, pack_width_buckets
+from clinvar_pipeline_spark.functions.text_oracle import byte_trim_py, pack_py
 from clinvar_pipeline_spark.operators.diff_sync import apply_diff, diff_sync
 
 # ---------------------------------------------------------------------

@@ -1,23 +1,8 @@
-"""Tests for the TSV concept-map source (S8) and VCF sink (S9)."""
+"""Tests for the VCF sink (S9)."""
 
 import glob
 
-from clinvar_pipeline_spark.sources.tsv import read_concept_to_omim
 from clinvar_pipeline_spark.sources.vcf_sink import VCF_HEADER, vcf_text, write_vcf
-
-
-def test_concept_to_omim_tsv(spark, tmp_path):
-    p = tmp_path / "gene_condition_source_id"
-    p.write_text(
-        "#GeneID\tGeneSymbol\tConceptID\tDiseaseName\tSourceName\tSourceID\tDiseaseMIM\tLastUpdated\n"
-        "9907\tAP5Z1\tC3150901\tHereditary spastic paraplegia 48\tOMIM\t613647\t613647\t2020-01-01\n"
-        "1111\tGENE2\tC0000001\tNo mim here\tOrphanet\tORPHA99\t\t2020-01-01\n"
-        "2222\tGENE3\tC0000002\tAnother\tOMIM\t600001\t600001\t2021-02-02\n"
-    )
-    df = read_concept_to_omim(spark, str(p))
-    rows = sorted((r["gene_id"], r["disease_mim"]) for r in df.collect())
-    # comment line skipped; empty-MIM row filtered
-    assert rows == [("2222", "600001"), ("9907", "613647")]
 
 
 def test_write_vcf_single_sorted_file(spark, tmp_path):

@@ -429,7 +429,7 @@ def test_media_features_stream_equals_batch(spark, tmp_path):
     drained over two micro-batches must be byte-identical to the
     batch kernel on the union — including a real decodable payload
     so a media tier (not just byte) rides the stream."""
-    from clinvar_pipeline_spark.functions.wav import wav_encode
+    from clinvar_pipeline_spark.functions.codec_oracle import wav_encode
     from clinvar_pipeline_spark.operators.multimodal import (
         attach_binary,
         extract_media_features,

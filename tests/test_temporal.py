@@ -234,75 +234,6 @@ def test_asof_stream_equals_batch_on_two_batch_drop(spark, tmp_path):
     assert got[2][0] is None and got[4][0] is None  # no prior view
 
 
-def test_asof_live_stream_watermark_correct(spark, tmp_path):
-    """Both sides live: a purchase must wait for the watermark before
-    finalizing, so a LATE view (arriving one micro-batch after the
-    purchase, with an earlier event time) still wins the match; a
-    pending purchase for a key with no further arrivals flushes via
-    EventTimeTimeout; a purchase still inside the watermark horizon
-    at drain stays pending (not emitted)."""
-    from clinvar_pipeline_spark.streaming.temporal import asof_live_stream
-
-    schema = "event_id long, user_id long, ts timestamp, event_type string"
-    batches = [
-        # batch 1: user 10 views then purchases; user 20 purchases
-        # with no view history
-        [
-            (901, 10, _ts(100.0), "view"),
-            (1, 10, _ts(200.0), "purchase"),
-            (2, 20, _ts(150.0), "purchase"),
-        ],
-        # batch 2: the LATE view (event time 195 < purchase 1's 200,
-        # allowed: watermark is 190) plus a later view that only
-        # advances the watermark (views after a purchase are never
-        # eligible matches for it)
-        [
-            (902, 10, _ts(195.0), "view"),
-            (777, 10, _ts(300.0), "view"),
-        ],
-        # batch 3: advance the watermark past 200 -> purchase 1
-        # finalizes; purchase 3 arrives inside the horizon and must
-        # stay pending
-        [
-            (778, 10, _ts(400.0), "view"),
-            (3, 10, _ts(400.0), "purchase"),
-        ],
-    ]
-    drop = tmp_path / "events"
-    for rows in batches:
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(str(drop))
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(drop))
-    )
-    out = asof_live_stream(stream, watermark_delay="10 seconds")
-    q = (
-        out.writeStream.format("parquet")
-        .option("path", str(tmp_path / "attributed"))
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-
-    got = {
-        r["event_id"]: r
-        for r in spark.read.parquet(str(tmp_path / "attributed")).collect()
-    }
-    # purchase 1: the late view 902 (t=195) beats the early 901
-    assert set(got) == {1, 2}
-    assert got[1]["right_id"] == 902
-    assert got[1]["right_ts_us"] == got[1]["ts_us"] - 5_000_000
-    # purchase 2: flushed by EventTimeTimeout, no view -> nulls
-    assert got[2]["right_id"] is None and got[2]["right_ts_us"] is None
-    # purchase 3: still inside the watermark horizon -> pending
-    assert 3 not in got
-
-
 # ---------------------------------------------------------------------
 # Property tests: random schedules vs pandas / brute force
 # ---------------------------------------------------------------------
@@ -390,71 +321,6 @@ def test_range_join_property_matches_brute_force(
         if u == u2 and lo < (s2 - s) * 1_000_000 <= hi
     }
     assert got == exp
-
-
-def test_asof_live_stream_state_survives_restart(spark, tmp_path):
-    """Cross-RUN state round-trip: run 1 drains batch 1 (purchase
-    still pending inside the watermark horizon, view buffered in
-    state); the stream STOPS; file 2 lands; run 2 reuses the same
-    checkpoint — the restored state must finalize the run-1 purchase
-    against the run-1 view it never saw emitted. This is the state
-    store surviving a restart, not one run's in-memory state."""
-    from clinvar_pipeline_spark.streaming.temporal import asof_live_stream
-
-    schema = "event_id long, user_id long, ts timestamp, event_type string"
-    drop = tmp_path / "events"
-
-    def run():
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(drop))
-        )
-        q = (
-            asof_live_stream(stream, watermark_delay="10 seconds")
-            .writeStream.format("parquet")
-            .option("path", str(tmp_path / "attributed"))
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-
-    spark.createDataFrame(
-        [(901, 10, _ts(100.0), "view"), (1, 10, _ts(200.0), "purchase")],
-        schema,
-    ).coalesce(1).write.mode("append").parquet(str(drop))
-    run()
-    # nothing finalized yet: watermark after run 1 is 190 < 200
-    import os
-
-    landed = [
-        f
-        for f in os.listdir(tmp_path / "attributed")
-        if f.endswith(".parquet")
-    ] if (tmp_path / "attributed").exists() else []
-    before = (
-        spark.read.parquet(str(tmp_path / "attributed")).count()
-        if landed
-        else 0
-    )
-    assert before == 0
-
-    # two more files: run 2 processes them as two micro-batches, so
-    # the watermark (restored at 190 from run 1's checkpoint) advances
-    # past the pending purchase between them and the RESTORED state
-    # finalizes it
-    for eid, t in ((777, 400.0), (778, 500.0)):
-        spark.createDataFrame(
-            [(eid, 10, _ts(t), "view")], schema
-        ).coalesce(1).write.mode("append").parquet(str(drop))
-    run()
-    got = {
-        r["event_id"]: r
-        for r in spark.read.parquet(str(tmp_path / "attributed")).collect()
-    }
-    assert set(got) == {1}
-    assert got[1]["right_id"] == 901  # matched from RESTORED state
 
 
 def test_asof_carries_whole_rows_not_stitched_fields(spark):

@@ -7,11 +7,10 @@ from pyspark.sql import functions as F
 
 from clinvar_pipeline_spark.functions.text import (
     byte_trim,
-    byte_trim_py,
     normalize_term_key,
-    pack_py,
     pack_width_buckets,
 )
+from clinvar_pipeline_spark.functions.text_oracle import byte_trim_py, pack_py
 
 
 def one(spark, expr):

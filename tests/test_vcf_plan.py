@@ -5,10 +5,8 @@ guard (F17), line render."""
 import pytest
 from pyspark.sql import functions as F
 
-from clinvar_pipeline_spark.plans.vcf import (
-    clinvar2vcf_drop_counters,
-    clinvar2vcf_lines,
-)
+from clinvar_pipeline_spark.caching import release_cached
+from clinvar_pipeline_spark.plans.vcf import clinvar2vcf_export
 
 
 @pytest.fixture(scope="module")
@@ -71,18 +69,27 @@ def vcf_inputs(spark):
 
 
 @pytest.fixture(scope="module")
-def lines(vcf_inputs):
-    df = clinvar2vcf_lines(*vcf_inputs)
-    return {(r["chr"], r["pos"], r["line"]) for r in df.collect()}
+def export(vcf_inputs):
+    # both outputs of the CLI's export, collected before the shared
+    # flagged-rows persist is released (as cmd_clinvar2vcf does)
+    lines_df, counters_df = clinvar2vcf_export(*vcf_inputs)
+    try:
+        lines = {(r["chr"], r["pos"], r["line"]) for r in lines_df.collect()}
+        counters = {r["counter"]: r["value"] for r in counters_df.collect()}
+    finally:
+        release_cached()
+    return lines, counters
 
 
-def test_drop_counters_observable(vcf_inputs):
+@pytest.fixture(scope="module")
+def lines(export):
+    return export[0]
+
+
+def test_drop_counters_observable(export):
     # the three deliberate-drop classes (F18 mismatch, bad-ref ins/del)
     # are counted, never silent: variants 3, 7, 9 in the fixture
-    counters = {
-        r["counter"]: r["value"]
-        for r in clinvar2vcf_drop_counters(*vcf_inputs).collect()
-    }
+    counters = export[1]
     assert counters == {
         "SNV_REF_MISMATCH": 1,
         "INSERTION_BAD_REF": 1,

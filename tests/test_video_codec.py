@@ -11,11 +11,8 @@ import pytest
 
 from clinvar_pipeline_spark.functions import png as pngc
 from clinvar_pipeline_spark.functions.mp4 import mp4_info
-from clinvar_pipeline_spark.functions.y4m import (
-    y4m_encode,
-    y4m_frames,
-    y4m_info,
-)
+from clinvar_pipeline_spark.functions.codec_oracle import y4m_encode
+from clinvar_pipeline_spark.functions.y4m import y4m_frames, y4m_info
 from clinvar_pipeline_spark.operators.multimodal import (
     attach_binary,
     extract_video_meta,
@@ -241,45 +238,3 @@ def test_mp4_tkhd_dims_surface():
     m = mp4_info(raw)
     assert (m["width"], m["height"]) == (640, 360)
     assert "width" not in mp4_info(_minimal_mp4())
-
-
-def test_resize_video_real_y4m_and_fake_tier(spark):
-    """The video-resize rung: output is itself a decodable Y4M at the
-    target dims with the original fps and frame count; pixels match
-    the image rung's nearest-neighbor math on the decoded input
-    (within one extra YUV roundtrip); non-video bytes tile to the
-    fake tier."""
-    import numpy as np
-
-    from clinvar_pipeline_spark.functions.png import resize_nearest
-    from clinvar_pipeline_spark.functions.y4m import y4m_frames, y4m_info
-    from clinvar_pipeline_spark.operators.multimodal import resize_video
-
-    w, h = 6, 4
-    frames = [
-        bytes(((13 * i + 31 * f) % 256) for i in range(w * h * 3))
-        for f in range(2)
-    ]
-    raw = y4m_encode(w, h, frames, fps=(12, 1))
-    df = spark.createDataFrame(
-        [(1, bytearray(raw)), (2, bytearray(b"not video"))],
-        "id long, content binary",
-    )
-    rows = {r["id"]: r for r in resize_video(df, 3, 2).collect()}
-
-    r = rows[1]
-    assert (r["decode_tier"], r["n_frames"]) == ("pure", 2)
-    ow, oh, fn, fd, _c, n = y4m_info(bytes(r["resized"]))
-    assert (ow, oh, fn, fd, n) == (3, 2, 12, 1, 2)
-    _w, _h, out_frames = y4m_frames(bytes(r["resized"]))
-    _w, _h, in_frames = y4m_frames(raw)  # post-roundtrip input pixels
-    for fi in range(2):
-        want = np.frombuffer(
-            resize_nearest(w, h, 3, in_frames[fi], 3, 2), dtype=np.uint8
-        ).astype(int)
-        got = np.frombuffer(out_frames[fi], dtype=np.uint8).astype(int)
-        assert np.abs(got - want).max() <= 4  # one extra YUV roundtrip
-
-    f = rows[2]
-    assert f["decode_tier"] == "fake"
-    assert len(f["resized"]) == 3 * 2 and f["n_frames"] == 0

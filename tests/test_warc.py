@@ -129,55 +129,6 @@ def test_read_warc_rows_counters_and_documents(spark, tmp_path):
     release_cached()
 
 
-def test_normalize_url_and_url_dedup(spark):
-    """URL canonicalization (JVM-side expressions, no UDF) and the
-    newest-capture-wins URL dedup — the crawl pipeline's first dedup,
-    run before any content hashing."""
-    from pyspark.sql import functions as F
-
-    from clinvar_pipeline_spark.sources.warc import normalize_url, url_dedup
-
-    cases = {
-        "HTTP://Example.COM/Path/": "http://example.com/Path",
-        "http://example.com:80/a": "http://example.com/a",
-        "https://example.com:443/a#frag": "https://example.com/a",
-        "https://example.com": "https://example.com/",
-        "https://example.com/": "https://example.com/",
-        "http://example.com:8080/a": "http://example.com:8080/a",
-        "http://example.com/A/B#x": "http://example.com/A/B",
-    }
-    got = (
-        spark.createDataFrame([(k,) for k in cases], "u string")
-        .select("u", normalize_url(F.col("u")).alias("n"))
-        .collect()
-    )
-    for r in got:
-        assert r["n"] == cases[r["u"]], r["u"]
-
-    rows = [
-        ("a", "HTTP://X.example/p/", "2024-01-01T00:00:00Z", "old"),
-        ("b", "http://x.example/p", "2024-02-01T00:00:00Z", "new"),
-        ("c", "http://x.example/q", "2024-01-01T00:00:00Z", "only"),
-        # same url, same date: record_id breaks the tie totally
-        ("d", "http://y.example/", "2024-01-01T00:00:00Z", "tie-d"),
-        ("e", "http://y.example", "2024-01-01T00:00:00Z", "tie-e"),
-    ]
-    df = spark.createDataFrame(
-        rows, "record_id string, url string, warc_date string, text string"
-    )
-    out = {r["url_norm"]: r for r in url_dedup(df).collect()}
-    assert len(out) == 3
-    assert out["http://x.example/p"]["text"] == "new"  # newest capture
-    assert out["http://x.example/q"]["text"] == "only"
-    assert out["http://y.example/"]["record_id"] == "e"  # max id on tie
-    # deterministic across partitionings
-    out2 = {
-        r["url_norm"]: r["record_id"]
-        for r in url_dedup(df.repartition(5)).collect()
-    }
-    assert out2 == {k: v["record_id"] for k, v in out.items()}
-
-
 def test_truncated_gzip_tail_keeps_complete_members():
     """A .warc.gz whose FINAL gzip member is cut mid-stream (the
     canonical interrupted-download shape; pre-r9 this raised EOFError

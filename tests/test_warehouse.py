@@ -160,9 +160,13 @@ def test_zorder_prunes_both_dimensions(event_layouts):
     probes_t = times[:: max(1, len(times) // 7)][:7]
 
     def avg(stats, col, probes):
-        return sum(layout.files_containing(stats, col, p) for p in probes) / len(
-            probes
+        # files a point probe must scan under the min/max pruning rule
+        scanned = sum(
+            st[col][0] is None or st[col][0] <= p <= st[col][1]
+            for p in probes
+            for st in stats
         )
+        return scanned / len(probes)
 
     z_user, t_user = avg(zs, "user_id", probes_u), avg(ts, "user_id", probes_u)
     z_time, t_time = avg(zs, "ts", probes_t), avg(ts, "ts", probes_t)
@@ -261,189 +265,6 @@ def test_partitioned_write_dynamic_partition_pruning(spark, sf_dir, tmp_path):
 
 
 # ---------------------------------------------------------------------
-# Bucketed layout: exchange-free co-located join
-# ---------------------------------------------------------------------
-
-
-def test_bucketed_tables_join_without_exchange(spark, sf_dir, tmp_path):
-    """orders and lineitem bucketed 8-ways on the order key: the join
-    plan contains NO Exchange (the shuffle was paid once at write
-    time) while the unbucketed plan shuffles both sides; results match
-    the plain join."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
-        "o_orderkey", "o_totalprice"
-    )
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
-        "l_orderkey", "l_quantity"
-    )
-    layout.bucketed_write(
-        orders, "t_orders_b", "o_orderkey", 8, str(tmp_path / "ob")
-    )
-    layout.bucketed_write(
-        li, "t_lineitem_b", "l_orderkey", 8, str(tmp_path / "lb")
-    )
-    try:
-        ob = spark.table("t_orders_b")
-        lb = spark.table("t_lineitem_b")
-        with_bcast_off = {"spark.sql.autoBroadcastJoinThreshold": "-1"}
-        old = {
-            k: spark.conf.get(k, None) for k in with_bcast_off
-        }
-        for k, v in with_bcast_off.items():
-            spark.conf.set(k, v)
-        try:
-            j = ob.join(lb, ob.o_orderkey == lb.l_orderkey)
-            plan = j._jdf.queryExecution().executedPlan().toString()
-            assert "SortMergeJoin" in plan
-            assert "Exchange" not in plan  # co-located: no shuffle at all
-            # strawman: the same join over the raw parquet shuffles
-            raw = orders.join(li, orders.o_orderkey == li.l_orderkey)
-            raw_plan = raw._jdf.queryExecution().executedPlan().toString()
-            assert "Exchange" in raw_plan
-            assert j.count() == raw.count() > 0
-        finally:
-            for k, v in old.items():
-                if v is not None:
-                    spark.conf.set(k, v)
-    finally:
-        spark.sql("DROP TABLE IF EXISTS t_orders_b")
-        spark.sql("DROP TABLE IF EXISTS t_lineitem_b")
-
-
-# ---------------------------------------------------------------------
-# Streaming SCD2 maintenance
-# ---------------------------------------------------------------------
-
-
-def _order_stream(spark, drop):
-    return (
-        spark.readStream.schema(
-            "o_orderkey long, o_custkey long, o_orderstatus string,"
-            " o_totalprice double, o_orderdate timestamp,"
-            " o_orderpriority string"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(drop))
-    )
-
-
-def test_scd2_live_stream_equals_batch_closed_intervals(
-    spark, sf_dir, tmp_path
-):
-    """Real orders drained in two micro-batches: the appended closed
-    intervals equal the batch SCD2 history's closed intervals whose
-    valid_to the final watermark passed (the transitions-stream pin
-    applied to run collapse)."""
-    from clinvar_pipeline_spark.queries import _t
-    from clinvar_pipeline_spark.queries_warehouse import scd2_frame
-    from clinvar_pipeline_spark.streaming.scd2 import scd2_live_stream
-
-    orders = _t(spark, sf_dir, "orders")
-    drop = tmp_path / "orders"
-    orders.repartition(2).write.parquet(str(drop))
-
-    out = (
-        scd2_live_stream(_order_stream(spark, drop))
-        .writeStream.format("parquet")
-        .option("path", str(tmp_path / "closed"))
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    out.awaitTermination(180)
-
-    max_us = orders.agg(F.max(F.unix_micros("o_orderdate"))).first()[0]
-    wm_us = (max_us // 1000 - 10_000) * 1000
-    exp = {
-        (
-            r["custkey"],
-            r["version"],
-            r["priority"],
-            r["valid_from"],
-            r["valid_to"],
-            r["n_orders"],
-        )
-        for r in scd2_frame(orders)
-        .filter(
-            F.col("valid_to").isNotNull()
-            & (F.unix_micros("valid_to") <= wm_us)
-        )
-        .select(
-            "custkey",
-            "version",
-            "priority",
-            F.unix_micros("valid_from").alias("valid_from"),
-            F.unix_micros("valid_to").alias("valid_to"),
-            "n_orders",
-        )
-        .collect()
-    }
-    got = {
-        tuple(r)
-        for r in spark.read.parquet(str(tmp_path / "closed"))
-        .select(
-            "custkey", "version", "priority",
-            "valid_from_us", "valid_to_us", "n_orders",
-        )
-        .collect()
-    }
-    assert got == exp and len(got) > 100
-
-
-def test_scd2_live_stream_late_row_splits_run(spark, tmp_path):
-    """A late-but-in-horizon arrival lands BETWEEN two already-seen
-    rows and must SPLIT the run it falls inside — the watermark gate
-    is what makes that correct rather than racy."""
-    import datetime as dt
-
-    from clinvar_pipeline_spark.streaming.scd2 import scd2_live_stream
-
-    def t(s):
-        return dt.datetime(2024, 1, 1) + dt.timedelta(seconds=s)
-
-    schema = (
-        "o_orderkey long, o_custkey long, o_orderstatus string,"
-        " o_totalprice double, o_orderdate timestamp,"
-        " o_orderpriority string"
-    )
-    b1 = [(1, 7, "O", 0.0, t(100), "LOW"), (3, 7, "O", 0.0, t(205), "LOW")]
-    # ok=2 arrives a batch late but inside the 10 s horizon (batch-1
-    # watermark is 205-10=195 < 200); ok=4 only advances the clock
-    b2 = [(2, 7, "O", 0.0, t(200), "HIGH"), (4, 7, "O", 0.0, t(400), "XX")]
-    drop = tmp_path / "orders"
-    for b in (b1, b2):
-        spark.createDataFrame(b, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(str(drop))
-
-    out = (
-        scd2_live_stream(_order_stream(spark, drop))
-        .writeStream.format("parquet")
-        .option("path", str(tmp_path / "closed"))
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    out.awaitTermination(120)
-    got = sorted(
-        (r["version"], r["priority"], r["valid_from_us"], r["valid_to_us"],
-         r["n_orders"])
-        for r in spark.read.parquet(str(tmp_path / "closed")).collect()
-    )
-
-    def us(s):
-        return int(dt.datetime(2024, 1, 1).timestamp() * 1e6) + s * 1_000_000
-
-    # the late HIGH row split LOW's run: [100,200) LOW, [200,205) HIGH;
-    # the reopened LOW run closes at 400 only if the watermark passed
-    # 400 — it did not (max ts 400, delay 10 s), so exactly two closed
-    assert got == [
-        (1, "LOW", us(100), us(200), 1),
-        (2, "HIGH", us(200), us(205), 1),
-    ]
-
-
-# ---------------------------------------------------------------------
 # Property tests (hypothesis)
 # ---------------------------------------------------------------------
 
@@ -529,82 +350,3 @@ def test_scd2_frame_matches_pure_python_run_collapse(spark, feed):
                 (ck, v, attr, vf, vt, cnt, 1 if vt is None else 0)
             )
     assert got == sorted(exp)
-
-
-def test_scd2_live_stream_recovers_across_runs(spark, tmp_path):
-    """Cross-RUN state-store recovery: run 1 drains batch 1 (run
-    state left open in the checkpoint), run 2 on the SAME checkpoint
-    drains batch 2 — the union of appended closed intervals equals a
-    one-shot drain over both batches."""
-    import datetime as dt
-
-    from clinvar_pipeline_spark.streaming.scd2 import scd2_live_stream
-
-    def t(s):
-        return dt.datetime(2024, 2, 1) + dt.timedelta(seconds=s)
-
-    schema = (
-        "o_orderkey long, o_custkey long, o_orderstatus string,"
-        " o_totalprice double, o_orderdate timestamp,"
-        " o_orderpriority string"
-    )
-    b1 = [
-        (1, 7, "O", 0.0, t(0), "LOW"),
-        (2, 7, "O", 0.0, t(100), "HIGH"),   # closes LOW once finalized
-        (3, 7, "O", 0.0, t(200), "HIGH"),
-    ]
-    b2 = [
-        (4, 7, "O", 0.0, t(300), "LOW"),    # closes the HIGH run
-        (5, 7, "O", 0.0, t(500), "LOW"),    # advances the watermark
-    ]
-    drop = tmp_path / "orders"
-    ckpt = str(tmp_path / "ckpt")
-    out = str(tmp_path / "closed")
-
-    spark.createDataFrame(b1, schema).coalesce(1).write.mode(
-        "append"
-    ).parquet(str(drop))
-    q = (
-        scd2_live_stream(_order_stream(spark, drop))
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    after_run1 = {
-        tuple(r) for r in spark.read.parquet(out).collect()
-    }
-
-    spark.createDataFrame(b2, schema).coalesce(1).write.mode(
-        "append"
-    ).parquet(str(drop))
-    q2 = (
-        scd2_live_stream(_order_stream(spark, drop))
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q2.awaitTermination(120)
-    got = sorted(
-        (r["version"], r["priority"], r["valid_from_us"], r["valid_to_us"],
-         r["n_orders"])
-        for r in spark.read.parquet(out).collect()
-    )
-
-    def us(s):
-        return int(dt.datetime(2024, 2, 1).timestamp() * 1e6) + s * 1_000_000
-
-    # run 2 closed the LOW run run 1 left open in its checkpointed
-    # state (v1) AND the HIGH run (v2) — both finalized by b2's
-    # watermark (500 - 10 s passes 300); v3 LOW stays open/pending
-    assert got == [
-        (1, "LOW", us(0), us(100), 1),
-        (2, "HIGH", us(100), us(300), 2),
-    ]
-    assert after_run1 <= set(
-        tuple(r) for r in spark.read.parquet(out).collect()
-    )

@@ -62,6 +62,8 @@ def main():
     import __spark_entry__ as entry_mod
     from pyspark.sql import SparkSession
 
+    from clinvar_pipeline_spark.caching import release_cached
+
     # Deliberately a VANILLA session (not session.py's get_spark): the
     # driver's harness builds its own plain SparkSession, so any conf a
     # query needs must be set by the query itself (round-1 lesson — 13
@@ -92,6 +94,10 @@ def main():
             print(f"FAIL  {name}: spark error: {e}")
             failures.append(name)
             continue
+        finally:
+            # a frame one query persisted must not be substituted into
+            # a later query's plan: each query is judged on its own
+            release_cached()
         spark_s = time.time() - t0
         if name not in oracles:
             print(f"rows  {name}: {len(srows)} rows (rows-only, no oracle) [{spark_s:.1f}s]")
